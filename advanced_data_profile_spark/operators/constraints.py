@@ -170,13 +170,23 @@ def evaluate(
     checks: list[Check],
     part_col: str | None = "part_id",
     sample_violations: int = 20,
+    cached: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run all checks; return (results, violations).
 
     results: one row per (partition, constraint) with pass/fail.
     violations: up to sample_violations rows per (partition, constraint)
     for row-level checks, ALL violating keys for unique/referential.
+    Both read small persisted intermediates; when ``cached`` is a list,
+    they are appended to it so the caller can unpersist them once it
+    has consumed the results.
     """
+
+    def _persist(d: DataFrame) -> DataFrame:
+        if cached is not None:
+            cached.append(d)
+        return d.persist()
+
     keys = [part_col] if part_col else []
     part_str = (F.col(part_col).cast("string") if part_col else F.lit("__all__"))
 
@@ -206,7 +216,7 @@ def evaluate(
         totals = (df.groupBy(*keys) if keys else df).agg(
             F.count(F.lit(1)).alias("__total")
         )
-        totals = totals.persist()
+        totals = _persist(totals)
 
     # --- uniqueness: two-stage aggregation (implicit map-side salt) ---
     # stage 1 is Spark's OWN partial hash aggregation: the map-side
@@ -246,17 +256,16 @@ def evaluate(
             # NULL-SAFE join: groupBy treats NULL as a key group, so a
             # duplicated NULL key is a violation too — a plain equi-join
             # would silently drop it
-            dup_keys = per_key_part.join(
+            dup_keys = _persist(per_key_part.join(
                 dup_global, F.col("__key").eqNullSafe(F.col("__gkey"))
-            ).drop("__gkey").persist()
+            ).drop("__gkey"))
             viol = dup_keys.groupBy(*keys).agg(
                 F.sum("part_cnt").alias("n_violations")
             )
         else:
-            dup_keys = (
+            dup_keys = _persist(
                 per_key_part.where(F.col("part_cnt") > 1)
                 .withColumn("cnt", F.col("part_cnt"))
-                .persist()
             )
             viol = dup_keys.agg(F.sum("part_cnt").alias("n_violations"))
         res = (
@@ -291,9 +300,9 @@ def evaluate(
             F.col("__key") == F.col("__ref_key"),
             "left_anti",
         )
-        orph_counts = orphans.groupBy(*keys, "__key").agg(
+        orph_counts = _persist(orphans.groupBy(*keys, "__key").agg(
             F.count(F.lit(1)).alias("cnt")
-        ).persist()
+        ))
         viol = (orph_counts.groupBy(*keys) if keys else orph_counts).agg(
             F.sum("cnt").alias("n_violations")
         )

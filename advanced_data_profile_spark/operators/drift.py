@@ -337,6 +337,20 @@ def drift_verdicts(
     )
 
 
+def categorical_drift_verdicts(
+    scores: DataFrame, psi_threshold: float = 0.25
+) -> DataFrame:
+    """drift_verdicts for `categorical_psi_chi2` scores: one row per
+    (group, column), passing when PSI is within the threshold."""
+    return scores.select(
+        F.col("grp").cast("string").alias("part_id"),
+        F.concat(F.lit("drift_cat_"), F.col("column")).alias("constraint"),
+        F.lit("drift_categorical").alias("kind"),
+        (F.col("psi") <= psi_threshold).alias("passed"),
+        "psi", "chi2", "dof", "n_categories",
+    )
+
+
 def categorical_counts(
     df: DataFrame, columns: list[str], group_by: str
 ) -> DataFrame:

@@ -4,29 +4,55 @@ verify → drift → manifest. The north_rule job.
 One run processes ALL pending partitions in one set of Spark jobs
 (grouped by part_id inside each job — no per-partition driver loop),
 then commits one manifest row per partition. Resume skips partitions
-whose latest manifest status is `done` (broadcast anti-join). Result
-tables are overwritten per-partition (dynamic partition overwrite) so
-re-runs are idempotent.
+whose latest manifest status is `done`. Result tables are overwritten
+per-partition (dynamic partition overwrite) so re-runs are idempotent.
+
+The run is one declared DAG of legs (`_Legs`): each leg is a driver
+thread that starts, in declaration order, once its `after=` legs have
+resolved, and each Spark job it submits carries the leg's name as its
+job description. The decode legs are declared first — decode is the
+critical path and FIFO scheduling lets the metadata legs back-fill the
+cores its wave leaves idle — and every write starts the moment its own
+inputs exist. Legs and their `after=` edges, in declaration order:
+
+  plan                      partition listing + manifest done set
+                            (after id_index_supersede_heal when a
+                            crashed backfill left its marker)
+  decode_plan               row-group task listing for the payload pass
+  decode_verify             after decode_plan: the payload pass, the only
+                            scan reading `bytes`
+  histograms                stored-baseline snapshot, bin edges, counts
+  write_histograms          after histograms
+  drift_results             after histograms: KS/PSI verdicts
+  category_counts, write_category_counts, drift_results_categorical
+                            the same three legs for categorical drift
+  profile_and_counts        profile + row-wise constraint counts FUSED
+                            into one wide aggregation (exact mode:
+                            separate `profile` and `constraint_counts`)
+  profiles                  after profile_and_counts (melt, no scan)
+  rowwise_results           after profile_and_counts (melt, no scan)
+  unique_referential        uniqueness (two-stage agg, global within the
+                            run) + referential anti-join
+  unique_violations         after unique_referential
+  violations                row-wise violation samples (pushdown)
+  write_row_sample          no inputs
+  write_column_profiles     after profiles
+  write_profile_sketches    after profile_and_counts
+  write_violations          after violations, unique_violations
+  write_constraint_results  after rowwise_results, unique_referential
+  write_verdicts            after write_constraint_results,
+                            decode_verify (append to the same table)
+  id_index_append           after every leg above
+  id_index_supersede        after id_index_append (backfills only)
+  manifest                  after every leg above: the commit point
+  global_uniqueness         after manifest, when cfg.global_unique
 
 Scan economy per run (any number of partitions/columns, approx mode):
-  1 scan  — metadata profile + row-wise constraint counts, FUSED into
-            one wide aggregation (both are aggs over the same pruned
-            metadata columns — fusing removes a whole scan + job)
-  1 scan  — uniqueness (two-stage agg via map-side partial combine,
-    global-within-run with
-            per-partition attribution) + referential anti-join
-  1 scan  — payload validation (the only scan that reads `bytes`)
-  1 scan  — drift histogram (bin edges pinned by the STORED baseline
-            histogram on resume; on fresh runs a dedicated tiny
-            min/max aggregation — one extra metadata-column scan —
-            supplies bit-identical edges WITHOUT making the drift leg
-            wait for the profile, so both drift legs run concurrently
-            with every other leg from the start of the run)
-plus a violation-sample scan (filter-pushdown, violating rows only).
-Every scan above is an INDEPENDENT concurrent driver-thread job (the
-decode pass submitted first — it is the critical path and FIFO
-scheduling lets the metadata legs back-fill its idle cores), and each
-result write launches the moment its own input legs resolve.
+one metadata scan for profile_and_counts, one for unique_referential,
+one bytes scan for decode_verify, one for each drift family's counts
+(plus, on fresh runs, a tiny min/max agg that pins bin edges without
+waiting for the profile) and a violation-sample scan that reads only
+violating rows.
 
 Uniqueness scope note: within one run the check is global across the
 partitions being processed (cross-partition duplicates are detected and
@@ -39,7 +65,7 @@ kind='unique_global' rows to constraint_results_global.
 
 from __future__ import annotations
 
-import os
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -47,7 +73,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from advanced_data_profile_spark.operators import constraints as C
-from advanced_data_profile_spark.operators.drift import drift_verdicts, histogram, ks_psi
+from advanced_data_profile_spark.operators.drift import (
+    categorical_counts,
+    categorical_drift_verdicts,
+    categorical_psi_chi2,
+    drift_verdicts,
+    histogram,
+    ks_psi,
+    shared_bins,
+)
 from advanced_data_profile_spark.operators.image_verify import (
     validate_payloads,
     validation_verdicts,
@@ -67,6 +101,8 @@ from advanced_data_profile_spark.session import (
     hadoop_touch,
 )
 from advanced_data_profile_spark.sources.images import phash_reference, read_images
+
+SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 
 
 @dataclass
@@ -119,6 +155,96 @@ class PipelineConfig:
     persist_sketches: bool = True
 
 
+class _Legs:
+    """The pipeline's leg runner — the only place this module starts
+    threads.
+
+    ``leg(name, fn, after=[...])`` starts one driver thread per leg, in
+    declaration order. The thread waits for its ``after`` legs, then
+    calls ``fn`` with their results; with ``persist=True`` the returned
+    DataFrame is persisted and materialized (small result relations
+    are, before their writes: every .write otherwise re-computes its
+    full lineage). The leg's Spark jobs carry its name as their job
+    description, and ``times[name]`` is its [start, end] in seconds
+    from the runner's creation. Once any leg has failed, legs that have
+    not started yet are skipped.
+
+    Used as a context manager. Exit joins every leg (a caller that
+    catches the error and retries must never race writer threads of
+    the failed run), unpersists everything persisted through it,
+    restores the session's split-size conf, and raises the first error
+    with every later one attached as a note."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark, self.t0 = spark, time.time()
+        self.split = spark.conf.get(SPLIT_CONF)
+        self.times: dict[str, list[float]] = {}
+        self.threads: dict[str, threading.Thread] = {}
+        self.results: dict = {}
+        self.errors: list[tuple[str, BaseException]] = []
+        self.persisted: list[DataFrame] = []
+
+    def persist(self, d: DataFrame, materialize: bool = True) -> DataFrame:
+        self.persisted.append(d.persist())
+        if materialize:
+            d.count()
+        return d
+
+    def leg(self, name: str, fn, after: tuple | list = (), persist: bool = False):
+        deps = [self.threads[a] for a in after]
+        sc = self.spark.sparkContext
+
+        def run():
+            for t in deps:
+                t.join()
+            if self.errors or not all(a in self.results for a in after):
+                return
+            sc.setJobDescription(name)
+            start = time.time() - self.t0
+            try:
+                out = fn(*(self.results[a] for a in after))
+                self.results[name] = self.persist(out) if persist else out
+            except BaseException as e:
+                self.errors.append((name, e))
+            finally:
+                self.times[name] = [start, time.time() - self.t0]
+                sc.setJobDescription(None)
+
+        self.threads[name] = threading.Thread(target=run, name=f"leg:{name}")
+        self.threads[name].start()
+
+    def result(self, name: str | None = None):
+        """Joins leg ``name`` (every leg when None), raises the first
+        error any leg has raised, and returns the leg's result."""
+        for t in [self.threads[name]] if name else list(self.threads.values()):
+            t.join()
+        if self.errors:
+            raise self.errors[0][1]
+        return self.results.get(name)
+
+    def timeline(self) -> dict[str, list[float]]:
+        return {n: [round(s, 3), round(e, 3)] for n, (s, e) in self.times.items()}
+
+    def __enter__(self) -> _Legs:
+        return self
+
+    def __exit__(self, etype, exc, tb) -> None:
+        for t in self.threads.values():
+            t.join()
+        for d in self.persisted:
+            try:
+                d.unpersist()
+            except Exception as e:
+                self.errors.append(("unpersist", e))
+        self.spark.conf.set(SPLIT_CONF, self.split)
+        first = exc if exc is not None else next((e for _, e in self.errors), None)
+        for name, e in self.errors:
+            if e is not first:
+                first.add_note(f"later error in leg {name!r}: {e!r}")
+        if exc is None and first is not None:
+            raise first
+
+
 def _list_hive_part_ids(spark: SparkSession, path: str) -> list[int] | None:
     """part_id values of a hive-partitioned parquet dir via one
     FileSystem listing (no Spark job, no scan). Returns None when the
@@ -155,6 +281,58 @@ def image_checks(images_ref: DataFrame, cfg: PipelineConfig) -> list[C.Check]:
     ]
 
 
+def _payload_verdicts(
+    spark: SparkSession, images_path: str, pending_ids: list, cfg: PipelineConfig
+) -> DataFrame:
+    """The decode pass's verdict rows over the pending partitions
+    (lazy), through the scan cfg.decode_path selects."""
+    validated = None
+    if cfg.decode_path in ("auto", "pyarrow-files"):
+        from advanced_data_profile_spark.operators.image_verify import (
+            decode_file_tasks,
+            validate_payloads_files,
+        )
+
+        # no first-partition existence gate: decode_file_tasks itself
+        # skips pending partitions without a hive dir, and a flat
+        # non-hive layout simply yields zero tasks
+        tasks = []
+        if cfg.table_format == "parquet":
+            tasks = decode_file_tasks(spark, images_path, pending_ids)
+        enough = len(tasks) >= spark.sparkContext.defaultParallelism
+        if tasks and (cfg.decode_path == "pyarrow-files" or enough):
+            validated = validate_payloads_files(
+                spark, images_path, pending_ids, tasks=tasks
+            )
+    if validated is None and cfg.decode_path == "pyarrow-files":
+        # the user FORCED the pyarrow leg; silently running the JVM
+        # scan instead would ignore an explicit choice (and its
+        # measured perf expectations). "auto" keeps its fallback.
+        raise ValueError(
+            "decode_path='pyarrow-files' was forced but the "
+            f"pyarrow decode leg cannot serve {images_path!r}: "
+            "non-parquet table format, no part_id=K hive "
+            "layout, or no data files under the pending "
+            "partitions. Use decode_path='auto' to allow "
+            "the JVM scan fallback."
+        )
+    if validated is None:
+        # JVM scan leg in a child session (shared context, independent
+        # SQLConf). 128m splits: the old 16m "balanced small tasks"
+        # sizing was A/B-measured 2x slower at scale (13.5s vs 8.1s
+        # @128m / 6.1s @256m on the 512k fixture) — per-task
+        # scheduling + Arrow-stream setup dominates below ~100m; 128m
+        # keeps a small-fixture wave balanced while near the
+        # large-split plateau.
+        s2 = spark.newSession()
+        s2.conf.set(SPLIT_CONF, "128m")
+        df2 = read_images(s2, images_path, fmt=cfg.table_format).where(
+            F.col("part_id").isin(pending_ids)
+        )
+        validated = validate_payloads(df2)
+    return validation_verdicts(validated)
+
+
 def run_pipeline(
     spark: SparkSession,
     images_path: str,
@@ -163,122 +341,92 @@ def run_pipeline(
     resume: bool = True,
     cfg: PipelineConfig | None = None,
 ) -> dict:
-    """Returns a run summary dict (rows processed, timings, verdicts).
+    """Returns a run summary dict (rows processed, timings, the per-leg
+    timeline under "legs", verdicts).
 
-    Exception hygiene: the run launches background driver threads
-    (decode, drift legs, chained writes). If any leg raises, this
-    wrapper JOINS every outstanding thread before propagating — a
-    caller that catches the error and retries must never race zombie
-    writer threads from the failed run against the retry's
-    reads/overwrites of the same output paths — then releases every
-    persisted relation and restores the session's split-size conf.
-    Secondary errors from the join are suppressed (the primary
-    propagates; they remain reachable via __context__ where raised)."""
-    state: dict = {"persisted": [], "futs": [], "orig_split": None}
-    try:
+    Every phase runs as a leg of one `_Legs` runner, so when any leg
+    raises, every leg is joined, every relation the run persisted is
+    released and the session's split-size conf is restored before the
+    first error propagates; later errors are attached to it as notes."""
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with _Legs(spark) as legs:
         return _run_pipeline(
-            spark, images_path, output_dir, phash_ref, resume, cfg, state
+            spark, legs, images_path, output_dir, phash_ref, resume,
+            cfg or PipelineConfig(),
         )
-    finally:
-        for f in state["futs"]:
-            try:
-                f.result()
-            except Exception:
-                pass  # secondary; the primary error propagates
-        for d in state["persisted"]:
-            try:
-                d.unpersist()
-            except Exception:
-                pass
-        if state["orig_split"] is not None:
-            spark.conf.set(
-                "spark.sql.files.maxPartitionBytes", state["orig_split"]
-            )
 
 
 def _run_pipeline(
     spark: SparkSession,
+    legs: _Legs,
     images_path: str,
     output_dir: str,
     phash_ref: DataFrame | None,
     resume: bool,
-    cfg: PipelineConfig | None,
-    state: dict,
+    cfg: PipelineConfig,
 ) -> dict:
-    cfg = cfg or PipelineConfig()
-    t0 = time.time()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    state["orig_split"] = spark.conf.get("spark.sql.files.maxPartitionBytes")
-
-    # small result DataFrames are persisted (eagerly) before their
-    # parquet writes: every .write otherwise re-computes its full
-    # lineage — measured ~2x the whole run at bench scale
-    persisted = state["persisted"]
-    bg_futs = state["futs"]
-
-    def _materialize(d):
-        d = d.persist()
-        d.count()
-        persisted.append(d)
-        return d
-
-    timings: dict[str, float] = {}
-    t = time.time()
     images = read_images(spark, images_path, fmt=cfg.table_format)
     manifest = Manifest(spark, f"{output_dir}/manifest")
     run_id = new_run_id()
+    supersede_marker = f"{output_dir}/id_index_compact_pending"
 
-    # heal a crashed supersede-compaction FIRST: if a prior backfill
-    # run crashed between its index append and its compaction, the
-    # marker survives while the old runs' 'done' manifest rows make
-    # every partition look finished — a resume retry would early-return
-    # below and the stale index rows would never be superseded.
-    if cfg.id_index_table and hadoop_path_exists(
-        spark, f"{output_dir}/id_index_compact_pending"
-    ):
+    def _supersede():
         from advanced_data_profile_spark.plans.id_index import index_compact
 
-        ts_ = time.time()
         index_compact(
             spark,
             cfg.id_index_table,
             staging_dir=f"{output_dir}/id_index_compact_staging",
             supersede_parts=True,
         )
-        hadoop_remove(spark, f"{output_dir}/id_index_compact_pending")
-        timings["id_index_supersede_heal"] = time.time() - ts_
+        hadoop_remove(spark, supersede_marker)
 
-    # partition discovery via a filesystem listing of the hive layout:
-    # Spark's metadata-only-query rule is off by default, so
-    # select(part_id).distinct() SCANS the table to list partitions —
-    # ~0.6s of fixed per-run cost at the bench fixture, and a full
-    # listing-vs-scan inversion at 100 TB. Non-hive/iceberg sources
-    # fall back to the scan.
-    pids = (
-        _list_hive_part_ids(spark, images_path)
-        if cfg.table_format == "parquet"
-        else None
-    )
-    if pids is not None:
-        # both sides are driver-sized (partition ids + done set), so
-        # resume resolves in Python: no broadcast anti-join job, and a
-        # fresh output dir costs ZERO Spark jobs in the plan phase
-        # (manifest part_ids are strings; compare canonically)
+    # heal a crashed supersede-compaction FIRST: if a prior backfill
+    # run crashed between its index append and its compaction, the
+    # marker survives while the old runs' 'done' manifest rows make
+    # every partition look finished — a resume retry would early-return
+    # below and the stale index rows would never be superseded.
+    if cfg.id_index_table and hadoop_path_exists(spark, supersede_marker):
+        legs.leg("id_index_supersede_heal", _supersede)
+        legs.result("id_index_supersede_heal")
+
+    def _plan():
+        # partition discovery via a filesystem listing of the hive
+        # layout: Spark's metadata-only-query rule is off by default,
+        # so select(part_id).distinct() SCANS the table. Both sides are
+        # driver-sized (partition ids + done set), so resume resolves
+        # in Python and a fresh output dir costs ZERO Spark jobs here
+        # (manifest part_ids are strings; compare canonically).
+        # Non-hive/iceberg sources fall back to the scan.
+        pids = (
+            _list_hive_part_ids(spark, images_path)
+            if cfg.table_format == "parquet" else None
+        )
+        if pids is None:
+            all_parts = images.select("part_id").distinct()
+            pending = manifest.pending(all_parts) if resume else all_parts
+            return [r.part_id for r in pending.collect()]
+        done = set()
         if resume and manifest.exists():
             done = {r.part_id for r in manifest.done_parts().collect()}
-        else:
-            done = set()
-        pending_ids = [p for p in pids if str(p) not in done]
-    else:
-        all_parts = images.select("part_id").distinct()
-        pending = manifest.pending(all_parts) if resume else all_parts
-        pending_ids = [r.part_id for r in pending.collect()]
-    timings["plan"] = time.time() - t
+        return [p for p in pids if str(p) not in done]
+
+    legs.leg("plan", _plan)
+    pending_ids = legs.result("plan")
     if not pending_ids:
         return {
             "run_id": run_id, "partitions": 0, "rows": 0,
-            "elapsed_sec": time.time() - t0, "skipped": "all partitions done",
+            "elapsed_sec": time.time() - legs.t0, "skipped": "all partitions done",
+            "legs": legs.timeline(),
         }
+    if cfg.validate_images:
+        # the decode pass is the critical path: its legs start first,
+        # before the metadata plans are even built, so its footer-read
+        # and decode jobs are submitted ahead of the metadata jobs and
+        # FIFO scheduling lets those back-fill the cores it leaves idle.
+        # Planning is its own leg, so decode_verify times the job alone.
+        legs.leg("decode_plan", lambda: _payload_verdicts(spark, images_path, pending_ids, cfg))
+        legs.leg("decode_verify", lambda v: v, after=["decode_plan"], persist=True)
     # partition pruning: isin on the partition column prunes at the scan
     df = images.where(F.col("part_id").isin(pending_ids))
     meta = df.withColumn("caption_len", F.length("caption"))
@@ -289,24 +437,38 @@ def _run_pipeline(
     )
     rowwise = [c for c in checks if c.kind in ("not_null", "domain")]
     others = [c for c in checks if c.kind in ("unique", "referential")]
+    vio_row = C.rowwise_violation_samples(
+        meta, rowwise, "part_id", cfg.sample_violations
+    )
+    res_other, vio_other = C.evaluate(
+        df, others, part_col="part_id", sample_violations=cfg.sample_violations,
+        cached=legs.persisted,
+    )
+    # metadata-only scans get large splits (split accounting counts the
+    # pruned-out bytes column, so the default would over-parallelize
+    # scans that read ~2% of each file); the decode pass keeps its own
+    # split sizing
+    spark.conf.set(SPLIT_CONF, "256m")
+    n_out = min(spark.sparkContext.defaultParallelism, max(1, len(pending_ids)))
 
-    # The profile/constraint-count scan, the uniqueness/referential
-    # checks and the payload-decode pass have no dependencies on each
-    # other, so their materializations are submitted as CONCURRENT
-    # Spark jobs from driver threads (standard multi-job driver
-    # practice; the scheduler interleaves tasks). Split sizing:
-    # metadata-only scans get large splits via the parent session
-    # config (split accounting counts the pruned-out bytes column, so
-    # the default would over-parallelize scans that read ~2% of each
-    # file); the decode pass keeps small splits in a child session for
-    # balanced bytes-reading tasks.
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "256m")
+    def _write(d: DataFrame, table: str, mode: str = "overwrite") -> None:
+        # every part_id-partitioned result write: hash-repartition by
+        # the partition column so the write TASKS cover the dynamic
+        # partitions in parallel while each partition dir still gets
+        # exactly ONE data file (a partition value lands in exactly one
+        # task). coalesce(1) would serialize every partition's parquet
+        # writer through a single task (0.65s -> 0.28s per write job at
+        # the 128k steady fixture, same file count).
+        d.repartition(n_out, "part_id").write.mode(mode).partitionBy(
+            "part_id"
+        ).parquet(f"{output_dir}/{table}")
 
     if cfg.approx:
         # FUSED wide agg: every profile stat AND every row-wise
-        # constraint count in one scan/job.
+        # constraint count in one scan/job; the melts reuse its
+        # persisted rows (one per partition) — no extra scan. Built
+        # before the metadata legs start: analysing this wide plan
+        # while they run would hold their jobs back (~1 s at 4 cores).
         dtypes = {f.name: f.dataType for f in meta_nb.schema.fields}
         prof_cols = [
             f.name for f in meta_nb.schema.fields
@@ -321,598 +483,291 @@ def _run_pipeline(
             *C.rowwise_count_exprs(rowwise),
         )
 
-        def _profiles_from(w: DataFrame) -> DataFrame:
-            melted = w.select(
-                "part_id",
-                F.explode(
-                    F.array(*[F.col(f"__p_{c}") for c in prof_cols])
-                ).alias("s"),
-            )
-            return melted.select(
-                "part_id", *[F.col(f"s.{f}").alias(f) for f, _ in PROFILE_FIELDS]
-            )
-
-        def _sketches_from(w: DataFrame) -> DataFrame:
-            melted = w.select(
-                "part_id",
-                F.explode(
-                    F.array(*[F.col(f"__sk_{c}") for c in prof_cols])
-                ).alias("s"),
-            )
-            return melted.select(
-                "part_id", *[F.col(f"s.{f}").alias(f) for f, _ in SKETCH_FIELDS]
-            )
-    else:
-        wide = None
-        profiles_df = profile(meta_nb, group_by="part_id", approx=False)
-
-    vio_row = C.rowwise_violation_samples(
-        meta, rowwise, "part_id", cfg.sample_violations
-    )
-    res_other, vio_other = C.evaluate(
-        df, others, part_col="part_id", sample_violations=cfg.sample_violations
-    )
-
-    t = time.time()
-    stage_t: dict[str, float] = {}
-
-    def _mat(name, d):
-        s = time.time()
-        out = _materialize(d)
-        stage_t[name] = round(time.time() - s, 3)
-        return out
-
-    def _pwrite(d: DataFrame) -> DataFrame:
-        # layout stage for every part_id-partitioned result write:
-        # hash-repartition by the partition column so the write TASKS
-        # cover the dynamic partitions in parallel while each
-        # partition dir still gets exactly ONE data file (a partition
-        # value lands in exactly one task). The previous coalesce(1)
-        # kept the one-file-per-partition layout but serialized all
-        # n_parts parquet writer open/write/close cycles through a
-        # single task — A/B at the 128k steady fixture: 0.65s ->
-        # 0.28s per write job, same file count. Unkeyed plans
-        # (shuffle_partitions-wide) would instead scatter each
-        # partition's rows over many tasks = many tiny files.
-        n = min(
-            spark.sparkContext.defaultParallelism,
-            max(1, len(pending_ids)),
-        )
-        return d.repartition(n, "part_id")
+        def _melt(w: DataFrame, prefix: str, fields) -> DataFrame:
+            s = w.select("part_id", F.explode(
+                F.array(*[F.col(f"{prefix}{c}") for c in prof_cols])
+            ).alias("s"))
+            return s.select("part_id", *[F.col(f"s.{f}").alias(f) for f, _ in fields])
 
     # unscorable drift cells are REPORTED, not silently dropped and not
     # disguised as fake 0.0 timing entries: this dict lands in the
     # manifest metrics next to (never inside) the timings
     drift_summary: dict = {}
+    base_pending = str(cfg.baseline_part) in {str(p) for p in pending_ids}
+    expect_grps = sorted(
+        str(p) for p in pending_ids if str(p) != str(cfg.baseline_part)
+    )
 
-    def _drift():
-        cols = [c for c in cfg.drift_columns if c in meta.columns]
-        hist_path = f"{output_dir}/histograms"
-        stored_base = None
-        bounds = {}
-        if str(cfg.baseline_part) not in [str(p) for p in pending_ids]:
+    def _drift(name, table, cols, count, score, verdicts, keys, prefix):
+        """One drift family as three legs, independent of every
+        metadata leg so they run with the compute wave: ``table``
+        snapshots the stored baseline and persists this run's counts,
+        ``write_<table>`` stores them per partition, and ``name``
+        scores them against the baseline and writes the verdicts."""
+        cols = [c for c in cols if c in meta.columns]
+        if not cols:
+            return []
+        path = f"{output_dir}/{table}"
+
+        def _counts():
             # resumed run whose baseline partition is already done: the
-            # stored baseline histogram is the comparison target, and
-            # its bin edges PIN the grid (bins from different edges are
-            # not comparable). FileSystem-API existence probe instead of
-            # os.path.exists (output may live on hdfs:// or s3a://) or a
-            # read-and-catch (a real read error must propagate, not be
-            # mistaken for 'first run').
-            stored_rows, stored_schema = [], None
-            if hadoop_path_exists(spark, hist_path):
+            # stored baseline is the comparison target, SNAPSHOT
+            # driver-side before write_<table> dynamic-overwrites the
+            # files a lazy plan would re-read (it is tiny). Existence is
+            # a FileSystem-API probe (output may live on hdfs:// or
+            # s3a://), not a read-and-catch: a real read error must
+            # propagate, not be mistaken for 'first run'.
+            rows, schema = [], None
+            if not base_pending and hadoop_path_exists(spark, path):
                 stored = (
-                    spark.read.parquet(hist_path)
+                    spark.read.parquet(path)
                     .where(F.col("grp") == cfg.baseline_part)
-                    .select("grp", "column", "bin", "lo", "hi", "cnt")
+                    .select("grp", "column", *keys, "cnt")
                 )
-                stored_schema = stored.schema
-                stored_rows = stored.collect()
-            if stored_rows:
-                # SNAPSHOT driver-side before the dynamic overwrite below
-                # rewrites the same files a lazy plan would re-read (the
-                # baseline histogram is n_bins x n_cols tiny rows)
-                stored_base = spark.createDataFrame(stored_rows, stored_schema)
-                bounds = {r.column: (r.lo, r.hi) for r in stored_rows}
+                rows, schema = stored.collect(), stored.schema
+            base = spark.createDataFrame(rows, schema) if rows else None
+            return base, legs.persist(count(cols, rows))
+
+        def _score(counts):
+            base, cur = counts
+            if base is None and not base_pending:
+                # no baseline anywhere (e.g. a prior run recorded
+                # partitions done without writing counts): they are
+                # still stored for future runs, but null-scored
+                # "failed" rows would be a silent lie
+                drift_summary[f"{prefix}skipped_no_baseline"] = sorted(cols)
+                return
+            if base is not None:
+                cur = cur.unionByName(base, allowMissingColumns=True)
+            scores = legs.persist(score(cur, cfg.baseline_part), materialize=False)
+            # cells the scorer dropped (a column empty in the baseline
+            # or in one group) get explicit per-cell skipped markers —
+            # never a NULL-coerced FAIL verdict and never a silent drop
+            scored = {
+                (str(r.grp), r.column)
+                for r in scores.select("grp", "column").collect()
+            }
+            skipped = [
+                {"part_id": g, "column": c}
+                for g in expect_grps for c in cols if (g, c) not in scored
+            ]
+            if skipped:
+                drift_summary[f"{prefix}skipped"] = skipped
+            _write(verdicts(scores), name)
+
+        legs.leg(table, _counts)
+        legs.leg(
+            f"write_{table}",
+            lambda c: _write(c[1].withColumn("part_id", F.col("grp")), table),
+            after=[table],
+        )
+        legs.leg(name, _score, after=[table])
+        return [table, f"write_{table}", name]
+
+    def _histogram(cols, stored_rows):
+        # the stored baseline's bin edges PIN the grid (bins from
+        # different edges are not comparable); columns it lacks
+        # (all-NULL there, drift_columns grew, or a fresh run) get
+        # edges from a tiny min/max agg over the pending partitions —
+        # the same F.min/F.max(cast double) the profile computes, so
+        # the drift legs never wait for the profile
+        bounds = {r.column: (r.lo, r.hi) for r in stored_rows}
         missing = [c for c in cols if c not in bounds]
         if missing:
-            # bounds for columns the stored baseline lacks (all-NULL in
-            # the baseline partition, drift_columns grew between runs,
-            # or simply a fresh run) come from a dedicated tiny min/max
-            # aggregation over the pending partitions — the SAME
-            # F.min/F.max(cast double) expressions the profile
-            # computes, so the bin edges are bit-identical to the
-            # pre-r9 profiles-derived ones, but the drift leg no longer
-            # waits for the metadata barrier: both drift legs now run
-            # CONCURRENTLY with the profile/constraint legs and the
-            # decode pass from the start of the run
-            mrow = meta_nb.agg(*[
-                e
-                for c in missing
-                for e in (
-                    F.min(F.col(c).cast("double")).alias(f"__mn_{c}"),
-                    F.max(F.col(c).cast("double")).alias(f"__mx_{c}"),
-                )
-            ]).collect()[0]
-            for c in missing:
-                bounds[c] = (mrow[f"__mn_{c}"], mrow[f"__mx_{c}"])
-        hist = _materialize(histogram(meta, cols, "part_id", bounds))
-        # per-partition dynamic overwrite: resume must never wipe the
-        # stored baseline (or any other partition's) histogram. The
-        # write reads only the persisted hist and nothing below reads
-        # what it writes, so it runs as a concurrent driver job under
-        # the scoring chain instead of gating it.
-        hw_pool = ThreadPoolExecutor(max_workers=1)
-        f_hw = hw_pool.submit(
-            lambda: _pwrite(hist.withColumn("part_id", F.col("grp")))
-            .write.mode("overwrite").partitionBy("part_id").parquet(hist_path)
-        )
-        hw_pool.shutdown(wait=False)
-        score_err = None
-        try:
-            _drift_score(hist, stored_base)
-        except BaseException as e:
-            score_err = e
-        try:
-            f_hw.result()
-        except Exception:
-            # a write failure must not MASK a concurrent scoring
-            # failure (an exception raised while another is in flight
-            # would replace it as the propagated error)
-            if score_err is None:
-                raise
-        if score_err is not None:
-            raise score_err
+            bounds.update(shared_bins(meta_nb, missing))
+        return histogram(meta, cols, "part_id", bounds)
 
-    def _drift_score(hist, stored_base):
-        cols = [c for c in cfg.drift_columns if c in meta.columns]
-        have_baseline = stored_base is not None or str(cfg.baseline_part) in [
-            str(p) for p in pending_ids
-        ]
-        if not have_baseline:
-            # no baseline anywhere (e.g. prior run recorded partitions
-            # done without writing histograms): the histograms above are
-            # still stored for future runs, but there is nothing to
-            # compare against — emitting null-scored "failed" rows would
-            # be a silent lie
-            drift_summary["skipped_no_baseline"] = sorted(cols)
-            return
-        hist_all = (
-            hist.unionByName(stored_base, allowMissingColumns=True)
-            if stored_base is not None else hist
-        )
-        # persisted: BOTH the skipped-cell collect and the verdict
-        # write below read the scores — without the persist the whole
-        # ks_psi window chain re-ran for each (the categorical leg
-        # already persisted; ~0.5s of pure recompute at the 128k
-        # fixture)
-        scores = ks_psi(hist_all, cfg.baseline_part).persist()
-        persisted.append(scores)
-        # cells ks_psi dropped — an EMPTY baseline column (all-NULL in
-        # the baseline partition / drift_columns grew between runs)
-        # drops the whole column; a column empty in just ONE group
-        # drops only that (grp, column) cell. Both get explicit skipped
-        # markers, per cell, mirroring the no-baseline-at-all path —
-        # never a NULL-coerced FAIL verdict and never a silent drop.
-        scored = {
-            (str(r.grp), r.column)
-            for r in scores.select("grp", "column").collect()
-        }
-        expect_grps = sorted(
-            str(p) for p in pending_ids if str(p) != str(cfg.baseline_part)
-        )
-        skipped = [
-            {"part_id": g, "column": c}
-            for g in expect_grps for c in cols if (g, c) not in scored
-        ]
-        if skipped:
-            drift_summary["skipped"] = skipped
-        dv = drift_verdicts(scores, cfg.ks_threshold, cfg.psi_threshold)
-        _pwrite(dv).write.mode("overwrite").partitionBy("part_id").parquet(
-            f"{output_dir}/drift_results"
-        )
-
-    def _categorical_drift():
-        from advanced_data_profile_spark.operators.drift import (
-            categorical_counts,
+    drift_legs = []
+    if cfg.drift:
+        drift_legs = _drift(
+            "drift_results", "histograms", cfg.drift_columns, _histogram,
+            ks_psi,
+            lambda s: drift_verdicts(s, cfg.ks_threshold, cfg.psi_threshold),
+            ("bin", "lo", "hi"), "",
+        ) + _drift(
+            "drift_results_categorical", "category_counts",
+            cfg.categorical_drift_columns,
+            lambda cols, _: categorical_counts(meta, cols, "part_id"),
             categorical_psi_chi2,
+            lambda s: categorical_drift_verdicts(s, cfg.psi_threshold),
+            ("category",), "categorical_",
         )
 
-        cat_cols = [c for c in cfg.categorical_drift_columns if c in meta.columns]
-        if not cat_cols:
-            return
-        cc_path = f"{output_dir}/category_counts"
-        stored_base = None
-        if str(cfg.baseline_part) not in [str(p) for p in pending_ids]:
-            # resumed run: the stored baseline counts are the target
-            # (same snapshot-before-overwrite discipline as histograms)
-            stored_rows, stored_schema = [], None
-            if hadoop_path_exists(spark, cc_path):
-                stored = (
-                    spark.read.parquet(cc_path)
-                    .where(F.col("grp") == cfg.baseline_part)
-                    .select("grp", "column", "category", "cnt")
-                )
-                stored_schema = stored.schema
-                stored_rows = stored.collect()
-            if stored_rows:
-                stored_base = spark.createDataFrame(stored_rows, stored_schema)
-        counts = _materialize(categorical_counts(meta, cat_cols, "part_id"))
-        _pwrite(counts.withColumn("part_id", F.col("grp"))).write.mode(
-            "overwrite"
-        ).partitionBy("part_id").parquet(cc_path)
-        have_baseline = stored_base is not None or str(cfg.baseline_part) in [
-            str(p) for p in pending_ids
-        ]
-        if not have_baseline:
-            drift_summary["categorical_skipped_no_baseline"] = sorted(cat_cols)
-            return
-        all_counts = (
-            counts.unionByName(stored_base) if stored_base is not None else counts
-        )
-        scores = categorical_psi_chi2(all_counts, cfg.baseline_part).persist()
-        # per-cell skipped accounting, same contract as the numeric leg:
-        # cells categorical_psi_chi2 dropped (empty baseline or empty
-        # current side) get explicit markers, never a silent omission
-        scored_cells = {
-            (str(r.grp), r.column)
-            for r in scores.select("grp", "column").collect()
-        }
-        expect_grps = sorted(
-            str(p) for p in pending_ids if str(p) != str(cfg.baseline_part)
-        )
-        cat_skipped = [
-            {"part_id": g, "column": c}
-            for g in expect_grps for c in cat_cols
-            if (g, c) not in scored_cells
-        ]
-        if cat_skipped:
-            drift_summary["categorical_skipped"] = cat_skipped
-        dv = scores.select(
-            F.col("grp").cast("string").alias("part_id"),
-            F.concat(F.lit("drift_cat_"), F.col("column")).alias("constraint"),
-            F.lit("drift_categorical").alias("kind"),
-            (F.col("psi") <= cfg.psi_threshold).alias("passed"),
-            "psi", "chi2", "dof", "n_categories",
-        )
-        _pwrite(dv).write.mode("overwrite").partitionBy("part_id").parquet(
-            f"{output_dir}/drift_results_categorical"
-        )
-        scores.unpersist()
-
-    # The decode pass gets its OWN executor so its future can outlive
-    # the metadata-compute barrier: only the verdict append (inside
-    # _write_results below) needs the decode result, so the decode
-    # TAIL overlaps every metadata write and both drift legs instead
-    # of blocking them. It is submitted FIRST, before the drift and
-    # metadata legs: decode is the run's critical path (the
-    # bandwidth-bound kernel), and FIFO scheduling gives the
-    # first-submitted job's tasks priority — the metadata legs
-    # back-fill cores the decode wave leaves idle, not the reverse.
-    # On a bandwidth-saturated box (the measured 0.4-weak-scaling
-    # kernel ceiling) the decode stage elongates while everything
-    # else scales at ~1.0 — deepening this overlap is exactly what
-    # moves end-to-end weak scaling toward the metadata-side's
-    # efficiency.
-    decode_pool = ThreadPoolExecutor(max_workers=1)
-    decode_end = {"at": None}
-    f_ver = None
-    if cfg.validate_images:
-        def _decode():
-            validated = None
-            if cfg.decode_path in ("auto", "pyarrow-files"):
-                from advanced_data_profile_spark.operators.image_verify import (
-                    decode_file_tasks,
-                    validate_payloads_files,
-                )
-
-                # no first-partition existence gate: decode_file_tasks
-                # itself skips pending partitions without a hive dir,
-                # so a missing FIRST partition no longer vetoes the
-                # pyarrow leg for the rest (and a flat non-hive layout
-                # simply yields zero tasks)
-                tasks = []
-                if cfg.table_format == "parquet":
-                    tasks = decode_file_tasks(
-                        spark, images_path, pending_ids
-                    )
-                enough = len(tasks) >= spark.sparkContext.defaultParallelism
-                if tasks and (cfg.decode_path == "pyarrow-files" or enough):
-                    validated = validate_payloads_files(
-                        spark, images_path, pending_ids, tasks=tasks
-                    )
-            if validated is None and cfg.decode_path == "pyarrow-files":
-                # the user FORCED the pyarrow leg; silently running
-                # the JVM scan instead would ignore an explicit
-                # choice (and its measured perf expectations) —
-                # fail loudly with the reason. "auto" keeps its
-                # documented fallback behavior.
-                raise ValueError(
-                    "decode_path='pyarrow-files' was forced but the "
-                    f"pyarrow decode leg cannot serve {images_path!r}: "
-                    "non-parquet table format, no part_id=K hive "
-                    "layout, or no data files under the pending "
-                    "partitions. Use decode_path='auto' to allow "
-                    "the JVM scan fallback."
-                )
-            if validated is None:
-                # JVM scan leg in a child session (shared context,
-                # independent SQLConf). 128m splits: the old 16m
-                # "balanced small tasks" sizing was A/B-measured
-                # 2x slower at scale (13.5s vs 8.1s @128m / 6.1s
-                # @256m on the 512k fixture) — per-task scheduling
-                # + Arrow-stream setup dominates below ~100m; 128m
-                # keeps a small-fixture wave balanced while near
-                # the large-split plateau.
-                s2 = spark.newSession()
-                s2.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-                df2 = read_images(
-                    s2, images_path, fmt=cfg.table_format
-                ).where(F.col("part_id").isin(pending_ids))
-                validated = validate_payloads(df2)
-            out = _mat(
-                "decode_verify", validation_verdicts(validated)
-            )
-            decode_end["at"] = time.time()
-            return out
-        f_ver = decode_pool.submit(_decode)
-        bg_futs.append(f_ver)
-
-    # both drift legs are INDEPENDENT of every metadata leg (bin
-    # edges come from the stored baseline or the dedicated min/max
-    # agg above, never from the profile result), so they launch WITH
-    # the metadata legs and the decode pass — the whole run is one
-    # wave of concurrent jobs, and the write phase below only ever
-    # waits on them if they outlast writes + decode tail
-    drift_pool = ThreadPoolExecutor(max_workers=2)
-    f_drift = drift_pool.submit(_drift) if cfg.drift else None
-    f_cat = drift_pool.submit(_categorical_drift) if cfg.drift else None
-    drift_pool.shutdown(wait=False)
-    bg_futs.extend(f for f in (f_drift, f_cat) if f is not None)
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        if cfg.approx:
-            def _fused():
-                w = _mat("profile_and_counts", wide)
-                # derived melts reuse the persisted wide rows (one per
-                # partition) — no extra scan
-                return (
-                    _materialize(_profiles_from(w)),
-                    _materialize(C.rowwise_results_from_agg(w, rowwise, "part_id")),
-                )
-            f_prof = pool.submit(_fused)
-        else:
-            def _unfused():
-                p = _mat("profile", profiles_df)
-                r = _mat(
-                    "constraint_counts",
-                    C.rowwise_results_from_agg(
-                        meta_nb.groupBy("part_id").agg(
-                            F.count(F.lit(1)).alias("n_rows"),
-                            *C.rowwise_count_exprs(rowwise),
-                        ),
-                        rowwise,
-                        "part_id",
-                    ),
-                )
-                return p, r
-            f_prof = pool.submit(_unfused)
-        f_other = pool.submit(
-            lambda: (_mat("unique_referential", res_other),
-                     _materialize(vio_other))
-        )
-        f_vio = pool.submit(_mat, "violations", vio_row)
-
-        # --- writes, CHAINED to their own input legs (four
-        # independent target paths; only results->verdicts is
-        # ordered, inside _write_results): each write launches the
-        # moment ITS inputs exist instead of behind the full metadata
-        # barrier — the profiles write runs while the violations leg
-        # is still aggregating, and the row_sample write (no inputs at
-        # all) runs with the compute wave itself ---
-        def _write_profiles():
-            # results are tiny and already persisted; _pwrite
-            # parallelizes the per-partition file writes without
-            # changing the layout
-            p, _ = f_prof.result()
-            _pwrite(p).write.mode("overwrite").partitionBy("part_id").parquet(
-                f"{output_dir}/column_profiles"
-            )
-            if cfg.approx and cfg.persist_sketches:
-                # the sketch melt reuses the persisted wide rows — no
-                # scan
-                _pwrite(_sketches_from(wide)).write.mode(
-                    "overwrite"
-                ).partitionBy("part_id").parquet(
-                    f"{output_dir}/profile_sketches"
-                )
-
-        def _write_sample():
-            # ~100 seeded random rows for the report (reference ships
-            # a random sample, Profiler.py:542-543 / O3) — metadata
-            # only, never payload bytes; sampled from ONE pending
-            # partition so the scan prunes to 1/n_parts of the
-            # (already column-pruned) input. Written only when absent:
-            # a resumed run over a few late partitions must not
-            # silently REPLACE the table-wide sample with rows from
-            # just those partitions. Existence is a FileSystem-API
-            # probe, not a read-and-catch — a transient read failure
-            # must never masquerade as 'not written yet' and overwrite
-            # the table-wide sample (and the expected PATH_NOT_FOUND
-            # used to dump a stack trace into bench logs).
-            if not hadoop_path_exists(spark, f"{output_dir}/row_sample"):
-                sample = (
-                    meta_nb.where(F.col("part_id") == pending_ids[0])
-                    .sample(fraction=0.25, seed=42)
-                    .limit(100)
-                )
-                sample.write.mode("overwrite").parquet(
-                    f"{output_dir}/row_sample"
-                )
-
-        def _write_violations():
-            v = f_vio.result().unionByName(f_other.result()[1])
-            _pwrite(v).write.mode("overwrite").partitionBy("part_id").parquet(
-                f"{output_dir}/violations"
-            )
-
-        def _write_results():
-            # verdicts (sibling session) append AFTER the overwrite of
-            # the same path — strictly ordered within this task. This
-            # is the ONLY consumer of the decode result, so the decode
-            # future is joined HERE (after the results overwrite,
-            # which needs no decode output): every other write and
-            # both drift legs run concurrently with the decode tail.
-            r = f_prof.result()[1].unionByName(f_other.result()[0])
-            _pwrite(r).write.mode("overwrite").partitionBy("part_id").parquet(
-                f"{output_dir}/constraint_results"
-            )
-            verdicts = f_ver.result() if f_ver is not None else None
-            if verdicts is not None:
-                _pwrite(verdicts).write.mode("append").partitionBy(
-                    "part_id"
-                ).parquet(f"{output_dir}/constraint_results")
-
-        # >= one worker per chained task: each may block on its input
-        # futures, so fewer workers could deadlock the chain
-        w_pool = ThreadPoolExecutor(max_workers=4)
-        w_futs = [
-            w_pool.submit(f)
-            for f in (
-                _write_sample, _write_profiles,
-                _write_violations, _write_results,
-            )
-        ]
-        w_pool.shutdown(wait=False)
-        bg_futs.extend(w_futs)
-
-        profiles = f_prof.result()[0]  # manifest row counts read it
-        f_other.result()
-        f_vio.result()
-        # decode NOT joined here — its tail overlaps writes + drift
-    meta_end = time.time()
-    timings["compute_metadata"] = meta_end - t
-    timings.update(stage_t)
-
-    # join order: writes first (the residual past the metadata barrier
-    # is the "writes" metric — chained writes that finished under the
-    # compute wave cost zero here), then the drift legs launched back
-    # at compute start — by now they have been running under the
-    # metadata/decode/write jobs for the whole run and are usually
-    # already done
-    t = time.time()
-    for fu in w_futs:
-        fu.result()
-    timings["writes"] = time.time() - t
-    if f_drift is not None:
-        f_drift.result()
-    if f_cat is not None:
-        f_cat.result()
-    timings["writes_and_drift"] = time.time() - t
-    decode_pool.shutdown(wait=True)
-    if decode_end["at"] is not None:
-        # "compute" keeps its historical meaning — time until ALL
-        # compute (incl. decode) finished — even though the decode tail
-        # now overlaps the write/drift phase; the tail itself is
-        # reported so the overlap win is visible per run
-        timings["compute"] = timings["compute_metadata"] + max(
-            0.0, decode_end["at"] - meta_end
-        )
-        timings["decode_tail_overlapped"] = max(
-            0.0, decode_end["at"] - meta_end
-        )
+    if cfg.approx:
+        prof, counts = "profiles", "rowwise_results"
+        legs.leg("profile_and_counts", lambda: wide, persist=True)
+        legs.leg(prof, lambda w: _melt(w, "__p_", PROFILE_FIELDS),
+                 after=["profile_and_counts"], persist=True)
+        legs.leg(counts, lambda w: C.rowwise_results_from_agg(w, rowwise, "part_id"),
+                 after=["profile_and_counts"], persist=True)
     else:
-        timings["compute"] = timings["compute_metadata"]
-    # re-merge: decode_verify lands in stage_t AFTER the metadata-
-    # barrier merge when its tail overlapped the write/drift phase
-    timings.update(stage_t)
+        prof, counts = "profile", "constraint_counts"
+        legs.leg(prof, lambda: profile(meta_nb, group_by="part_id", approx=False),
+                 persist=True)
+        legs.leg(counts, lambda: C.rowwise_results_from_agg(
+            meta_nb.groupBy("part_id").agg(
+                F.count(F.lit(1)).alias("n_rows"), *C.rowwise_count_exprs(rowwise),
+            ),
+            rowwise, "part_id",
+        ), persist=True)
+    legs.leg("unique_referential", lambda: res_other, persist=True)
+    legs.leg("unique_violations", lambda _: vio_other,
+             after=["unique_referential"], persist=True)
+    legs.leg("violations", lambda: vio_row, persist=True)
+
+    def _write_sample():
+        # ~100 seeded random rows for the report (reference ships a
+        # random sample, Profiler.py:542-543 / O3) — metadata only,
+        # from ONE pending partition so the scan prunes to 1/n_parts.
+        # Written only when absent: a resumed run over a few late
+        # partitions must not REPLACE the table-wide sample. Existence
+        # is a FileSystem-API probe, not a read-and-catch — a transient
+        # read failure must never masquerade as 'not written yet'.
+        if not hadoop_path_exists(spark, f"{output_dir}/row_sample"):
+            meta_nb.where(F.col("part_id") == pending_ids[0]).sample(
+                fraction=0.25, seed=42
+            ).limit(100).write.mode("overwrite").parquet(f"{output_dir}/row_sample")
+
+    writes = ["write_row_sample", "write_column_profiles", "write_violations",
+              "write_constraint_results"]
+    legs.leg("write_row_sample", _write_sample)
+    legs.leg("write_column_profiles", lambda p: _write(p, "column_profiles"),
+             after=[prof])
+    if cfg.approx and cfg.persist_sketches:
+        writes.append("write_profile_sketches")
+        legs.leg(
+            "write_profile_sketches",
+            lambda w: _write(_melt(w, "__sk_", SKETCH_FIELDS), "profile_sketches"),
+            after=["profile_and_counts"],
+        )
+    legs.leg("write_violations", lambda a, b: _write(a.unionByName(b), "violations"),
+             after=["violations", "unique_violations"])
+    legs.leg(
+        "write_constraint_results",
+        lambda a, b: _write(a.unionByName(b), "constraint_results"),
+        after=[counts, "unique_referential"],
+    )
+    if cfg.validate_images:
+        # the decode verdicts append AFTER the overwrite of the same
+        # path; this is the decode leg's only consumer, so its tail
+        # overlaps every other write and both drift families
+        writes.append("write_verdicts")
+        legs.leg(
+            "write_verdicts",
+            lambda _, v: _write(v, "constraint_results", mode="append"),
+            after=["write_constraint_results", "decode_verify"],
+        )
+    legs.result()
+
+    # the timings keep their historical meaning, now read off the leg
+    # timeline: compute_metadata runs from the wave's first leg until
+    # every metadata leg is done; writes/writes_and_drift are what the
+    # writes/drift legs add past that barrier; compute also covers the
+    # decode tail that overlaps them
+    tl = legs.times
+    wave = min(s for n, (s, _) in tl.items()
+               if n not in ("plan", "id_index_supersede_heal"))
+    meta_end = max(tl[n][1] for n in (prof, counts, "unique_violations", "violations"))
+
+    def _past_meta(names):
+        return max([0.0] + [tl[n][1] - meta_end for n in names])
+
+    def _dur(n):
+        return tl[n][1] - tl[n][0]
+
+    timings = {
+        "plan": tl["plan"][1],
+        "compute_metadata": meta_end - wave,
+        **{n: _dur(n) for n in (
+            "id_index_supersede_heal", "profile_and_counts", "profile",
+            "constraint_counts", "unique_referential", "violations",
+            "decode_verify") if n in tl},
+        "writes": _past_meta(writes),
+        "writes_and_drift": _past_meta(writes + drift_legs),
+    }
+    timings["compute"] = timings["compute_metadata"]
+    if "decode_verify" in tl:
+        timings["decode_tail_overlapped"] = _past_meta(["decode_verify"])
+        timings["compute"] += timings["decode_tail_overlapped"]
 
     # id-index append BEFORE the manifest commit (crash between them =>
     # replayed append, deduped by the check's latest-per-(key,part)
     # rule) — one narrow agg over the pending partitions' id column,
     # no payload bytes
     if cfg.id_index_table:
-        from advanced_data_profile_spark.plans.id_index import (
-            index_append,
-            index_compact,
-        )
+        def _index_append():
+            from advanced_data_profile_spark.plans.id_index import index_append
 
-        t = time.time()
-        # re-validation detection for the append-only precondition: a
-        # PENDING partition that already has a 'done' manifest row was
-        # indexed by an earlier run (resume skips done partitions, so
-        # this only fires on non-resume reruns / explicit backfills).
-        # Read from the manifest — O(partitions), driver-side — never
-        # by scanning the index itself.
-        prior_done = {
-            r.part_id
-            for r in manifest.read()
-            .where((F.col("status") == "done") & (F.col("part_id") != "__global__"))
-            .select("part_id").distinct().collect()
-        }
-        revalidated = sorted({str(p) for p in pending_ids} & prior_done)
-        # durable marker BEFORE the append: a crash after the append
-        # but before the compaction would otherwise leave stale rows
-        # that a plain resume=True retry never heals (the OLD runs'
-        # 'done' manifest rows make everything look finished, so the
-        # retry skips this whole block). The marker survives the crash
-        # and any later run compacts first.
-        supersede_marker = f"{output_dir}/id_index_compact_pending"
-        need_supersede = bool(revalidated) or hadoop_path_exists(
-            spark, supersede_marker
-        )
-        if revalidated:
-            hadoop_touch(spark, supersede_marker, "\n".join(revalidated))
-        index_append(
-            df.select("image_id", "part_id"),
-            cfg.id_index_table,
-            cfg.id_index_location or f"{output_dir}/id_index",
-            run_id=run_id,
-            buckets=cfg.id_index_buckets,
-        )
-        timings["id_index_append"] = time.time() - t
-        if need_supersede:
+            # re-validation detection for the append-only precondition:
+            # a PENDING partition that already has a 'done' manifest row
+            # was indexed by an earlier run (only non-resume reruns /
+            # explicit backfills). Read from the manifest —
+            # O(partitions), driver-side — never by scanning the index.
+            prior_done = {
+                r.part_id
+                for r in manifest.read()
+                .where((F.col("status") == "done") & (F.col("part_id") != "__global__"))
+                .select("part_id").distinct().collect()
+            }
+            revalidated = sorted({str(p) for p in pending_ids} & prior_done)
+            # durable marker BEFORE the append: a crash after the append
+            # but before the compaction would otherwise leave stale rows
+            # that a plain resume=True retry never heals; the marker
+            # survives the crash and any later run compacts first
+            need_supersede = bool(revalidated) or hadoop_path_exists(
+                spark, supersede_marker
+            )
+            if revalidated:
+                hadoop_touch(spark, supersede_marker, "\n".join(revalidated))
+            index_append(
+                df.select("image_id", "part_id"),
+                cfg.id_index_table,
+                cfg.id_index_location or f"{output_dir}/id_index",
+                run_id=run_id,
+                buckets=cfg.id_index_buckets,
+            )
+            return need_supersede
+
+        legs.leg("id_index_append", _index_append)
+        if legs.result("id_index_append"):
             # the regenerated partitions' new appends must fully
             # supersede their old index rows (keys REMOVED by the
             # backfill would otherwise linger as stale false
-            # duplicates: latest-append-wins is per (key, partition)
-            # and nothing newer overwrites a removed key). O(index)
-            # rewrite — backfills are rare; routine resume runs never
-            # enter this branch.
-            t = time.time()
-            index_compact(
-                spark,
-                cfg.id_index_table,
-                staging_dir=f"{output_dir}/id_index_compact_staging",
-                supersede_parts=True,
-            )
-            hadoop_remove(spark, supersede_marker)
-            timings["id_index_supersede"] = time.time() - t
+            # duplicates). O(index) rewrite — backfills are rare.
+            legs.leg("id_index_supersede", _supersede)
+            legs.result("id_index_supersede")
+        timings.update(
+            (n, _dur(n)) for n in ("id_index_append", "id_index_supersede") if n in tl
+        )
 
     # per-partition lineage + metrics rows — commit point. Row counts
     # come from the already-persisted profiles (no extra scan).
-    t = time.time()
-    part_rows = {
-        r.part_id: r.n
-        for r in profiles.groupBy("part_id").agg(F.max("n_rows").alias("n")).collect()
-    }
-    manifest.record_many([
-        {
-            "run_id": run_id, "part_id": str(pid), "status": "done",
-            "started_at": t0, "n_rows": part_rows.get(pid, 0),
-            "metrics": {
-                "timings": {k: round(v, 3) for k, v in timings.items()},
-                **({"drift": drift_summary} if drift_summary else {}),
-            },
-            "input_path": images_path,
+    def _commit(profiles):
+        part_rows = {
+            r.part_id: r.n
+            for r in profiles.groupBy("part_id").agg(F.max("n_rows").alias("n")).collect()
         }
-        for pid in pending_ids
-    ])
-    timings["manifest"] = time.time() - t
-    # unpersist + split-size conf restore happen in run_pipeline's
-    # finally (exception hygiene: they must run on failures too)
+        manifest.record_many([
+            {
+                "run_id": run_id, "part_id": str(pid), "status": "done",
+                "started_at": legs.t0, "n_rows": part_rows.get(pid, 0),
+                "metrics": {
+                    "timings": {k: round(v, 3) for k, v in timings.items()},
+                    "legs": legs.timeline(),
+                    **({"drift": drift_summary} if drift_summary else {}),
+                },
+                "input_path": images_path,
+            }
+            for pid in pending_ids
+        ])
+        return part_rows
+
+    legs.leg("manifest", _commit, after=[prof])
+    part_rows = legs.result("manifest")
+    timings["manifest"] = _dur("manifest")
 
     total_rows = sum(part_rows.values())
-    elapsed = time.time() - t0
+    elapsed = time.time() - legs.t0
     summary = {
         "run_id": run_id,
         "partitions": len(pending_ids),
@@ -922,18 +777,18 @@ def _run_pipeline(
         "timings": {k: round(v, 3) for k, v in timings.items()},
     }
     if cfg.global_unique:
-        if cfg.id_index_table:
+        def _global_unique():
+            if not cfg.id_index_table:
+                return global_uniqueness_check(spark, images_path, output_dir, cfg=cfg)
             from advanced_data_profile_spark.plans.id_index import (
                 global_uniqueness_from_index,
             )
 
-            summary["global_uniqueness"] = global_uniqueness_from_index(
-                spark, cfg.id_index_table, output_dir
-            )
-        else:
-            summary["global_uniqueness"] = global_uniqueness_check(
-                spark, images_path, output_dir, cfg=cfg
-            )
+            return global_uniqueness_from_index(spark, cfg.id_index_table, output_dir)
+
+        legs.leg("global_uniqueness", _global_unique)
+        summary["global_uniqueness"] = legs.result("global_uniqueness")
+    summary["legs"] = legs.timeline()
     return summary
 
 
@@ -1022,10 +877,10 @@ def sketch_drift_between_runs(
     sketch relations, no raw-data rescan, no bin pre-pinning, and any
     partition subsets comparable after the fact (base_parts/cur_parts).
 
-    Complements the in-run histogram drift (_drift above), which scores
-    partitions against a baseline partition WITHIN a run; this scores
-    one run's data against another run's — the drift-vs-last-week
-    question — at metadata cost. Writes drift_verdicts-shaped rows
+    Complements the in-run histogram drift (the drift_results leg),
+    which scores partitions against a baseline partition WITHIN a run;
+    this scores one run's data against another run's — the
+    drift-vs-last-week question — at metadata cost. Writes drift_verdicts-shaped rows
     (part_id='__snapshot__') to {cur_output_dir}/sketch_drift_results
     and returns (verdicts_df, scores_df)."""
     from advanced_data_profile_spark.operators.drift import (

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from advanced_data_profile_spark.functions.imagecodec import decode, psnr
+from advanced_data_profile_spark.session import pyarrow_path
 
 VALIDATION_SCHEMA = (
     "image_id string, part_id int, decode_ok boolean, dims_match boolean, "
@@ -104,18 +105,6 @@ def validate_payloads(images: DataFrame) -> DataFrame:
     return src.mapInArrow(_validate_arrow, schema=VALIDATION_SCHEMA)
 
 
-def _pyarrow_path(p: str) -> str:
-    """Hadoop URI -> a path pyarrow's filesystem layer resolves:
-    file:/ URIs become plain posix paths, s3a:// (the Hadoop S3
-    connector scheme) maps to pyarrow's s3://; everything else passes
-    through (pyarrow handles hdfs://, gs://, s3:// natively)."""
-    if p.startswith("file:"):
-        return p[len("file:"):]
-    if p.startswith("s3a://"):
-        return "s3://" + p[len("s3a://"):]
-    return p
-
-
 def decode_file_tasks(
     spark, images_path: str, part_ids: list
 ) -> list[tuple[str, int, int]]:
@@ -159,7 +148,7 @@ def decode_file_tasks(
             paths = b.column(0).to_pylist()
             pids = b.column(1).to_pylist()
             nrgs = [
-                pq.ParquetFile(_pyarrow_path(p)).metadata.num_row_groups
+                pq.ParquetFile(pyarrow_path(p)).metadata.num_row_groups
                 for p in paths
             ]
             yield pa.RecordBatch.from_arrays(
@@ -233,7 +222,7 @@ def validate_payloads_files(
             pids = b.column(1).to_pylist()
             rgs = b.column(2).to_pylist()
             for p, pid, rg in zip(paths, pids, rgs):
-                pf = pq.ParquetFile(_pyarrow_path(p))
+                pf = pq.ParquetFile(pyarrow_path(p))
                 for rb in pf.iter_batches(
                     batch_size=batch_size, row_groups=[rg], columns=cols
                 ):

@@ -13,9 +13,11 @@ Scale notes (100 TB design point):
 - the agg is a straight HashAggregate: partials per input partition,
   one shuffle keyed by the (low-cardinality) group column. No skew risk
   because group keys are table partitions, each roughly equal sized.
-- exact mode uses ``count_distinct`` / ``percentile`` (expands to extra
-  shuffles) and exists for oracle parity at test scale; ``approx`` mode
-  (default for scale) uses Datasketches HLL distincts
+- exact mode uses ``count_distinct`` and exact quantiles: ungrouped,
+  a bucketed rank search over raw scans (_exact_quantiles_driver, with
+  its own cells for -inf, +inf and NaN); grouped, per-group
+  ``percentile``. ``approx`` mode (default for scale) uses
+  Datasketches HLL distincts
   (``hll_sketch_agg``) and KLL sketch quantiles
   (``kll_sketch_agg_double``), both single-pass and MERGEABLE — the
   north_star's per-partition 'KLL-sketch quantiles + HyperLogLog
@@ -30,7 +32,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -298,7 +300,7 @@ def _exact_quantiles_driver(
     stats: dict[str, tuple[int, float | None, float | None]],
     probs: tuple[float, ...] = _QUANTILE_PROBS,
     buckets: int = _QUANTILE_BUCKETS,
-) -> dict[str, tuple[float, ...]] | None:
+) -> dict[str, tuple[float, ...]]:
     """Exact quantiles for numeric columns via a bucketed rank search
     over RAW value scans, finished DRIVER-side — the replacement for
     ``F.percentile`` (a TypedImperativeAggregate whose boxed
@@ -320,7 +322,10 @@ def _exact_quantiles_driver(
 
     ``stats[c] = (n_nonnull, min, max)`` — supplied by the caller, who
     already has them from the wide profile aggregate (no extra job).
-    ``live`` must only contain columns with n_nonnull > 0.
+    ``live`` must only contain columns with n_nonnull > 0. When
+    (min, max) are not both finite (the column holds NaN or +-inf), a
+    small min/max aggregation over the finite values supplies the grid
+    bounds instead; only such columns pay for it.
 
     Per column (columns run as CONCURRENT driver jobs — an in-session
     A/B beat the r9-draft single melted 4x-explode job 1.04s vs 1.61s
@@ -332,9 +337,12 @@ def _exact_quantiles_driver(
        the DETERMINISTIC ``width_bucket`` on the literal bounds —
        monotone in v, so bucket order == value order; 1k groups means
        map-side partial aggregation collapses the shuffle to ~1k rows
-       per task). The driver walks the cumulative bucket counts to
-       find which bucket holds each bracketing rank (floor/ceil of
-       (n-1)*p) and that bucket's global rank offset.
+       per task). ``-inf``, ``+inf`` and ``NaN`` each get their own
+       cell outside the grid, in SQL order (-inf < grid < +inf <
+       NaN); a column with one finite value uses one cell for it. The
+       driver walks the cumulative bucket counts to find which bucket
+       holds each bracketing rank (floor/ceil of (n-1)*p) and that
+       bucket's global rank offset.
     2. A needed bucket with more than _QUANTILE_COLLECT_CAP ROWS but
        at most _QUANTILE_ATTEMPT_ROW_CAP of them is first resolved by
        a GUARDED distinct collect (one fused groupBy(v).count() job
@@ -348,10 +356,13 @@ def _exact_quantiles_driver(
        bound (so the wasted aggregation would not be cheap), is
        sub-bucketed by another width_bucket pass over just that
        bucket's value range (a raw scan with the same membership
-       predicate; log_buckets levels — 2 cover 10^9 rows). An
-       unsplittable over-cap region (NaN / boundary cells, or a range
-       narrowed below 1 ulp) whose guarded collect overflows falls
-       back.
+       predicate; log_buckets levels — 2 cover 10^9 rows). A region
+       without sub-bounds always goes to the guarded collect, which
+       resolves it: it holds one distinct value (a special cell, the
+       top grid edge, a one-value column) or a few doubles (a range
+       narrowed below one ulp). A grid whose range times ``buckets``
+       overflows a double runs on values scaled by 2^-12, where
+       ``width_bucket`` stays finite and monotone.
     3. a final job aggregates ONLY the needed regions' (value, count)
        rows from raw (CAP-bounded: each region holds <= CAP rows, so
        <= CAP distinct values); the driver walks them to the exact
@@ -360,11 +371,10 @@ def _exact_quantiles_driver(
        (pos - lo) * v_hi) in the same IEEE double arithmetic, so
        results are bit-identical to the in-plan formulation's.
 
-    Returns ``{column: (q_per_prob...)}``, or None for the
-    pathological case it cannot bound (a needed unsplittable region
-    with more distinct values than the collect cap) — the caller
-    falls back to _exact_quantile_relation_windowed, correct at any
-    size.
+    Returns ``{column: (q_per_prob...)}`` for every live column. Raises
+    RuntimeError naming the column when a needed rank stays
+    unresolved, which happens only if the input changed between the
+    profile's jobs.
 
     A pre-histogram repartition of under-split sources was
     A/B-measured and REJECTED (sf1.0 summary job 1.87s -> 3.74s): the
@@ -386,18 +396,26 @@ def _exact_quantiles_driver(
     def one_column(c: str):
         n, mn, mx = stats[c]
         v = F.col(c).cast("double")
-        degenerate = (
-            mn is None or mx is None or mn == mx
-            or not (math.isfinite(mn) and math.isfinite(mx))
-        )
         raw = df.where(v.isNotNull()).select(v.alias("v"))
         hv = F.col("v")
+        if not (math.isfinite(mn) and math.isfinite(mx)):
+            # NaN or +-inf present: take the grid bounds from the finite
+            # values only (|v| < inf is false for NaN and +-inf alike);
+            # both come back None when there are none
+            mn, mx = raw.where(F.abs(hv) < math.inf).agg(
+                F.min(hv), F.max(hv)
+            ).first()
+
+        def scale(lo: float, hi: float) -> float:
+            # width_bucket computes buckets * (v - lo) / (hi - lo); on a
+            # range that wide the product overflows and lands in a wrong
+            # cell, so such a grid runs on values scaled by a power of two
+            return 1.0 if math.isfinite(buckets * (hi - lo)) else 2.0 ** -12
 
         def bucket_over(lo: float, hi: float) -> Column:
-            b = F.width_bucket(hv, F.lit(lo), F.lit(hi), F.lit(buckets))
-            # NaN sorts greatest in SQL ordering; keep it monotone
-            # past +max
-            return F.when(F.isnan(hv), F.lit(buckets + 2)).otherwise(b)
+            s = scale(lo, hi)
+            x = hv if s == 1.0 else hv * s
+            return F.width_bucket(x, F.lit(lo * s), F.lit(hi * s), F.lit(buckets))
 
         def sub_bounds(lo, hi, b):
             # value range of width_bucket cell b over [lo, hi] — used
@@ -406,9 +424,10 @@ def _exact_quantiles_driver(
             # expression == literal, so float rounding here cannot
             # misplace a value)
             if not 1 <= b <= buckets:
-                return None  # boundary/NaN cells hold few values
-            w = (hi - lo) / buckets
-            slo, shi = lo + (b - 1) * w, lo + b * w
+                return None  # one value, or a few doubles at a grid edge
+            s = scale(lo, hi)
+            w = (hi * s - lo * s) / buckets
+            slo, shi = (lo * s + (b - 1) * w) / s, (lo * s + b * w) / s
             if not (math.isfinite(slo) and math.isfinite(shi) and slo < shi):
                 return None
             return slo, shi
@@ -481,7 +500,15 @@ def _exact_quantiles_driver(
                 return []
             return [r for r in regions if not attempt(r)]
 
-        bexpr = F.lit(1) if degenerate else bucket_over(mn, mx)
+        # top-level cells in SQL order: -inf (-1) < finite grid
+        # (0..buckets+1; one cell 0 when fewer than two finite values)
+        # < +inf (buckets+2) < NaN (buckets+3)
+        bexpr = (
+            F.when(F.isnan(hv), buckets + 3)
+            .when(hv == math.inf, buckets + 2)
+            .when(hv == -math.inf, -1)
+            .otherwise(bucket_over(mn, mx) if mn != mx else F.lit(0))
+        )
         cells = (
             raw.groupBy(bexpr.alias("b"))
             .agg(F.count(F.lit(1)).alias("bf"))
@@ -504,8 +531,7 @@ def _exact_quantiles_driver(
             if inside:
                 pending.append({
                     "pred": bexpr == F.lit(int(b)),
-                    "bounds": None if degenerate
-                    else sub_bounds(mn, mx, int(b)),
+                    "bounds": sub_bounds(mn, mx, int(b)),
                     "bf": bf,
                     "offset": cum,
                     "ranks": inside,
@@ -516,23 +542,28 @@ def _exact_quantiles_driver(
         # level: one fused guarded collect, one fused sub-bucket
         # pass); the loop terminates because each level divides a
         # finite double range by `buckets` until sub_bounds
-        # degenerates (-> guarded collect or fallback)
+        # degenerates. A region without sub-bounds holds one distinct
+        # value (a special cell, the top grid edge, a one-value
+        # column) or a few doubles (a range below one ulp, a rounding
+        # band at a sub-grid edge), so the guarded collect resolves it
         final_regions = []
         while pending:
             final_regions.extend(
                 r for r in pending if r["bf"] <= _QUANTILE_COLLECT_CAP
             )
             over = [r for r in pending if r["bf"] > _QUANTILE_COLLECT_CAP]
-            att = [
-                r for r in over
-                if r["bounds"] is None
-                or r["bf"] <= _QUANTILE_ATTEMPT_ROW_CAP
-            ]
-            att_ids = {id(r) for r in att}
-            big = [r for r in over if id(r) not in att_ids]
+            att, big = [], []
+            for r in over:
+                unsplittable = r["bounds"] is None
+                cheap = r["bf"] <= _QUANTILE_ATTEMPT_ROW_CAP
+                (att if unsplittable or cheap else big).append(r)
             for r in (attempt_many(att) if att else []):
                 if r["bounds"] is None:
-                    return None  # over-cap distincts, unsplittable
+                    raise RuntimeError(
+                        f"exact quantiles of column {c!r}: more than "
+                        f"{_QUANTILE_COLLECT_CAP} distinct values in a "
+                        "range the bucket grid cannot split"
+                    )
                 big.append(r)
             if not big:
                 break
@@ -608,15 +639,15 @@ def _exact_quantiles_driver(
             pos = (n - 1) * p
             lo, hi = math.floor(pos), math.ceil(pos)
             if lo not in rank_val or hi not in rank_val:
-                # cross-job count drift: the bucket summary and the
-                # region collects are separate jobs over `df`, so a
+                # the profile's jobs are separate scans of `df`, so a
                 # source whose file set changes between them (e.g.
                 # concurrent appends to the scanned path) can leave a
-                # needed rank unresolved. Degrade to the windowed
-                # fallback instead of a KeyError; callers profiling a
-                # moving table get the same racy-but-defined snapshot
-                # semantics every multi-job formulation here has.
-                return None
+                # needed rank unresolved
+                raise RuntimeError(
+                    f"exact quantiles of column {c!r}: ranks {lo}/{hi} of "
+                    f"{n} unresolved; the input changed between the "
+                    "profile's jobs"
+                )
             if lo == hi:
                 qs.append(float(rank_val[lo]))
             else:
@@ -627,169 +658,7 @@ def _exact_quantiles_driver(
         return tuple(qs)
 
     with ThreadPoolExecutor(max_workers=min(len(live), 8)) as pool:
-        results = list(pool.map(one_column, live))
-    if any(r is None for r in results):
-        return None
-    return dict(zip(live, results))
-
-
-def _exact_quantile_relation_windowed(
-    df: DataFrame,
-    columns: list[str],
-    probs: tuple[float, ...] = _QUANTILE_PROBS,
-    buckets: int = _QUANTILE_BUCKETS,
-) -> DataFrame | None:
-    """The r8 distributed-window formulation of the exact quantile
-    relation — kept as the any-size fallback for the pathological case
-    the driver-finished path cannot bound (a needed bracketing region
-    with non-finite bounds AND more distinct values than the collect
-    cap). Output contract identical to _exact_quantile_relation.
-
-    Shape: the melt histogram is range-bucketed; per-bucket totals give
-    each bucket's global rank offset via a tiny window; the cumulative
-    count inside each bucket is a window partitioned by (column,
-    bucket) — parallel across ~1k buckets per column; bracketing rows
-    are picked by conditional aggregation and interpolated in-plan.
-    Costs two extra melt passes vs the driver-finished path (the
-    per-bucket-offset side's pushed filters diverge from the main
-    path's, which breaks Exchange reuse)."""
-    import math
-
-    if not columns:
-        return None
-    stats_row = df.select([
-        e
-        for c in columns
-        for e in (
-            F.count(F.col(c)).alias(f"n_{c}"),
-            F.min(F.col(c).cast("double")).alias(f"mn_{c}"),
-            F.max(F.col(c).cast("double")).alias(f"mx_{c}"),
-        )
-    ]).collect()[0]
-
-    live = [c for c in columns if stats_row[f"n_{c}"] > 0]
-    if not live:
-        return None
-
-    def bucket_expr(c: str, v: Column) -> Column:
-        mn, mx = stats_row[f"mn_{c}"], stats_row[f"mx_{c}"]
-        if (
-            mn is None or mx is None or mn == mx
-            or not (math.isfinite(mn) and math.isfinite(mx))
-        ):
-            return F.lit(1)
-        b = F.width_bucket(v, F.lit(mn), F.lit(mx), F.lit(buckets))
-        # NaN sorts greatest in SQL ordering; keep it monotone past +max
-        return F.when(F.isnan(v), F.lit(buckets + 2)).otherwise(b)
-
-    melt = (
-        df.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(i).alias("cid"),
-                        F.col(c).cast("double").alias("v"),
-                    )
-                    for i, c in enumerate(live)
-                ])
-            ).alias("s")
-        )
-        .select("s.*")
-        .where(F.col("v").isNotNull())
-    )
-    bucket = None
-    for i, c in enumerate(live):
-        e = bucket_expr(c, F.col("v"))
-        bucket = F.when(F.col("cid") == i, e) if bucket is None else bucket.when(
-            F.col("cid") == i, e
-        )
-    hist = melt.groupBy("cid", "v").agg(F.count(F.lit(1)).alias("f")).withColumn(
-        "b", bucket
-    )
-
-    per_bucket = hist.groupBy("cid", "b").agg(F.sum("f").alias("bf"))
-    w_off = (
-        Window.partitionBy("cid")
-        .orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = per_bucket.select(
-        "cid", "b", F.coalesce(F.sum("bf").over(w_off), F.lit(0)).alias("off")
-    )
-
-    w_cum = (
-        Window.partitionBy("cid", "b")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # explicit partition count: the rows are narrow (int, double, long),
-    # so AQE's byte-targeted coalescing would fold the whole histogram
-    # into one or two partitions and serialize the CPU-bound sort+window
-    # (measured 2.1s -> ~0.6s at sf1.0 with the explicit count, which
-    # AQE leaves alone); (cid, bucket) grain keeps it skew-free
-    n_par = df.sparkSession.sparkContext.defaultParallelism
-    cum = (
-        hist.join(F.broadcast(offsets), ["cid", "b"])
-        .repartition(n_par, "cid", "b")
-        .select(
-            "cid", "v", "f", "b",
-            (F.col("off") + F.sum("f").over(w_cum)).alias("c"),
-        )
-        .drop("b")
-    )
-
-    # bracketing positions per column as literals (0-indexed sorted rank)
-    sel: list[Column] = [F.count(F.lit(1)).alias("__hnd")]
-    finals: list[Column] = [
-        F.element_at(
-            F.array(*[F.lit(c) for c in live]), F.col("cid") + 1
-        ).alias("column")
-    ]
-    for j, p in enumerate(probs):
-        vlo_cases, vhi_cases = None, None
-        for i, c in enumerate(live):
-            n = stats_row[f"n_{c}"]
-            pos = (n - 1) * p
-            lo, hi = math.floor(pos), math.ceil(pos)
-            in_lo = (F.col("c") - F.col("f") <= F.lit(lo)) & (F.lit(lo) < F.col("c"))
-            in_hi = (F.col("c") - F.col("f") <= F.lit(hi)) & (F.lit(hi) < F.col("c"))
-            cm = F.col("cid") == i
-            vlo_cases = (
-                F.when(cm & in_lo, F.col("v"))
-                if vlo_cases is None
-                else vlo_cases.when(cm & in_lo, F.col("v"))
-            )
-            vhi_cases = (
-                F.when(cm & in_hi, F.col("v"))
-                if vhi_cases is None
-                else vhi_cases.when(cm & in_hi, F.col("v"))
-            )
-        sel.append(F.max(vlo_cases).alias(f"__vlo_{j}"))
-        sel.append(F.max(vhi_cases).alias(f"__vhi_{j}"))
-
-    agg = cum.groupBy("cid").agg(*sel)
-
-    for j, p in enumerate(probs):
-        val = None
-        for i, c in enumerate(live):
-            n = stats_row[f"n_{c}"]
-            pos = (n - 1) * p
-            lo, hi = math.floor(pos), math.ceil(pos)
-            if lo == hi:
-                expr = F.col(f"__vlo_{j}")
-            else:
-                # Spark Percentile.getPercentile interpolation, literal
-                # fractions computed in the same double arithmetic
-                expr = (
-                    F.lit(float(hi) - pos) * F.col(f"__vlo_{j}")
-                    + F.lit(pos - float(lo)) * F.col(f"__vhi_{j}")
-                )
-            val = F.when(F.col("cid") == i, expr) if val is None else val.when(
-                F.col("cid") == i, expr
-            )
-        finals.append(val.alias(f"__hq_{j}"))
-    finals.append(F.col("__hnd"))
-    return agg.select(*finals)
+        return dict(zip(live, pool.map(one_column, live)))
 
 
 def profile(
@@ -827,10 +696,12 @@ def profile(
       the wide struct agg (one collected row), exact distinct counts
       (per-column count_distinct jobs, or one fused agg when many
       columns), and the bucketed rank search over raw scans
-      (_exact_quantiles_driver). No melt/explode plan, no broadcast
-      joins, no materialized value histogram, and no separate
-      (count, min, max) pre-job — the collected structs already carry
-      those.
+      (_exact_quantiles_driver, total on any input: -inf, +inf and
+      NaN get their own cells outside the bucket grid). No
+      melt/explode plan, no broadcast joins, no materialized value
+      histogram, and no separate (count, min, max) pre-job — the
+      collected structs already carry those (a column holding NaN or
+      +-inf adds one small min/max job over its finite values).
     """
     if fields is not None:
         known = {f for f, _ in PROFILE_FIELDS}
@@ -1028,17 +899,6 @@ def _profile_exact_ungrouped_local(
         }
         live = [c for c in hist_cols if stats[c][0] > 0]
         qres = _exact_quantiles_driver(df, live, stats)
-        if qres is None:
-            # pathological fallback (unsplittable over-cap region): the
-            # windowed relation is n_cols rows — collect and merge the
-            # same way (its __hnd column is ignored; distincts come
-            # from the count_distinct leg)
-            rel = _exact_quantile_relation_windowed(df, hist_cols)
-            rows = rel.collect() if rel is not None else []
-            qres = {
-                r["column"]: (r["__hq_0"], r["__hq_1"], r["__hq_2"])
-                for r in rows
-            }
         if cd_futs is not None:
             cd_vals = {c: f.result() for c, f in cd_futs.items()}
         elif fused_fut is not None:

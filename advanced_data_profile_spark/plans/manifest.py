@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from advanced_data_profile_spark.session import hadoop_path_exists, pyarrow_path
+
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
     T.StructField("part_id", T.StringType(), False),
@@ -46,7 +48,7 @@ class Manifest:
         self.path = path
 
     def exists(self) -> bool:
-        return os.path.exists(self.path)
+        return hadoop_path_exists(self.spark, self.path)
 
     def read(self) -> DataFrame:
         if not self.exists():
@@ -97,8 +99,13 @@ class Manifest:
         Spark job (seconds of scheduling for an 8-row file); the layout
         is a plain parquet directory Spark reads back unchanged. On a
         real cluster this would be an Iceberg/metastore append — also a
-        driver-side metadata commit, same shape."""
+        driver-side metadata commit, same shape. The directory is
+        created and written through the filesystem pyarrow resolves
+        from the path, so a file:// output dir lands where Spark reads
+        it back (hdfs:// and s3a:// go through pyarrow's own HDFS and
+        S3 filesystems)."""
         import pyarrow as pa
+        import pyarrow.fs as pafs
         import pyarrow.parquet as pq
 
         now = time.time()
@@ -123,9 +130,13 @@ class Manifest:
             ("finished_at", pa.float64()), ("n_rows", pa.int64()),
             ("metrics_json", pa.string()), ("input_path", pa.string()),
         ]))
-        os.makedirs(self.path, exist_ok=True)
+        target = pyarrow_path(self.path)
+        if "://" not in target:
+            target = os.path.abspath(target)  # from_uri needs a scheme or /
+        fs, root = pafs.FileSystem.from_uri(target)
+        fs.create_dir(root, recursive=True)
         fname = f"part-{uuid.uuid4().hex}.parquet"
-        pq.write_table(table, os.path.join(self.path, fname))
+        pq.write_table(table, f"{root}/{fname}", filesystem=fs)
 
 
 def new_run_id() -> str:

@@ -109,19 +109,6 @@ SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 class PipelineConfig:
     approx: bool = True                    # sketch mode for distinct/quantiles
     validate_images: bool = True           # run the bytes-reading pass
-    # How the bytes-reading decode pass scans payloads:
-    #   "pyarrow-files" — row-group tasks read by pyarrow INSIDE the
-    #       Python workers (image_verify.validate_payloads_files);
-    #       bytes never cross the JVM, measured AT the frameworkless
-    #       kernel floor (3.97s vs 6.1s best-JVM / 13.5s old 16m-split
-    #       JVM at the 512k scaling fixture, local[32] min-of-3);
-    #   "jvm" — the classic Catalyst parquet scan + mapInArrow;
-    #   "auto" (default) — pyarrow-files when the source is a hive
-    #       part_id=K parquet layout AND the row-group task count
-    #       covers the cluster (>= defaultParallelism); otherwise jvm
-    #       (non-parquet/Iceberg sources, flat layouts, or inputs too
-    #       small to fill the cluster at row-group granularity).
-    decode_path: str = "auto"
     drift: bool = True
     baseline_part: int = 0                 # drift baseline partition
     drift_columns: tuple = ("w", "h", "caption_len")
@@ -285,52 +272,42 @@ def _payload_verdicts(
     spark: SparkSession, images_path: str, pending_ids: list, cfg: PipelineConfig
 ) -> DataFrame:
     """The decode pass's verdict rows over the pending partitions
-    (lazy), through the scan cfg.decode_path selects."""
-    validated = None
-    if cfg.decode_path in ("auto", "pyarrow-files"):
-        from advanced_data_profile_spark.operators.image_verify import (
-            decode_file_tasks,
-            validate_payloads_files,
-        )
+    (lazy). The scan is chosen from the source: row-group tasks read
+    by pyarrow INSIDE the Python workers
+    (image_verify.validate_payloads_files; bytes never cross the JVM,
+    measured at the frameworkless kernel floor: 3.97s vs 6.1s best-JVM
+    at the 512k scaling fixture, local[32] min-of-3) when the source is
+    a hive part_id=K parquet layout AND the row-group task count covers
+    the cluster (>= defaultParallelism); otherwise the Catalyst parquet
+    scan + mapInArrow (non-parquet/Iceberg sources, flat layouts, or
+    inputs too small to fill the cluster at row-group granularity)."""
+    from advanced_data_profile_spark.operators.image_verify import (
+        decode_file_tasks,
+        validate_payloads_files,
+    )
 
-        # no first-partition existence gate: decode_file_tasks itself
-        # skips pending partitions without a hive dir, and a flat
-        # non-hive layout simply yields zero tasks
-        tasks = []
-        if cfg.table_format == "parquet":
-            tasks = decode_file_tasks(spark, images_path, pending_ids)
-        enough = len(tasks) >= spark.sparkContext.defaultParallelism
-        if tasks and (cfg.decode_path == "pyarrow-files" or enough):
-            validated = validate_payloads_files(
-                spark, images_path, pending_ids, tasks=tasks
-            )
-    if validated is None and cfg.decode_path == "pyarrow-files":
-        # the user FORCED the pyarrow leg; silently running the JVM
-        # scan instead would ignore an explicit choice (and its
-        # measured perf expectations). "auto" keeps its fallback.
-        raise ValueError(
-            "decode_path='pyarrow-files' was forced but the "
-            f"pyarrow decode leg cannot serve {images_path!r}: "
-            "non-parquet table format, no part_id=K hive "
-            "layout, or no data files under the pending "
-            "partitions. Use decode_path='auto' to allow "
-            "the JVM scan fallback."
-        )
-    if validated is None:
-        # JVM scan leg in a child session (shared context, independent
-        # SQLConf). 128m splits: the old 16m "balanced small tasks"
-        # sizing was A/B-measured 2x slower at scale (13.5s vs 8.1s
-        # @128m / 6.1s @256m on the 512k fixture) — per-task
-        # scheduling + Arrow-stream setup dominates below ~100m; 128m
-        # keeps a small-fixture wave balanced while near the
-        # large-split plateau.
-        s2 = spark.newSession()
-        s2.conf.set(SPLIT_CONF, "128m")
-        df2 = read_images(s2, images_path, fmt=cfg.table_format).where(
-            F.col("part_id").isin(pending_ids)
-        )
-        validated = validate_payloads(df2)
-    return validation_verdicts(validated)
+    # no first-partition existence gate: decode_file_tasks itself
+    # skips pending partitions without a hive dir, and a flat non-hive
+    # layout simply yields zero tasks
+    tasks = []
+    if cfg.table_format == "parquet":
+        tasks = decode_file_tasks(spark, images_path, pending_ids)
+    if len(tasks) >= spark.sparkContext.defaultParallelism:
+        return validation_verdicts(validate_payloads_files(
+            spark, images_path, pending_ids, tasks=tasks
+        ))
+    # JVM scan leg in a child session (shared context, independent
+    # SQLConf). 128m splits: the old 16m "balanced small tasks" sizing
+    # was A/B-measured 2x slower at scale (13.5s vs 8.1s @128m / 6.1s
+    # @256m on the 512k fixture) — per-task scheduling + Arrow-stream
+    # setup dominates below ~100m; 128m keeps a small-fixture wave
+    # balanced while near the large-split plateau.
+    s2 = spark.newSession()
+    s2.conf.set(SPLIT_CONF, "128m")
+    df2 = read_images(s2, images_path, fmt=cfg.table_format).where(
+        F.col("part_id").isin(pending_ids)
+    )
+    return validation_verdicts(validate_payloads(df2))
 
 
 def run_pipeline(

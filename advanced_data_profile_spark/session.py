@@ -46,7 +46,10 @@ def get_spark(
         # all local cores busy (on a cluster the default 128m is fine —
         # files there are many and splits abound)
         .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
     )
@@ -55,6 +58,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_driver_memory() -> str:
+    """Driver heap when $SPARK_DRIVER_MEM is unset: half of physical
+    RAM, capped at 24g (a heap larger than the machine's memory lets
+    the JVM grow until the OS kills it)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(ram_mb // 2, 24 << 10)}m"
+
+
+def pyarrow_path(p: str) -> str:
+    """Hadoop URI -> a path pyarrow's filesystem layer resolves:
+    file:/ URIs become plain posix paths, s3a:// (the Hadoop S3
+    connector scheme) maps to pyarrow's s3://; everything else passes
+    through (pyarrow handles hdfs://, gs://, s3:// natively)."""
+    if p.startswith("file:"):
+        return p[len("file:"):]
+    if p.startswith("s3a://"):
+        return "s3://" + p[len("s3a://"):]
+    return p
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):

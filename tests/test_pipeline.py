@@ -329,29 +329,57 @@ def test_pipeline_categorical_drift_flags_fmt_shift(spark, tmp_path):
     assert "Categorical drift" in render_html(rep)
 
 
-def test_forced_pyarrow_decode_path_raises_when_unusable(spark, tmp_path):
-    """decode_path='pyarrow-files' is an explicit user choice; when the
-    leg cannot serve the source (flat non-hive layout here) the run
-    must fail loudly instead of silently downgrading to the JVM scan."""
-    import pandas as pd
-    import pytest as _pytest
-
-    from advanced_data_profile_spark.plans.pipeline import (
-        PipelineConfig,
-        run_pipeline,
-    )
+def test_flat_layout_runs_the_jvm_decode_scan(spark, tmp_path):
+    """A flat (non-hive) images table: partitions are found by a scan,
+    not a directory listing, and the decode pass runs the JVM parquet
+    scan (a flat layout yields no pyarrow row-group tasks); the
+    verdicts still equal the planted ground truth."""
     from advanced_data_profile_spark.sources.images import (
         generate_images,
         write_images,
     )
 
-    # flat layout: copy one partition's files WITHOUT the hive dirs
     src = str(tmp_path / "hive")
     write_images(generate_images(spark, n_parts=2, rows_per_part=20), src)
     flat = str(tmp_path / "flat")
     spark.read.parquet(src).write.parquet(flat)
-    with _pytest.raises(ValueError, match="pyarrow-files"):
-        run_pipeline(
-            spark, flat, str(tmp_path / "out"),
-            cfg=PipelineConfig(decode_path="pyarrow-files"),
-        )
+    out = str(tmp_path / "out")
+    assert run_pipeline(spark, flat, out)["partitions"] == 2
+
+    got = {
+        (int(r.part_id), r.constraint, r.kind): r.n_violations
+        for r in spark.read.parquet(f"{out}/constraint_results").collect()
+    }
+    expect = {}
+    for p, g in ground_truth(2, 20).items():
+        expect.update({
+            (p, "caption_not_null", "not_null"): g["caption_violations"],
+            (p, "w_domain", "domain"): g["w_domain_violations"],
+            (p, "h_domain", "domain"): 0,
+            (p, "fmt_known", "domain"): g["fmt_violations"],
+            (p, "phash_ref", "referential"): g["orphan_phash"],
+            # plus one row per partition for the cross-partition
+            # duplicate of part 0's row-0 id
+            (p, "image_id_unique", "unique"): g["dup_id_pairs"] * 2 + 1,
+            (p, "fmt_known", "image"): g["fmt_violations"],
+            (p, "payload_decodes", "image"): g["corrupt_payloads"]
+            + g["fmt_violations"] + g["w_domain_violations"] + g["dim_mismatch"],
+            # a planted dims mismatch fails the decode itself
+            (p, "dims_match_payload", "image"): 0,
+        })
+    assert got == expect
+
+
+def test_file_uri_output_dir_commits_and_resumes(spark, images_path, tmp_path, monkeypatch):
+    """An output dir given as a file:// URI: the manifest commit lands
+    in the real directory (not a stray ./file:/ tree under the working
+    directory), and a second run sees it and skips every partition."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    out = (tmp_path / "out").as_uri()
+    cfg = PipelineConfig(validate_images=False)
+    assert run_pipeline(spark, images_path, out, cfg=cfg)["partitions"] == N_PARTS
+    assert Manifest(spark, f"{out}/manifest").exists()
+    assert run_pipeline(spark, images_path, out, cfg=cfg)["partitions"] == 0
+    assert not [d for d in os.listdir(tmp_path) if d.startswith("file:")]

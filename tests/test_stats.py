@@ -151,8 +151,11 @@ def test_exact_quantiles_hot_value_and_refinement_paths(spark, monkeypatch):
     collect cap in its bucket (resolved by the fused guarded distinct
     collect, NOT by refinement), (b) a dense many-distinct bucket
     exceeds the cap AND the attempt row bound (resolved by sub-bucket
-    refinement), and assert the quantiles still match F.percentile's
-    in-plan exact interpolation bit-for-bit."""
+    refinement), (c) NaN and +-inf sit in an over-cap column or make
+    up most or all of one (their own cells outside the bucket grid),
+    (d) a range so wide that width_bucket's arithmetic would overflow,
+    and assert the quantiles still match F.percentile's in-plan exact
+    interpolation bit-for-bit (NaN equal to NaN)."""
     import pyspark.sql.functions as F
 
     from advanced_data_profile_spark.operators import stats as S
@@ -160,16 +163,49 @@ def test_exact_quantiles_hot_value_and_refinement_paths(spark, monkeypatch):
     monkeypatch.setattr(S, "_QUANTILE_COLLECT_CAP", 50)
     monkeypatch.setattr(S, "_QUANTILE_ATTEMPT_ROW_CAP", 400)
 
+    def one(name, col, n):
+        return spark.range(0, n).select(col.alias(name))
+
+    def plus(df, *vals):
+        return df.unionAll(spark.createDataFrame([(v,) for v in vals], "x double"))
+
+    nan, inf = float("nan"), math.inf
     # hot: one value repeated 3000x (>> both caps) + a spread tail;
     # dense: 5000 distinct values packed into a narrow range so its
-    # buckets hold > 50 distincts and > 400 rows at the shrunken caps
+    # buckets hold > 50 distincts and > 400 rows at the shrunken caps;
+    # over: 500 distinct values (> 50) spread over the whole grid
     hot = spark.range(0, 3000).select(F.lit(7.5).alias("hot")).unionAll(
         spark.range(0, 1000).select((F.col("id") * 0.01).alias("hot"))
     )
     dense = spark.range(0, 5000).select(
         (F.col("id") * 1e-7 + 3.0).alias("dense")
     )
-    for name, df in (("hot", hot), ("dense", dense)):
+
+    def over(name):
+        return one(name, F.col("id") * 0.37 + 1.0, 500)
+
+    cases = {
+        "hot": hot,
+        "dense": dense,
+        "over": plus(over("over"), nan),
+        "over_inf": plus(over("over_inf"), nan, inf),
+        "over_ninf": plus(over("over_ninf"), nan, inf, -inf),
+        "nan_heavy": one(
+            "nan_heavy",
+            F.when(F.col("id") % 4 != 0, F.lit(nan)).otherwise(F.col("id") * 0.5),
+            2000,
+        ),
+        "all_nan": one("all_nan", F.lit(nan), 300),
+        "const_nan": one(
+            "const_nan",
+            F.when(F.col("id") == 7, F.lit(nan)).otherwise(F.lit(0.1)),
+            300,
+        ),
+        "single": one("single", F.lit(2.5), 1),
+        "inf_only": plus(one("inf_only", F.lit(inf), 2), -inf),
+        "wide": one("wide", (F.col("id") - 100) * F.lit(1e303), 200),
+    }
+    for name, df in cases.items():
         got = {
             r.column: r
             for r in S.profile(
@@ -182,4 +218,19 @@ def test_exact_quantiles_hot_value_and_refinement_paths(spark, monkeypatch):
                 F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)),
             )
         ).collect()[0][0]
-        assert (got.p25, got.p50, got.p75) == tuple(exact), name
+        for g, e in zip((got.p25, got.p50, got.p75), exact):
+            assert g == e or (math.isnan(g) and math.isnan(e)), (name, got, exact)
+
+
+def test_exact_quantiles_driver_raises_on_unresolved_rank(spark):
+    """A row count the scans cannot account for (the input changed
+    between the profile's jobs) raises, naming the column, instead of
+    returning a partial or recomputed answer."""
+    import pyspark.sql.functions as F
+
+    from advanced_data_profile_spark.operators.stats import _exact_quantiles_driver
+
+    df = spark.range(0, 4).select((F.col("id") * 1.5).alias("x"))
+    n, mn, mx = df.agg(F.count("x"), F.min("x"), F.max("x")).first()
+    with pytest.raises(RuntimeError, match="'x'"):
+        _exact_quantiles_driver(df, ["x"], {"x": (n + 5, mn, mx)})

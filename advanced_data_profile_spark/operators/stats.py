@@ -322,10 +322,7 @@ def _exact_quantiles_driver(
 
     ``stats[c] = (n_nonnull, min, max)`` — supplied by the caller, who
     already has them from the wide profile aggregate (no extra job).
-    ``live`` must only contain columns with n_nonnull > 0. When
-    (min, max) are not both finite (the column holds NaN or +-inf), a
-    small min/max aggregation over the finite values supplies the grid
-    bounds instead; only such columns pay for it.
+    ``live`` must only contain columns with n_nonnull > 0.
 
     Per column (columns run as CONCURRENT driver jobs — an in-session
     A/B beat the r9-draft single melted 4x-explode job 1.04s vs 1.61s
@@ -339,10 +336,12 @@ def _exact_quantiles_driver(
        map-side partial aggregation collapses the shuffle to ~1k rows
        per task). ``-inf``, ``+inf`` and ``NaN`` each get their own
        cell outside the grid, in SQL order (-inf < grid < +inf <
-       NaN); a column with one finite value uses one cell for it. The
-       driver walks the cumulative bucket counts to find which bucket
-       holds each bracketing rank (floor/ceil of (n-1)*p) and that
-       bucket's global rank offset.
+       NaN), which resolves its ranks without a job. When (min, max)
+       are not two distinct finite values (the column holds NaN or
+       +-inf, or one finite value) the finite values share one cell
+       without a grid. The driver walks the cumulative bucket counts
+       to find which bucket holds each bracketing rank (floor/ceil of
+       (n-1)*p) and that bucket's global rank offset.
     2. A needed bucket with more than _QUANTILE_COLLECT_CAP ROWS but
        at most _QUANTILE_ATTEMPT_ROW_CAP of them is first resolved by
        a GUARDED distinct collect (one fused groupBy(v).count() job
@@ -356,13 +355,18 @@ def _exact_quantiles_driver(
        bound (so the wasted aggregation would not be cheap), is
        sub-bucketed by another width_bucket pass over just that
        bucket's value range (a raw scan with the same membership
-       predicate; log_buckets levels — 2 cover 10^9 rows). A region
-       without sub-bounds always goes to the guarded collect, which
-       resolves it: it holds one distinct value (a special cell, the
-       top grid edge, a one-value column) or a few doubles (a range
-       narrowed below one ulp). A grid whose range times ``buckets``
-       overflows a double runs on values scaled by 2^-12, where
-       ``width_bucket`` stays finite and monotone.
+       predicate; log_buckets levels — 2 cover 10^9 rows). An
+       over-cap region whose guarded collect overflowed, or that has
+       no sub-bounds (a grid edge cell, whose values
+       ``width_bucket``'s rounding can spread past the cell's
+       computed range; a cell narrower than its grid can split; the
+       finite values of a column without a top-level grid), takes its
+       own (min, max) from one fused min/max job: a single value
+       resolves it, otherwise it is sub-bucketed over that range, so
+       values clustered in a small part of their cell split in one
+       level. A grid whose range times ``buckets`` overflows a double
+       runs on values scaled by 2^-12, where ``width_bucket`` stays
+       finite and monotone.
     3. a final job aggregates ONLY the needed regions' (value, count)
        rows from raw (CAP-bounded: each region holds <= CAP rows, so
        <= CAP distinct values); the driver walks them to the exact
@@ -398,13 +402,6 @@ def _exact_quantiles_driver(
         v = F.col(c).cast("double")
         raw = df.where(v.isNotNull()).select(v.alias("v"))
         hv = F.col("v")
-        if not (math.isfinite(mn) and math.isfinite(mx)):
-            # NaN or +-inf present: take the grid bounds from the finite
-            # values only (|v| < inf is false for NaN and +-inf alike);
-            # both come back None when there are none
-            mn, mx = raw.where(F.abs(hv) < math.inf).agg(
-                F.min(hv), F.max(hv)
-            ).first()
 
         def scale(lo: float, hi: float) -> float:
             # width_bucket computes buckets * (v - lo) / (hi - lo); on a
@@ -424,7 +421,7 @@ def _exact_quantiles_driver(
             # expression == literal, so float rounding here cannot
             # misplace a value)
             if not 1 <= b <= buckets:
-                return None  # one value, or a few doubles at a grid edge
+                return None  # a grid edge cell
             s = scale(lo, hi)
             w = (hi * s - lo * s) / buckets
             slo, shi = (lo * s + (b - 1) * w) / s, (lo * s + b * w) / s
@@ -454,6 +451,15 @@ def _exact_quantiles_driver(
                     want = next(it, None)
                 cum += f
 
+        def tagged(regions):
+            # the rows of all the regions, and a CASE WHEN giving each
+            # row its region's index
+            pred, rid = regions[0]["pred"], F.when(regions[0]["pred"], F.lit(0))
+            for k, r in enumerate(regions[1:], 1):
+                pred = pred | r["pred"]
+                rid = rid.when(r["pred"], F.lit(k))
+            return raw.where(pred), rid.alias("rid")
+
         def attempt(region) -> bool:
             # guarded distinct collect for one over-cap region:
             # succeeds iff the region's DISTINCT count fits the cap
@@ -476,17 +482,10 @@ def _exact_quantiles_driver(
             # resolve. If the fused limit trips, each region is
             # retried alone so a single over-cap-distinct region does
             # not drag its hot-value siblings into refinement.
-            pred = regions[0]["pred"]
-            for r in regions[1:]:
-                pred = pred | r["pred"]
-            rid = None
-            for k, r in enumerate(regions):
-                rid = (F.when(r["pred"], F.lit(k)) if rid is None
-                       else rid.when(r["pred"], F.lit(k)))
+            rows_df, rid = tagged(regions)
             bound = len(regions) * _QUANTILE_COLLECT_CAP
             rows = (
-                raw.where(pred)
-                .groupBy(rid.alias("rid"), "v")
+                rows_df.groupBy(rid, "v")
                 .agg(F.count(F.lit(1)).alias("f"))
                 .limit(bound + 1)
                 .collect()
@@ -498,16 +497,46 @@ def _exact_quantiles_driver(
                 for k, region in enumerate(regions):
                     walk(region, vals[k])
                 return []
+            if len(regions) == 1:
+                return regions  # the retry alone would be the same job
             return [r for r in regions if not attempt(r)]
 
-        # top-level cells in SQL order: -inf (-1) < finite grid
-        # (0..buckets+1; one cell 0 when fewer than two finite values)
-        # < +inf (buckets+2) < NaN (buckets+3)
+        def own_bounds(regions) -> list:
+            # ONE fused min/max job over over-cap regions without
+            # sub-bounds or whose guarded collect overflowed; a region
+            # holding one value is resolved outright, the others take
+            # their own value range as the grid to sub-bucket over and
+            # are returned
+            rows_df, rid = tagged(regions)
+            got = {
+                r.rid: (r.lo, r.hi)
+                for r in rows_df.groupBy(rid)
+                .agg(F.min(hv).alias("lo"), F.max(hv).alias("hi"))
+                .collect()
+            }
+            split = []
+            for k, region in enumerate(regions):
+                lo, hi = got.get(k, (None, None))
+                if lo is not None and lo < hi:
+                    region["bounds"] = (lo, hi)
+                    split.append(region)
+                elif lo is not None:
+                    walk(region, [(lo, region["bf"])])
+            return split
+
+        # top-level cells in SQL order: -inf (-1) < finite values <
+        # +inf (buckets+2) < NaN (buckets+3). The finite values fill
+        # the width_bucket grid over (min, max), 0..buckets+1, when
+        # those are two distinct finite values, else one cell 0 (a
+        # column holding NaN or +-inf, or one finite value). A special
+        # cell holds one known value and needs no job.
+        grid = math.isfinite(mn) and math.isfinite(mx) and mn < mx
+        special = {-1: -math.inf, buckets + 2: math.inf, buckets + 3: math.nan}
         bexpr = (
             F.when(F.isnan(hv), buckets + 3)
             .when(hv == math.inf, buckets + 2)
             .when(hv == -math.inf, -1)
-            .otherwise(bucket_over(mn, mx) if mn != mx else F.lit(0))
+            .otherwise(bucket_over(mn, mx) if grid else F.lit(0))
         )
         cells = (
             raw.groupBy(bexpr.alias("b"))
@@ -528,59 +557,51 @@ def _exact_quantiles_driver(
             while want is not None and cum <= want < cum + bf:
                 inside.append(want)
                 want = next(it, None)
-            if inside:
+            if inside and b in special:
+                walk({"offset": cum, "ranks": inside}, [(special[b], bf)])
+            elif inside:
                 pending.append({
                     "pred": bexpr == F.lit(int(b)),
-                    "bounds": sub_bounds(mn, mx, int(b)),
+                    "bounds": sub_bounds(mn, mx, int(b)) if grid else None,
                     "bf": bf,
                     "offset": cum,
                     "ranks": inside,
                 })
             cum += bf
 
-        # resolve/refine oversized regions (at most two jobs per
-        # level: one fused guarded collect, one fused sub-bucket
-        # pass); the loop terminates because each level divides a
-        # finite double range by `buckets` until sub_bounds
-        # degenerates. A region without sub-bounds holds one distinct
-        # value (a special cell, the top grid edge, a one-value
-        # column) or a few doubles (a range below one ulp, a rounding
-        # band at a sub-grid edge), so the guarded collect resolves it
+        # resolve/refine oversized regions (per level: one fused
+        # guarded collect, one fused min/max, one fused sub-bucket
+        # pass). A region without sub-bounds (a grid edge cell, a cell
+        # narrower than its grid can split, the finite values of a
+        # column without a top-level grid) or whose guarded collect
+        # overflowed gets its own min/max as bounds. The loop
+        # terminates: a bounded region's range shrinks by `buckets`
+        # per level until sub_bounds gives out, and a grid over a
+        # region's own (min, max) puts its min and max in different
+        # cells, so every region it yields holds fewer distinct values.
         final_regions = []
         while pending:
             final_regions.extend(
                 r for r in pending if r["bf"] <= _QUANTILE_COLLECT_CAP
             )
             over = [r for r in pending if r["bf"] > _QUANTILE_COLLECT_CAP]
-            att, big = [], []
-            for r in over:
-                unsplittable = r["bounds"] is None
-                cheap = r["bf"] <= _QUANTILE_ATTEMPT_ROW_CAP
-                (att if unsplittable or cheap else big).append(r)
-            for r in (attempt_many(att) if att else []):
-                if r["bounds"] is None:
-                    raise RuntimeError(
-                        f"exact quantiles of column {c!r}: more than "
-                        f"{_QUANTILE_COLLECT_CAP} distinct values in a "
-                        "range the bucket grid cannot split"
-                    )
-                big.append(r)
+            loose = [r for r in over if r["bounds"] is None]
+            att = [r for r in over if r["bounds"] is not None
+                   and r["bf"] <= _QUANTILE_ATTEMPT_ROW_CAP]
+            big = [r for r in over if r["bounds"] is not None
+                   and r["bf"] > _QUANTILE_ATTEMPT_ROW_CAP]
+            loose += attempt_many(att) if att else []
+            big += own_bounds(loose) if loose else []
             if not big:
                 break
-            pred = big[0]["pred"]
-            for r in big[1:]:
-                pred = pred | r["pred"]
-            rid = None
+            rows_df, rid = tagged(big)
             sub = None
             subs = [bucket_over(*r["bounds"]) for r in big]
             for k, r in enumerate(big):
-                rid = (F.when(r["pred"], F.lit(k)) if rid is None
-                       else rid.when(r["pred"], F.lit(k)))
                 sub = (F.when(r["pred"], subs[k]) if sub is None
                        else sub.when(r["pred"], subs[k]))
             rows = (
-                raw.where(pred)
-                .groupBy(rid.alias("rid"), sub.alias("sb"))
+                rows_df.groupBy(rid, sub.alias("sb"))
                 .agg(F.count(F.lit(1)).alias("bf"))
                 .collect()
             )
@@ -613,16 +634,9 @@ def _exact_quantiles_driver(
         # final job: the needed regions' exact (value, count) rows,
         # aggregated from raw (each region <= CAP rows by construction)
         if final_regions:
-            pred = final_regions[0]["pred"]
-            for r in final_regions[1:]:
-                pred = pred | r["pred"]
-            rid = None
-            for k, r in enumerate(final_regions):
-                rid = (F.when(r["pred"], F.lit(k)) if rid is None
-                       else rid.when(r["pred"], F.lit(k)))
+            rows_df, rid = tagged(final_regions)
             rows = (
-                raw.where(pred)
-                .groupBy(rid.alias("rid"), "v")
+                rows_df.groupBy(rid, "v")
                 .agg(F.count(F.lit(1)).alias("f"))
                 .collect()
             )
@@ -701,7 +715,8 @@ def profile(
       melt/explode plan, no broadcast joins, no materialized value
       histogram, and no separate (count, min, max) pre-job — the
       collected structs already carry those (a column holding NaN or
-      +-inf adds one small min/max job over its finite values).
+      +-inf takes its grid from a min/max job over its finite values
+      inside the rank search).
     """
     if fields is not None:
         known = {f for f, _ in PROFILE_FIELDS}

@@ -60,12 +60,22 @@ def get_spark(
     return spark
 
 
+# cgroup v2 memory limit of this process's container ("max" when unset)
+_CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
 def default_driver_memory() -> str:
-    """Driver heap when $SPARK_DRIVER_MEM is unset: half of physical
-    RAM, capped at 24g (a heap larger than the machine's memory lets
-    the JVM grow until the OS kills it)."""
-    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
-    return f"{min(ram_mb // 2, 24 << 10)}m"
+    """Driver heap when $SPARK_DRIVER_MEM is unset: half of the memory
+    this process may use (physical RAM, or the cgroup memory limit
+    when that is lower), capped at 24g. A heap larger than that
+    memory lets the JVM grow until the OS kills it."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open(_CGROUP_MEMORY_MAX) as f:
+            mem = min(mem, int(f.read()))
+    except (OSError, ValueError):
+        pass  # no cgroup v2 limit, or none set
+    return f"{min((mem >> 20) // 2, 24 << 10)}m"
 
 
 def pyarrow_path(p: str) -> str:

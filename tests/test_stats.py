@@ -154,6 +154,8 @@ def test_exact_quantiles_hot_value_and_refinement_paths(spark, monkeypatch):
     refinement), (c) NaN and +-inf sit in an over-cap column or make
     up most or all of one (their own cells outside the bucket grid),
     (d) a range so wide that width_bucket's arithmetic would overflow,
+    (e) many distinct values that width_bucket's rounding leaves in a
+    sub-grid's edge cell (sub-bucketed over their own min/max),
     and assert the quantiles still match F.percentile's in-plan exact
     interpolation bit-for-bit (NaN equal to NaN)."""
     import pyspark.sql.functions as F
@@ -204,6 +206,19 @@ def test_exact_quantiles_hot_value_and_refinement_paths(spark, monkeypatch):
         "single": one("single", F.lit(2.5), 1),
         "inf_only": plus(one("inf_only", F.lit(inf), 2), -inf),
         "wide": one("wide", (F.col("id") - 100) * F.lit(1e303), 200),
+        # width_bucket rounds -1e-12 - (-1e6) to 1e6, so the tiny
+        # negatives share the middle cell with the tiny positives but
+        # fall below its sub-grid, into an over-cap edge cell
+        "band": plus(
+            one(
+                "band",
+                F.when(F.col("id") < 60, -(F.col("id") + 1) * 1e-12)
+                .otherwise((F.col("id") - 59) * 1e-12),
+                120,
+            ),
+            -1e6,
+            1e6,
+        ),
     }
     for name, df in cases.items():
         got = {

@@ -8,7 +8,12 @@ of columns/groups). Histograms are tiny (n_groups × n_cols × n_bins
 rows) and mergeable, so KS/PSI between any pair of snapshots is
 computed over the histogram table alone — no second pass over raw
 data, and re-checking a new partition against an old baseline needs
-only the stored histogram, not the old data.
+only the stored histogram, not the old data. Because the relation is
+that small, scoring is driver work: it is collected once through
+Arrow and scored by one vectorized numpy scorer (`score_counts`, both
+the histogram and the category-count families), and the scores come
+back as a local relation — Spark windows, joins or a UDF over a few
+hundred rows would cost a dozen jobs and Python-worker tasks.
 
 KS here is the binned approximation D = max|ECDF1 - ECDF2| over shared
 bin boundaries (exact KS needs full sorts of both samples — not viable
@@ -19,8 +24,11 @@ epsilon smoothing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def shared_bins(
@@ -82,70 +90,156 @@ def histogram(
     )
 
 
-def ks_psi(
-    hist: DataFrame,
-    baseline_grp: str | int,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """KS statistic + PSI of every group vs the baseline group, per
-    column, from the histogram table alone.
+def _sum_by(codes: np.ndarray, *values: np.ndarray):
+    """Sorted distinct ``codes`` and the sum of each of ``values`` per
+    code (counts: exact in float64 below 2^53)."""
+    u, inv = np.unique(codes, return_inverse=True)
+    return u, *(np.bincount(inv, v, len(u)).astype(np.int64) for v in values)
 
-    Returns (grp, column, ks, psi). Operates entirely on the tiny
-    histogram relation: a broadcast join on (column, bin) + window
-    cumsums.
-    """
-    base = (
-        hist.where(F.col("grp") == baseline_grp)
-        .groupBy("column", "bin")
-        .agg(F.sum("cnt").alias("bcnt"))
+
+def _running_sums(v: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Left-to-right running sum of ``v`` within each segment: the order
+    Spark's running window and per-group sum add in, so the doubles
+    match (a flat cumsum would carry across segments, reduceat sums
+    pairwise). One vectorized step per position, longest segments
+    first."""
+    order = np.argsort(-lens, kind="stable")
+    s, n = starts[order], lens[order]
+    out, acc = np.empty(len(v)), np.zeros(len(s))
+    for j in range(int(n[0]) if len(n) else 0):
+        k = np.searchsorted(-n, -j)  # segments longer than j
+        idx = s[:k] + j
+        acc[:k] += v[idx]
+        out[idx] = acc[:k]
+    return out
+
+
+def score_counts(cur, base, eps: float = 1e-6) -> dict[str, np.ndarray]:
+    """KS, PSI and two-sample chi-square of every (group, column) pair
+    of ``cur`` = (grp, column, key, cnt) arrays against the baseline
+    ``base`` = (column, key, cnt) arrays. Keys order the cells (bin
+    order for KS); rows repeating a cell add up.
+
+    A pair is scored only when both its own and the baseline's total
+    for the column are positive; callers report the others as skipped.
+    Its cells are the keys with a count on either side — a cell empty
+    on both sides (seen only in some other group) moves none of the
+    scores, and would only inflate dof — so the work is O(rows + pairs
+    × baseline cells), never groups × every cell. Per cell p = cnt/ct,
+    q = bcnt/bt; KS = max |cum p − cum q|; PSI = Σ (p+eps − q−eps)
+    ln((p+eps)/(q+eps)) with unnormalized eps; χ² = Σ (O−E)²/E over
+    both sides with the two-sample expected counts; dof =
+    n_categories − 1. Returns grp, column, ks, psi, chi2, dof and
+    n_categories arrays, one entry per scored pair, sorted by pair."""
+    grp, column, key, cnt = cur
+    n = len(grp)
+    cols, ci = np.unique(np.concatenate([column, base[0]]), return_inverse=True)
+    keys, ki = np.unique(np.concatenate([key, base[1]]), return_inverse=True)
+    grps, gi = np.unique(grp, return_inverse=True)
+    nc, nk = len(cols), len(keys)
+    # baseline cells sorted by (column, key), and each column's total
+    bcell, bcnt = _sum_by(ci[n:] * nk + ki[n:], base[2])
+    bcol = bcell // nk
+    btot = np.bincount(bcol, bcnt, nc).astype(np.int64)
+    # (group, column) pairs with a positive total on both sides
+    pair_of = gi * nc + ci[:n]
+    pair, ctot = _sum_by(pair_of, cnt)
+    keep = (ctot > 0) & (btot[pair % nc] > 0)
+    pair, ctot = pair[keep], ctot[keep]
+    pcol = pair % nc
+    # this run's rows of kept pairs, plus every baseline cell of the
+    # pair's column, summed per (pair, key)
+    mine = np.isin(pair_of, pair)
+    lo = np.searchsorted(bcol, pcol)
+    width = np.searchsorted(bcol, pcol, side="right") - lo
+    at = np.repeat(lo - (np.cumsum(width) - width), width) + np.arange(width.sum())
+    cell, c, b = _sum_by(
+        np.concatenate([pair_of[mine] * nk + ki[:n][mine],
+                        np.repeat(pair, width) * nk + bcell[at] % nk]),
+        np.concatenate([cnt[mine], np.zeros(len(at), dtype=np.int64)]),
+        np.concatenate([np.zeros(mine.sum(), dtype=np.int64), bcnt[at]]),
     )
-    other = hist.where(F.col("grp") != baseline_grp)
-    joined = other.join(F.broadcast(base), ["column", "bin"], "full_outer").select(
-        F.col("grp"), F.col("column"), F.col("bin"),
-        F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-        F.coalesce(F.col("bcnt"), F.lit(0)).alias("bcnt"),
-    )
-    # full_outer leaves grp null where a bin exists only in baseline;
-    # those bins must appear for EVERY group — cross-fill via the
-    # (grp) × (column, bin) frame
-    grps = other.select("grp").distinct()
-    frame = grps.crossJoin(
-        hist.select("column", "bin").distinct()
-    )
-    counts = frame.join(joined.drop("bcnt"), ["grp", "column", "bin"], "left").select(
-        "grp", "column", "bin", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt")
-    ).join(F.broadcast(base), ["column", "bin"], "left").select(
-        "grp", "column", "bin", "cnt", F.coalesce(F.col("bcnt"), F.lit(0)).alias("bcnt")
-    )
-    wtot = Window.partitionBy("grp", "column")
-    wcum = wtot.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    # a column with an EMPTY baseline (all-NULL in the baseline
-    # partition, or drift_columns grew after the baseline was stored)
-    # has sum(bcnt)=0 → q and psi would be NULL and the verdict a
-    # silent NULL-coerced FAIL; such columns are unscorable, so drop
-    # them here — callers emit an explicit skipped marker (the same
-    # contract as the no-baseline-at-all path in plans.pipeline)
-    counts = (
-        counts.withColumn("__btot", F.sum("bcnt").over(wtot))
-        .withColumn("__ctot", F.sum("cnt").over(wtot))
-        .where((F.col("__btot") > 0) & (F.col("__ctot") > 0))
-    )
-    p = F.col("cnt") / F.sum("cnt").over(wtot)
-    q = F.col("bcnt") / F.sum("bcnt").over(wtot)
+    nz = (c > 0) | (b > 0)
+    cell, c, b = cell[nz], c[nz], b[nz]
+    seg = cell // nk
+    starts = np.flatnonzero(np.r_[True, seg[1:] != seg[:-1]]) if len(seg) else seg
+    lens = np.diff(np.r_[starts, len(seg)])
+    ends = starts + lens - 1
+    ct, bt = np.repeat(ctot, lens), np.repeat(btot[pcol], lens)
+    p, q = c / ct, b / bt
     # unnormalized epsilon smoothing (same convention as the
     # oracle-checked q_drift_psi_events): renormalizing by
     # (1 + eps * n_bins) would need the actual bin count — a hard-coded
     # constant silently biases the (ps - qs) term when bins differ
-    ps = p + eps
-    qs = q + eps
-    scored = counts.select(
-        "grp", "column", "bin",
-        F.abs(F.sum(p).over(wcum) - F.sum(q).over(wcum)).alias("cdf_gap"),
-        ((ps - qs) * F.log(ps / qs)).alias("psi_term"),
+    ps, qs = p + eps, q + eps
+    tot = c + b
+    ec, eb = tot * ct / (ct + bt), tot * bt / (ct + bt)
+    gap = np.abs(_running_sums(p, starts, lens) - _running_sums(q, starts, lens))
+    return {
+        "grp": grps[pair // nc],
+        "column": cols[pcol],
+        "ks": np.maximum.reduceat(gap, starts) if len(starts) else gap,
+        "psi": _running_sums((ps - qs) * np.log(ps / qs), starts, lens)[ends],
+        "chi2": _running_sums(
+            (c - ec) * (c - ec) / ec + (b - eb) * (b - eb) / eb, starts, lens
+        )[ends],
+        "dof": lens - 1,
+        "n_categories": lens,
+    }
+
+
+_SCORES = [StructField(n, DoubleType()) for n in ("ks", "psi", "chi2")] + [
+    StructField(n, LongType()) for n in ("dof", "n_categories")]
+
+
+def _scores(counts: DataFrame, key: str, baseline_grp, eps: float, stored) -> DataFrame:
+    """``score_counts`` over a counts relation (grp, column, <key>, cnt)
+    collected once through Arrow, plus ``stored`` baseline rows already
+    on the driver; the scores come back as a local relation (a JVM
+    LocalTableScan, no Python worker) keeping the input's grp type.
+
+    The baseline flag is Spark's own ``grp = baseline_grp``, so its
+    int/string coercion applies; a row where it is NULL (a NULL grp),
+    or whose column or key is NULL, would match nothing in a join and
+    is dropped."""
+    is_base = F.col("grp") == baseline_grp
+    t = counts.where(
+        is_base.isNotNull() & F.col("column").isNotNull() & F.col(key).isNotNull()
+    ).select("grp", "column", key, "cnt", is_base.alias("__is_base")).toArrow()
+    b = t["__is_base"].to_numpy().astype(bool)
+    arrays = [t[c].to_numpy() for c in ("grp", "column", key, "cnt")]
+    base = [a[b] for a in arrays[1:]]
+    if stored is not None:
+        base = [np.concatenate([a, stored[c].to_numpy()])
+                for a, c in zip(base, ("column", key, "cnt"))]
+    s = score_counts([a[~b] for a in arrays], base, eps)
+    schema = StructType([counts.schema["grp"], counts.schema["column"], *_SCORES])
+    return counts.sparkSession.createDataFrame(
+        pa.table({f.name: s[f.name] for f in schema}), schema
     )
-    return scored.groupBy("grp", "column").agg(
-        F.round(F.max("cdf_gap"), 6).alias("ks"),
-        F.round(F.sum("psi_term"), 6).alias("psi"),
+
+
+def ks_psi(
+    hist: DataFrame,
+    baseline_grp: str | int,
+    eps: float = 1e-6,
+    stored: pa.Table | None = None,
+) -> DataFrame:
+    """KS statistic + PSI of every group vs the baseline group, per
+    column, from the histogram table alone.
+
+    Returns (grp, column, ks, psi), rounded to 6 places. The histogram
+    relation is tiny (groups × columns × bins rows): it is collected
+    once and scored on the driver by `score_counts`, so this is one
+    Spark job plus a local relation. ``stored`` (column, bin, cnt) adds
+    baseline counts already on the driver, such as a snapshot of a
+    stored histograms table. A column with an EMPTY baseline (all-NULL
+    in the baseline partition, or drift_columns grew after the baseline
+    was stored) or an empty group is unscorable and has no row; callers
+    emit an explicit skipped marker (the same contract as the
+    no-baseline-at-all path in plans.pipeline)."""
+    return _scores(hist, "bin", baseline_grp, eps, stored).select(
+        "grp", "column", F.round("ks", 6).alias("ks"), F.round("psi", 6).alias("psi")
     )
 
 
@@ -382,6 +476,7 @@ def categorical_psi_chi2(
     counts: DataFrame,
     baseline_grp: str | int,
     eps: float = 1e-6,
+    stored: pa.Table | None = None,
 ) -> DataFrame:
     """PSI + chi-square statistic of every group vs the baseline, per
     column, from the category-counts relation alone (no raw rescans —
@@ -391,61 +486,15 @@ def categorical_psi_chi2(
 
     Categories absent on one side get zero mass (eps-smoothed for PSI;
     chi-square uses the standard two-sample expected counts, which
-    handle zeros natively). Columns with an empty baseline are
-    unscorable and dropped — same contract as ks_psi. Returns
-    (grp, column, psi, chi2, dof, n_categories)."""
-    base = (
-        counts.where(F.col("grp") == baseline_grp)
-        .groupBy("column", "category")
-        .agg(F.sum("cnt").alias("bcnt"))
-    )
-    other = counts.where(F.col("grp") != baseline_grp)
-    # full category frame per (grp, column): categories seen in either
-    # side must appear for both (zero-filled), or PSI misses mass that
-    # moved into a NEW category
-    grps = other.select("grp").distinct()
-    frame = grps.crossJoin(counts.select("column", "category").distinct())
-    j = (
-        frame.join(other, ["grp", "column", "category"], "left")
-        .join(F.broadcast(base), ["column", "category"], "left")
-        .select(
-            "grp", "column", "category",
-            F.coalesce("cnt", F.lit(0)).alias("cnt"),
-            F.coalesce("bcnt", F.lit(0)).alias("bcnt"),
-        )
-    )
-    w = Window.partitionBy("grp", "column")
-    j = (
-        j.withColumn("__ct", F.sum("cnt").over(w))
-        .withColumn("__bt", F.sum("bcnt").over(w))
-        .where((F.col("__ct") > 0) & (F.col("__bt") > 0))
-        # drop categories absent from BOTH sides of this pair (they
-        # exist only in some other group): they carry no information
-        # and would inflate dof
-        .where((F.col("cnt") > 0) | (F.col("bcnt") > 0))
-    )
-    p = F.col("cnt") / F.col("__ct")
-    q = F.col("bcnt") / F.col("__bt")
-    ps, qs = p + eps, q + eps
-    # two-sample chi-square: E_cur = (cnt+bcnt) * ct/(ct+bt),
-    # E_base = (cnt+bcnt) * bt/(ct+bt); X2 = sum (O-E)^2/E over both
-    tot = F.col("cnt") + F.col("bcnt")
-    ec = tot * F.col("__ct") / (F.col("__ct") + F.col("__bt"))
-    eb = tot * F.col("__bt") / (F.col("__ct") + F.col("__bt"))
-    chi_term = (
-        (F.col("cnt") - ec) * (F.col("cnt") - ec) / ec
-        + (F.col("bcnt") - eb) * (F.col("bcnt") - eb) / eb
-    )
-    scored = j.select(
-        "grp", "column",
-        ((ps - qs) * F.log(ps / qs)).alias("psi_term"),
-        chi_term.alias("chi_term"),
-    )
-    return scored.groupBy("grp", "column").agg(
-        F.round(F.sum("psi_term"), 6).alias("psi"),
-        F.round(F.sum("chi_term"), 6).alias("chi2"),
-        (F.count(F.lit(1)) - 1).cast("bigint").alias("dof"),
-        F.count(F.lit(1)).cast("bigint").alias("n_categories"),
+    handle zeros natively); categories seen only in some other group
+    are not part of the pair and do not count towards dof. Columns with
+    an empty baseline are unscorable and dropped — same contract, same
+    driver-side scorer and same ``stored`` baseline rows (column,
+    category, cnt) as ks_psi. Returns (grp, column, psi, chi2, dof,
+    n_categories), psi and chi2 rounded to 6 places."""
+    return _scores(counts, "category", baseline_grp, eps, stored).select(
+        "grp", "column", F.round("psi", 6).alias("psi"),
+        F.round("chi2", 6).alias("chi2"), "dof", "n_categories",
     )
 
 
@@ -457,23 +506,20 @@ def with_chi2_pvalue(scores: DataFrame) -> DataFrame:
     sample size with effect size — use PSI for effect size and the
     p-value for is-this-noise; both ride on the same tiny relation.
 
-    Arrow-batched pandas UDF over the scores relation (n_groups x
-    n_cols rows — never raw data), computing via the fully vectorized
-    chi2_sf_np — no Python loop over the batch. Invalid dof and
-    non-convergence come back NaN, which Arrow maps to null p_value
-    (the surfaced don't-trust-this signal)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    The scores relation (n_groups x n_cols rows — never raw data) is
+    collected through Arrow and the p-values computed on the driver by
+    the fully vectorized chi2_sf_np; the result is a local relation
+    with p_value rounded to 8 places. Invalid dof and non-convergence
+    come back NaN, which becomes a null p_value (the surfaced
+    don't-trust-this signal)."""
     from advanced_data_profile_spark.functions.numeric import chi2_sf_np
 
-    # no type hints: pyspark resolves annotations at decoration time
-    # and the local `pd` alias isn't visible there
-    @pandas_udf("double")
-    def _sf(chi2, dof):
-        c = np.asarray(pd.to_numeric(chi2, errors="coerce"), dtype=np.float64)
-        d = np.asarray(pd.to_numeric(dof, errors="coerce"), dtype=np.float64)
-        return pd.Series(chi2_sf_np(c, d))
-
-    return scores.withColumn("p_value", F.round(_sf("chi2", "dof"), 8))
+    t = scores.toArrow()
+    p = chi2_sf_np(
+        np.asarray(t["chi2"].to_numpy(), dtype=np.float64),
+        np.asarray(t["dof"].to_numpy(), dtype=np.float64),
+    )
+    schema = StructType([*scores.schema.fields, StructField("p_value", DoubleType())])
+    return scores.sparkSession.createDataFrame(
+        t.append_column("p_value", pa.array(p, from_pandas=True)), schema
+    ).withColumn("p_value", F.round("p_value", 8))

@@ -112,10 +112,12 @@ def decode_file_tasks(
     leg, covering exactly the pending hive partitions. File listing is
     per part-dir via the Hadoop FS API (pruning = listing only pending
     dirs); row-group counts come from a DISTRIBUTED footer read (one
-    tiny Spark job), not a driver loop over file opens. At real-table
-    scale the task list is the same O(files) driver state Spark's own
-    file index holds; an Iceberg deployment would derive it from the
-    manifest's per-file metrics instead of footer reads."""
+    tiny Spark job over the file list, built from an Arrow table so it
+    plans as a JVM LocalTableScan with no pickled-row stage in front),
+    not a driver loop over file opens. At real-table scale the task
+    list is the same O(files) driver state Spark's own file index
+    holds; an Iceberg deployment would derive it from the manifest's
+    per-file metrics instead of footer reads."""
     import pyarrow as pa
 
     from advanced_data_profile_spark.session import (
@@ -137,9 +139,9 @@ def decode_file_tasks(
         files += [(p, int(pid)) for p in hadoop_list_files(spark, d)]
     if not files:
         return []
-    fdf = spark.createDataFrame(files, "path string, part_id int").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
+    fdf = spark.createDataFrame(
+        pa.table(list(zip(*files)), names=["path", "part_id"]), "path string, part_id int"
+    ).repartition(min(len(files), spark.sparkContext.defaultParallelism))
 
     def footers(it):
         import pyarrow.parquet as pq
@@ -191,10 +193,11 @@ def validate_payloads_files(
     verdicts (6 narrow columns) are the only rows that ever cross
     into the JVM.
 
-    Distribution: the task relation (path, part_id, row_group) is
-    round-robin repartitioned so each Spark task streams its row
-    group's batches through the same zero-copy _validate_arrow kernel
-    as the JVM leg — identical output, property- and parity-tested.
+    Distribution: the task relation (path, part_id, row_group), an
+    Arrow table (a LocalTableScan), is round-robin repartitioned so
+    each Spark task streams its row group's batches through the same
+    zero-copy _validate_arrow kernel as the JVM leg — identical
+    output, property- and parity-tested.
     Granularity is one row group (Spark's own split floor for
     parquet); callers should prefer the JVM leg when the task count
     can't cover the cluster (pipeline 'auto' mode checks this).
@@ -210,7 +213,8 @@ def validate_payloads_files(
             f"{list(part_ids)[:5]}..."
         )
     tdf = spark.createDataFrame(
-        tasks, "path string, part_id int, row_group int"
+        pa.table(list(zip(*tasks)), names=["path", "part_id", "row_group"]),
+        "path string, part_id int, row_group int",
     ).repartition(min(len(tasks), max_tasks_per_partition_cap))
 
     def decode_rgs(it):

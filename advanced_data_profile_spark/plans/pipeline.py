@@ -21,9 +21,11 @@ inputs exist. Legs and their `after=` edges, in declaration order:
   decode_plan               row-group task listing for the payload pass
   decode_verify             after decode_plan: the payload pass, the only
                             scan reading `bytes`
-  histograms                stored-baseline snapshot, bin edges, counts
+  histograms                stored-baseline snapshot (Arrow, kept on
+                            the driver), bin edges, counts
   write_histograms          after histograms
-  drift_results             after histograms: KS/PSI verdicts
+  drift_results             after histograms: one Arrow collect of the
+                            counts, KS/PSI scored on the driver, verdicts
   category_counts, write_category_counts, drift_results_categorical
                             the same three legs for categorical drift
   profile_and_counts        profile + row-wise constraint counts FUSED
@@ -52,7 +54,10 @@ one metadata scan for profile_and_counts, one for unique_referential,
 one bytes scan for decode_verify, one for each drift family's counts
 (plus, on fresh runs, a tiny min/max agg that pins bin edges without
 waiting for the profile) and a violation-sample scan that reads only
-violating rows.
+violating rows. Relations bounded by partitions × columns × bins stay
+off the cluster: each drift family's persisted counts are collected
+once and scored on the driver, and its verdicts are written from a
+local relation, so a scoring leg is that collect plus its write.
 
 Uniqueness scope note: within one run the check is global across the
 partitions being processed (cross-partition duplicates are detected and
@@ -171,10 +176,9 @@ class _Legs:
         self.errors: list[tuple[str, BaseException]] = []
         self.persisted: list[DataFrame] = []
 
-    def persist(self, d: DataFrame, materialize: bool = True) -> DataFrame:
+    def persist(self, d: DataFrame) -> DataFrame:
         self.persisted.append(d.persist())
-        if materialize:
-            d.count()
+        d.count()
         return d
 
     def leg(self, name: str, fn, after: tuple | list = (), persist: bool = False):
@@ -488,22 +492,19 @@ def _run_pipeline(
 
         def _counts():
             # resumed run whose baseline partition is already done: the
-            # stored baseline is the comparison target, SNAPSHOT
-            # driver-side before write_<table> dynamic-overwrites the
-            # files a lazy plan would re-read (it is tiny). Existence is
-            # a FileSystem-API probe (output may live on hdfs:// or
+            # stored baseline is the comparison target, SNAPSHOT to the
+            # driver through Arrow before write_<table> dynamic-overwrites
+            # the files a lazy plan would re-read (it is tiny). Existence
+            # is a FileSystem-API probe (output may live on hdfs:// or
             # s3a://), not a read-and-catch: a real read error must
             # propagate, not be mistaken for 'first run'.
-            rows, schema = [], None
+            base = None
             if not base_pending and hadoop_path_exists(spark, path):
-                stored = (
-                    spark.read.parquet(path)
-                    .where(F.col("grp") == cfg.baseline_part)
-                    .select("grp", "column", *keys, "cnt")
-                )
-                rows, schema = stored.collect(), stored.schema
-            base = spark.createDataFrame(rows, schema) if rows else None
-            return base, legs.persist(count(cols, rows))
+                base = spark.read.parquet(path).where(
+                    F.col("grp") == cfg.baseline_part
+                ).select("column", *keys, "cnt").toArrow()
+                base = base if base.num_rows else None
+            return base, legs.persist(count(cols, base))
 
         def _score(counts):
             base, cur = counts
@@ -514,16 +515,13 @@ def _run_pipeline(
                 # "failed" rows would be a silent lie
                 drift_summary[f"{prefix}skipped_no_baseline"] = sorted(cols)
                 return
-            if base is not None:
-                cur = cur.unionByName(base, allowMissingColumns=True)
-            scores = legs.persist(score(cur, cfg.baseline_part), materialize=False)
+            # a local relation scored on the driver: collecting its
+            # pairs below runs no Spark job
+            scores = score(cur, cfg.baseline_part, stored=base)
             # cells the scorer dropped (a column empty in the baseline
             # or in one group) get explicit per-cell skipped markers —
             # never a NULL-coerced FAIL verdict and never a silent drop
-            scored = {
-                (str(r.grp), r.column)
-                for r in scores.select("grp", "column").collect()
-            }
+            scored = {(str(g), c) for g, c in scores.select("grp", "column").collect()}
             skipped = [
                 {"part_id": g, "column": c}
                 for g in expect_grps for c in cols if (g, c) not in scored
@@ -541,14 +539,15 @@ def _run_pipeline(
         legs.leg(name, _score, after=[table])
         return [table, f"write_{table}", name]
 
-    def _histogram(cols, stored_rows):
+    def _histogram(cols, stored):
         # the stored baseline's bin edges PIN the grid (bins from
         # different edges are not comparable); columns it lacks
         # (all-NULL there, drift_columns grew, or a fresh run) get
         # edges from a tiny min/max agg over the pending partitions —
         # the same F.min/F.max(cast double) the profile computes, so
         # the drift legs never wait for the profile
-        bounds = {r.column: (r.lo, r.hi) for r in stored_rows}
+        rows = stored.to_pylist() if stored is not None else []
+        bounds = {r["column"]: (r["lo"], r["hi"]) for r in rows}
         missing = [c for c in cols if c not in bounds]
         if missing:
             bounds.update(shared_bins(meta_nb, missing))

@@ -110,6 +110,28 @@ def rowwise_results_from_agg(
     )
 
 
+def rowwise_results_arrow(agg, rowwise: list[Check]):
+    """`rowwise_results_from_agg` over a wide aggregate already on the
+    driver: ``agg`` is a pyarrow Table with part_id, `n_rows` and the
+    rowwise_count_exprs columns (one row per partition); returns the
+    same RESULT_COLUMNS rows as a pyarrow Table."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    part, n = pc.cast(agg["part_id"], pa.string()), agg.num_rows
+    return pa.concat_tables([
+        pa.table({
+            "part_id": part,
+            "constraint": pa.array([c.name] * n, pa.string()),
+            "kind": pa.array([c.kind] * n, pa.string()),
+            "n_rows": agg["n_rows"],
+            "n_violations": agg[f"__v_{i}"],
+            "passed": pc.equal(agg[f"__v_{i}"], 0),
+        })
+        for i, c in enumerate(rowwise)
+    ], promote_options="default")
+
+
 def rowwise_violation_samples(
     df: DataFrame,
     rowwise: list[Check],

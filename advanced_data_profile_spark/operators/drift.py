@@ -26,9 +26,10 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def shared_bins(
@@ -188,35 +189,40 @@ def score_counts(cur, base, eps: float = 1e-6) -> dict[str, np.ndarray]:
     }
 
 
-_SCORES = [StructField(n, DoubleType()) for n in ("ks", "psi", "chi2")] + [
-    StructField(n, LongType()) for n in ("dof", "n_categories")]
-
-
-def _scores(counts: DataFrame, key: str, baseline_grp, eps: float, stored) -> DataFrame:
-    """``score_counts`` over a counts relation (grp, column, <key>, cnt)
-    collected once through Arrow, plus ``stored`` baseline rows already
-    on the driver; the scores come back as a local relation (a JVM
-    LocalTableScan, no Python worker) keeping the input's grp type.
-
-    The baseline flag is Spark's own ``grp = baseline_grp``, so its
-    int/string coercion applies; a row where it is NULL (a NULL grp),
-    or whose column or key is NULL, would match nothing in a join and
-    is dropped."""
-    is_base = F.col("grp") == baseline_grp
-    t = counts.where(
-        is_base.isNotNull() & F.col("column").isNotNull() & F.col(key).isNotNull()
-    ).select("grp", "column", key, "cnt", is_base.alias("__is_base")).toArrow()
-    b = t["__is_base"].to_numpy().astype(bool)
+def _scores(spark, counts: pa.Table, key: str, is_base, eps: float, stored) -> DataFrame:
+    """``score_counts`` over a counts table (grp, column, <key>, cnt)
+    already on the driver, whose baseline rows ``is_base`` (a boolean
+    array over its rows) flags, plus ``stored`` baseline rows; the
+    scores come back as a local relation (a JVM LocalTableScan, no
+    Python worker) keeping the input's grp and column types. A row
+    whose flag, column or key is NULL would match nothing in a join
+    and is dropped."""
+    keep = pc.and_(pc.and_(pc.is_valid(is_base), pc.is_valid(counts["column"])),
+                   pc.is_valid(counts[key]))
+    t = counts.filter(keep)
+    b = pc.filter(is_base, keep).to_numpy(zero_copy_only=False).astype(bool)
     arrays = [t[c].to_numpy() for c in ("grp", "column", key, "cnt")]
     base = [a[b] for a in arrays[1:]]
     if stored is not None:
         base = [np.concatenate([a, stored[c].to_numpy()])
                 for a, c in zip(base, ("column", key, "cnt"))]
     s = score_counts([a[~b] for a in arrays], base, eps)
-    schema = StructType([counts.schema["grp"], counts.schema["column"], *_SCORES])
-    return counts.sparkSession.createDataFrame(
-        pa.table({f.name: s[f.name] for f in schema}), schema
-    )
+    return spark.createDataFrame(pa.table({
+        "grp": pa.array(s.pop("grp"), counts.schema.field("grp").type),
+        "column": pa.array(s.pop("column"), counts.schema.field("column").type),
+        **s,
+    }))
+
+
+def _collect(counts: DataFrame, key: str, baseline_grp):
+    """(spark, counts table, baseline flags) of a counts relation,
+    collected once through Arrow. The flag is Spark's own
+    ``grp = baseline_grp``, so its int/string coercion applies (NULL
+    for a NULL grp)."""
+    t = counts.select(
+        "grp", "column", key, "cnt", (F.col("grp") == baseline_grp).alias("__is_base")
+    ).toArrow()
+    return counts.sparkSession, t.drop_columns("__is_base"), t["__is_base"]
 
 
 def ks_psi(
@@ -238,7 +244,15 @@ def ks_psi(
     was stored) or an empty group is unscorable and has no row; callers
     emit an explicit skipped marker (the same contract as the
     no-baseline-at-all path in plans.pipeline)."""
-    return _scores(hist, "bin", baseline_grp, eps, stored).select(
+    return ks_psi_arrow(*_collect(hist, "bin", baseline_grp), eps, stored)
+
+
+def ks_psi_arrow(spark, hist: pa.Table, is_base, eps: float = 1e-6,
+                 stored: pa.Table | None = None) -> DataFrame:
+    """`ks_psi` over a histogram table already on the driver (a pyarrow
+    Table with grp, column, bin and cnt), whose baseline rows the
+    boolean array ``is_base`` flags: no Spark job at all."""
+    return _scores(spark, hist, "bin", is_base, eps, stored).select(
         "grp", "column", F.round("ks", 6).alias("ks"), F.round("psi", 6).alias("psi")
     )
 
@@ -492,7 +506,17 @@ def categorical_psi_chi2(
     driver-side scorer and same ``stored`` baseline rows (column,
     category, cnt) as ks_psi. Returns (grp, column, psi, chi2, dof,
     n_categories), psi and chi2 rounded to 6 places."""
-    return _scores(counts, "category", baseline_grp, eps, stored).select(
+    return categorical_psi_chi2_arrow(
+        *_collect(counts, "category", baseline_grp), eps, stored
+    )
+
+
+def categorical_psi_chi2_arrow(spark, counts: pa.Table, is_base, eps: float = 1e-6,
+                               stored: pa.Table | None = None) -> DataFrame:
+    """`categorical_psi_chi2` over a category-counts table already on
+    the driver (grp, column, category, cnt), whose baseline rows the
+    boolean array ``is_base`` flags: no Spark job at all."""
+    return _scores(spark, counts, "category", is_base, eps, stored).select(
         "grp", "column", F.round("psi", 6).alias("psi"),
         F.round("chi2", 6).alias("chi2"), "dof", "n_categories",
     )

@@ -185,10 +185,15 @@ def column_profile_struct(
             # Unlike percentile_approx's GK summary, the KLL state is
             # MERGEABLE (kll_merge_agg_double — see operators/sketches),
             # so per-partition profile state rolls up without rescans.
-            # k=KLL_K → ~0.2% normalized rank error.
+            # k=KLL_K → ~0.2% normalized rank error. A group with no
+            # non-NULL, non-NaN value leaves the sketch empty, which the
+            # quantile getter rejects: its quantiles are NULL.
             sk = F.kll_sketch_agg_double(cd, F.lit(KLL_K))
             q = F.array(*[
-                F.kll_sketch_get_quantile_double(sk, F.lit(p))
+                F.when(
+                    F.kll_sketch_get_n_double(sk) > 0,
+                    F.kll_sketch_get_quantile_double(sk, F.lit(p)),
+                )
                 for p in (0.25, 0.5, 0.75)
             ])
         elif with_quantiles:

@@ -9,8 +9,9 @@ The manifest is an append-only table of per-partition run records:
 Resume = anti-join pending partitions against DONE manifest rows (J5 in
 SURVEY.md §2.6) — a broadcast anti-join since the manifest is tiny
 relative to the data. Idempotence: result tables are written with
-dynamic partition overwrite keyed by part_id, so re-processing a
-partition replaces (not duplicates) its output; the manifest append of
+dynamic partition overwrite keyed by part_id (`write_partitions` below
+for the driver-sized ones), so re-processing a partition replaces (not
+duplicates) its output; the manifest append of
 a `done` row is the commit point and is written AFTER the results.
 
 Storage is parquet-append; on a real cluster this would be an Iceberg
@@ -20,7 +21,6 @@ table with snapshot isolation — same reader/writer call shape.
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from advanced_data_profile_spark.session import hadoop_path_exists, pyarrow_path
+from advanced_data_profile_spark.session import hadoop_path_exists, pyarrow_fs
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
@@ -105,7 +105,6 @@ class Manifest:
         it back (hdfs:// and s3a:// go through pyarrow's own HDFS and
         S3 filesystems)."""
         import pyarrow as pa
-        import pyarrow.fs as pafs
         import pyarrow.parquet as pq
 
         now = time.time()
@@ -130,13 +129,79 @@ class Manifest:
             ("finished_at", pa.float64()), ("n_rows", pa.int64()),
             ("metrics_json", pa.string()), ("input_path", pa.string()),
         ]))
-        target = pyarrow_path(self.path)
-        if "://" not in target:
-            target = os.path.abspath(target)  # from_uri needs a scheme or /
-        fs, root = pafs.FileSystem.from_uri(target)
+        fs, root = pyarrow_fs(self.path)
         fs.create_dir(root, recursive=True)
         fname = f"part-{uuid.uuid4().hex}.parquet"
         pq.write_table(table, f"{root}/{fname}", filesystem=fs)
+
+
+# characters Spark escapes in a partition directory value (%XX), as its
+# partitionBy writer names them; NULL gets Hive's default partition name
+_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^') | {chr(i) for i in range(1, 32)}
+_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _part_dir(v) -> str:
+    if v is None:
+        return f"part_id={_NULL_PART}"
+    return "part_id=" + "".join(f"%{ord(c):02X}" if c in _ESCAPE else c for c in str(v))
+
+
+def write_partitions(table, path: str, mode: str = "overwrite") -> None:
+    """Driver-side write of a driver-sized result table: ``table`` (a
+    pyarrow Table with a ``part_id`` column) becomes one parquet file
+    per part_id=<v> directory under the Hadoop-URI table ``path``, the
+    layout Spark's partitionBy writer produces — part_id lives in the
+    directory names only, and the files keep the table's other columns
+    and Arrow types, so spark.read.parquet reads the table back as if
+    Spark had written it. Like record_many, milliseconds of pyarrow
+    instead of a Spark job per write.
+
+    ``overwrite`` has the semantics of Spark's dynamic partition
+    overwrite. Every new file is first written under the hidden
+    ``.staging`` directory at the table root (Spark and pyarrow.dataset
+    skip ./_-prefixed names), then each present partition's directory
+    is emptied and its file renamed into it; partitions not in
+    ``table`` are untouched. The staging directory a crashed overwrite
+    left behind is removed before anything is written. ``append`` adds
+    one file per present partition, written under a hidden name in its
+    directory and then renamed."""
+    import pyarrow.compute as pc
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    fs, root = pyarrow_fs(path)
+    staging = f"{root}/.staging"
+
+    def drop_staging():
+        if fs.get_file_info(staging).type != pafs.FileType.NotFound:
+            fs.delete_dir(staging)
+
+    if mode == "overwrite":
+        drop_staging()
+    fs.create_dir(root, recursive=True)
+    # sorted, each part_id is one contiguous slice; value_counts keeps
+    # the order of first appearance
+    table = table.sort_by("part_id")
+    vc = pc.value_counts(table["part_id"])
+    data = table.drop_columns("part_id")
+    moves, start = [], 0
+    for v, n in zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()):
+        d, name = _part_dir(v), f"part-{uuid.uuid4().hex}.parquet"
+        tmp = f"{staging}/{d}/{name}" if mode == "overwrite" else f"{root}/{d}/.{name}"
+        fs.create_dir(tmp.rsplit("/", 1)[0], recursive=True)
+        pq.write_table(data.slice(start, n), tmp, filesystem=fs)
+        moves.append((tmp, f"{root}/{d}", name))
+        start += n
+    for tmp, d, name in moves:
+        if mode == "overwrite":
+            fs.delete_dir_contents(d, missing_dir_ok=True)
+        fs.create_dir(d, recursive=True)
+        fs.move(tmp, f"{d}/{name}")
+    if mode == "overwrite":
+        drop_staging()
 
 
 def new_run_id() -> str:

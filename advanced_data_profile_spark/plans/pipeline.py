@@ -20,33 +20,39 @@ inputs exist. Legs and their `after=` edges, in declaration order:
                             crashed backfill left its marker)
   decode_plan               row-group task listing for the payload pass
   decode_verify             after decode_plan: the payload pass, the only
-                            scan reading `bytes`
+                            scan reading `bytes`; its per-partition
+                            verdicts collected through Arrow
   histograms                stored-baseline snapshot (Arrow, kept on
-                            the driver), bin edges, counts
+                            the driver), bin edges, and this run's
+                            counts collected once through Arrow
   write_histograms          after histograms
-  drift_results             after histograms: one Arrow collect of the
-                            counts, KS/PSI scored on the driver, verdicts
+  drift_results             after histograms: KS/PSI scored on the
+                            driver over the same collected counts,
+                            verdicts
   category_counts, write_category_counts, drift_results_categorical
                             the same three legs for categorical drift
   profile_and_counts        profile + row-wise constraint counts FUSED
-                            into one wide aggregation (exact mode:
-                            separate `profile` and `constraint_counts`)
-  profiles                  after profile_and_counts (melt, no scan)
-  rowwise_results           after profile_and_counts (melt, no scan)
+                            into one wide aggregation, collected once
+                            through Arrow: one row per partition (exact
+                            mode: separate `profile` and
+                            `constraint_counts` collects)
   unique_referential        uniqueness (two-stage agg, global within the
-                            run) + referential anti-join
+                            run) + referential anti-join, collected
   unique_violations         after unique_referential
   violations                row-wise violation samples (pushdown)
   write_row_sample          no inputs
-  write_column_profiles     after profiles
-  write_profile_sketches    after profile_and_counts
+  write_column_profiles     after profile_and_counts (melted on the
+                            driver)
+  write_profile_sketches    after profile_and_counts (melted on the
+                            driver)
   write_violations          after violations, unique_violations
-  write_constraint_results  after rowwise_results, unique_referential
+  write_constraint_results  after profile_and_counts, unique_referential
   write_verdicts            after write_constraint_results,
                             decode_verify (append to the same table)
   id_index_append           after every leg above
   id_index_supersede        after id_index_append (backfills only)
-  manifest                  after every leg above: the commit point
+  manifest                  after every leg above, its row counts from
+                            profile_and_counts: the commit point
   global_uniqueness         after manifest, when cfg.global_unique
 
 Scan economy per run (any number of partitions/columns, approx mode):
@@ -55,9 +61,17 @@ one bytes scan for decode_verify, one for each drift family's counts
 (plus, on fresh runs, a tiny min/max agg that pins bin edges without
 waiting for the profile) and a violation-sample scan that reads only
 violating rows. Relations bounded by partitions × columns × bins stay
-off the cluster: each drift family's persisted counts are collected
-once and scored on the driver, and its verdicts are written from a
-local relation, so a scoring leg is that collect plus its write.
+off the cluster: each is collected once through Arrow and written from
+the driver by `manifest.write_partitions` (pyarrow, one file per
+part_id directory, no Spark job). column_profiles, profile_sketches,
+the row-wise constraint_results rows and the manifest's row counts all
+come from the one collected wide row per partition; constraint_results
+adds the collected uniqueness/referential verdicts, then the decode
+verdicts as an append; histograms and category_counts are the same
+collected counts their drift family scores on the driver; both
+drift_results tables are written from local verdict relations. Only
+violations (every violating key, unbounded) and row_sample are Spark
+writes.
 
 Uniqueness scope note: within one run the check is global across the
 partitions being processed (cross-partition duplicates are detected and
@@ -74,6 +88,8 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -81,10 +97,10 @@ from advanced_data_profile_spark.operators import constraints as C
 from advanced_data_profile_spark.operators.drift import (
     categorical_counts,
     categorical_drift_verdicts,
-    categorical_psi_chi2,
+    categorical_psi_chi2_arrow,
     drift_verdicts,
     histogram,
-    ks_psi,
+    ks_psi_arrow,
     shared_bins,
 )
 from advanced_data_profile_spark.operators.image_verify import (
@@ -92,14 +108,16 @@ from advanced_data_profile_spark.operators.image_verify import (
     validation_verdicts,
 )
 from advanced_data_profile_spark.operators.stats import (
-    PROFILE_FIELDS,
-    SKETCH_FIELDS,
     SKIP_PROFILE_TYPES,
     column_profile_struct,
     profile,
     sketch_state_struct,
 )
-from advanced_data_profile_spark.plans.manifest import Manifest, new_run_id
+from advanced_data_profile_spark.plans.manifest import (
+    Manifest,
+    new_run_id,
+    write_partitions,
+)
 from advanced_data_profile_spark.session import (
     hadoop_path_exists,
     hadoop_remove,
@@ -154,9 +172,9 @@ class _Legs:
     ``leg(name, fn, after=[...])`` starts one driver thread per leg, in
     declaration order. The thread waits for its ``after`` legs, then
     calls ``fn`` with their results; with ``persist=True`` the returned
-    DataFrame is persisted and materialized (small result relations
-    are, before their writes: every .write otherwise re-computes its
-    full lineage). The leg's Spark jobs carry its name as their job
+    DataFrame is persisted and materialized (the violation samples are,
+    before their Spark write: a .write otherwise re-computes its full
+    lineage). The leg's Spark jobs carry its name as their job
     description, and ``times[name]`` is its [start, end] in seconds
     from the runner's creation. Once any leg has failed, legs that have
     not started yet are skipped.
@@ -176,11 +194,6 @@ class _Legs:
         self.errors: list[tuple[str, BaseException]] = []
         self.persisted: list[DataFrame] = []
 
-    def persist(self, d: DataFrame) -> DataFrame:
-        self.persisted.append(d.persist())
-        d.count()
-        return d
-
     def leg(self, name: str, fn, after: tuple | list = (), persist: bool = False):
         deps = [self.threads[a] for a in after]
         sc = self.spark.sparkContext
@@ -194,7 +207,10 @@ class _Legs:
             start = time.time() - self.t0
             try:
                 out = fn(*(self.results[a] for a in after))
-                self.results[name] = self.persist(out) if persist else out
+                if persist:
+                    self.persisted.append(out.persist())
+                    out.count()
+                self.results[name] = out
             except BaseException as e:
                 self.errors.append((name, e))
             finally:
@@ -407,7 +423,7 @@ def _run_pipeline(
         # FIFO scheduling lets those back-fill the cores it leaves idle.
         # Planning is its own leg, so decode_verify times the job alone.
         legs.leg("decode_plan", lambda: _payload_verdicts(spark, images_path, pending_ids, cfg))
-        legs.leg("decode_verify", lambda v: v, after=["decode_plan"], persist=True)
+        legs.leg("decode_verify", lambda v: v.toArrow(), after=["decode_plan"])
     # partition pruning: isin on the partition column prunes at the scan
     df = images.where(F.col("part_id").isin(pending_ids))
     meta = df.withColumn("caption_len", F.length("caption"))
@@ -430,26 +446,20 @@ def _run_pipeline(
     # scans that read ~2% of each file); the decode pass keeps its own
     # split sizing
     spark.conf.set(SPLIT_CONF, "256m")
-    n_out = min(spark.sparkContext.defaultParallelism, max(1, len(pending_ids)))
 
-    def _write(d: DataFrame, table: str, mode: str = "overwrite") -> None:
-        # every part_id-partitioned result write: hash-repartition by
-        # the partition column so the write TASKS cover the dynamic
-        # partitions in parallel while each partition dir still gets
-        # exactly ONE data file (a partition value lands in exactly one
-        # task). coalesce(1) would serialize every partition's parquet
-        # writer through a single task (0.65s -> 0.28s per write job at
-        # the 128k steady fixture, same file count).
-        d.repartition(n_out, "part_id").write.mode(mode).partitionBy(
-            "part_id"
-        ).parquet(f"{output_dir}/{table}")
+    def _store(t: pa.Table, table: str, mode: str = "overwrite") -> None:
+        # every driver-sized result table: one pyarrow file per part_id
+        # directory, no Spark job
+        write_partitions(t, f"{output_dir}/{table}", mode)
 
     if cfg.approx:
         # FUSED wide agg: every profile stat AND every row-wise
-        # constraint count in one scan/job; the melts reuse its
-        # persisted rows (one per partition) — no extra scan. Built
-        # before the metadata legs start: analysing this wide plan
-        # while they run would hold their jobs back (~1 s at 4 cores).
+        # constraint count in one scan/job, collected once through
+        # Arrow (one row per partition); column_profiles,
+        # profile_sketches, the row-wise verdicts and the manifest's
+        # row counts are all built from it on the driver. Built before
+        # the metadata legs start: analysing this wide plan while they
+        # run would hold their jobs back (~1 s at 4 cores).
         dtypes = {f.name: f.dataType for f in meta_nb.schema.fields}
         prof_cols = [
             f.name for f in meta_nb.schema.fields
@@ -464,11 +474,14 @@ def _run_pipeline(
             *C.rowwise_count_exprs(rowwise),
         )
 
-        def _melt(w: DataFrame, prefix: str, fields) -> DataFrame:
-            s = w.select("part_id", F.explode(
-                F.array(*[F.col(f"{prefix}{c}") for c in prof_cols])
-            ).alias("s"))
-            return s.select("part_id", *[F.col(f"s.{f}").alias(f) for f, _ in fields])
+        def _melt(w: pa.Table, prefix: str) -> pa.Table:
+            # one row per (partition, column): part_id, then the fields
+            # of the column's struct
+            return pa.concat_tables([
+                pa.Table.from_struct_array(w[f"{prefix}{c}"]).add_column(
+                    0, "part_id", w["part_id"])
+                for c in prof_cols
+            ], promote_options="default")
 
     # unscorable drift cells are REPORTED, not silently dropped and not
     # disguised as fake 0.0 timing entries: this dict lands in the
@@ -482,9 +495,10 @@ def _run_pipeline(
     def _drift(name, table, cols, count, score, verdicts, keys, prefix):
         """One drift family as three legs, independent of every
         metadata leg so they run with the compute wave: ``table``
-        snapshots the stored baseline and persists this run's counts,
-        ``write_<table>`` stores them per partition, and ``name``
-        scores them against the baseline and writes the verdicts."""
+        snapshots the stored baseline and collects this run's counts
+        once through Arrow, ``write_<table>`` stores them per
+        partition, and ``name`` scores the same table against the
+        baseline on the driver and writes the verdicts."""
         cols = [c for c in cols if c in meta.columns]
         if not cols:
             return []
@@ -504,7 +518,7 @@ def _run_pipeline(
                     F.col("grp") == cfg.baseline_part
                 ).select("column", *keys, "cnt").toArrow()
                 base = base if base.num_rows else None
-            return base, legs.persist(count(cols, base))
+            return base, count(cols, base).toArrow()
 
         def _score(counts):
             base, cur = counts
@@ -515,9 +529,12 @@ def _run_pipeline(
                 # "failed" rows would be a silent lie
                 drift_summary[f"{prefix}skipped_no_baseline"] = sorted(cols)
                 return
-            # a local relation scored on the driver: collecting its
-            # pairs below runs no Spark job
-            scores = score(cur, cfg.baseline_part, stored=base)
+            # the baseline is the partition the pipeline names, compared
+            # canonically as a string like every other part_id here;
+            # scored on the driver into a local relation, so collecting
+            # its pairs below runs no Spark job
+            is_base = pc.equal(pc.cast(cur["grp"], pa.string()), str(cfg.baseline_part))
+            scores = score(spark, cur, is_base, stored=base)
             # cells the scorer dropped (a column empty in the baseline
             # or in one group) get explicit per-cell skipped markers —
             # never a NULL-coerced FAIL verdict and never a silent drop
@@ -528,12 +545,12 @@ def _run_pipeline(
             ]
             if skipped:
                 drift_summary[f"{prefix}skipped"] = skipped
-            _write(verdicts(scores), name)
+            _store(verdicts(scores).toArrow(), name)
 
         legs.leg(table, _counts)
         legs.leg(
             f"write_{table}",
-            lambda c: _write(c[1].withColumn("part_id", F.col("grp")), table),
+            lambda c: _store(c[1].append_column("part_id", c[1]["grp"]), table),
             after=[table],
         )
         legs.leg(name, _score, after=[table])
@@ -557,36 +574,31 @@ def _run_pipeline(
     if cfg.drift:
         drift_legs = _drift(
             "drift_results", "histograms", cfg.drift_columns, _histogram,
-            ks_psi,
+            ks_psi_arrow,
             lambda s: drift_verdicts(s, cfg.ks_threshold, cfg.psi_threshold),
             ("bin", "lo", "hi"), "",
         ) + _drift(
             "drift_results_categorical", "category_counts",
             cfg.categorical_drift_columns,
             lambda cols, _: categorical_counts(meta, cols, "part_id"),
-            categorical_psi_chi2,
+            categorical_psi_chi2_arrow,
             lambda s: categorical_drift_verdicts(s, cfg.psi_threshold),
             ("category",), "categorical_",
         )
 
     if cfg.approx:
-        prof, counts = "profiles", "rowwise_results"
-        legs.leg("profile_and_counts", lambda: wide, persist=True)
-        legs.leg(prof, lambda w: _melt(w, "__p_", PROFILE_FIELDS),
-                 after=["profile_and_counts"], persist=True)
-        legs.leg(counts, lambda w: C.rowwise_results_from_agg(w, rowwise, "part_id"),
-                 after=["profile_and_counts"], persist=True)
+        # one leg is both the profile and the counts source
+        prof = counts = "profile_and_counts"
+        legs.leg(prof, wide.toArrow)
     else:
         prof, counts = "profile", "constraint_counts"
-        legs.leg(prof, lambda: profile(meta_nb, group_by="part_id", approx=False),
-                 persist=True)
-        legs.leg(counts, lambda: C.rowwise_results_from_agg(
-            meta_nb.groupBy("part_id").agg(
-                F.count(F.lit(1)).alias("n_rows"), *C.rowwise_count_exprs(rowwise),
-            ),
-            rowwise, "part_id",
-        ), persist=True)
-    legs.leg("unique_referential", lambda: res_other, persist=True)
+        legs.leg(prof, lambda: profile(meta_nb, group_by="part_id", approx=False).toArrow())
+        legs.leg(counts, lambda: meta_nb.groupBy("part_id").agg(
+            F.count(F.lit(1)).alias("n_rows"), *C.rowwise_count_exprs(rowwise),
+        ).toArrow())
+    # the (small) uniqueness/referential intermediates evaluate persisted
+    # are materialized by this collect and reused by unique_violations
+    legs.leg("unique_referential", lambda: res_other.toArrow())
     legs.leg("unique_violations", lambda _: vio_other,
              after=["unique_referential"], persist=True)
     legs.leg("violations", lambda: vio_row, persist=True)
@@ -604,23 +616,38 @@ def _run_pipeline(
                 fraction=0.25, seed=42
             ).limit(100).write.mode("overwrite").parquet(f"{output_dir}/row_sample")
 
+    def _write_violations(a: DataFrame, b: DataFrame) -> None:
+        # every violating key (unbounded), so a Spark write: hash-
+        # repartitioned by the partition column so the write TASKS cover
+        # the dynamic partitions in parallel while each partition dir
+        # still gets exactly ONE data file (a partition value lands in
+        # exactly one task). coalesce(1) would serialize every
+        # partition's parquet writer through a single task (0.65s ->
+        # 0.28s per write job at the 128k steady fixture, same file
+        # count).
+        n_out = min(spark.sparkContext.defaultParallelism, len(pending_ids))
+        a.unionByName(b).repartition(n_out, "part_id").write.mode(
+            "overwrite"
+        ).partitionBy("part_id").parquet(f"{output_dir}/violations")
+
     writes = ["write_row_sample", "write_column_profiles", "write_violations",
               "write_constraint_results"]
     legs.leg("write_row_sample", _write_sample)
-    legs.leg("write_column_profiles", lambda p: _write(p, "column_profiles"),
-             after=[prof])
+    legs.leg(
+        "write_column_profiles",
+        lambda p: _store(_melt(p, "__p_") if cfg.approx else p, "column_profiles"),
+        after=[prof],
+    )
     if cfg.approx and cfg.persist_sketches:
         writes.append("write_profile_sketches")
-        legs.leg(
-            "write_profile_sketches",
-            lambda w: _write(_melt(w, "__sk_", SKETCH_FIELDS), "profile_sketches"),
-            after=["profile_and_counts"],
-        )
-    legs.leg("write_violations", lambda a, b: _write(a.unionByName(b), "violations"),
-             after=["violations", "unique_violations"])
+        legs.leg("write_profile_sketches",
+                 lambda w: _store(_melt(w, "__sk_"), "profile_sketches"), after=[prof])
+    legs.leg("write_violations", _write_violations, after=["violations", "unique_violations"])
     legs.leg(
         "write_constraint_results",
-        lambda a, b: _write(a.unionByName(b), "constraint_results"),
+        lambda w, u: _store(pa.concat_tables(
+            [C.rowwise_results_arrow(w, rowwise), u], promote_options="default"
+        ), "constraint_results"),
         after=[counts, "unique_referential"],
     )
     if cfg.validate_images:
@@ -630,7 +657,7 @@ def _run_pipeline(
         writes.append("write_verdicts")
         legs.leg(
             "write_verdicts",
-            lambda _, v: _write(v, "constraint_results", mode="append"),
+            lambda _, v: _store(v, "constraint_results", mode="append"),
             after=["write_constraint_results", "decode_verify"],
         )
     legs.result()
@@ -717,12 +744,9 @@ def _run_pipeline(
         )
 
     # per-partition lineage + metrics rows — commit point. Row counts
-    # come from the already-persisted profiles (no extra scan).
-    def _commit(profiles):
-        part_rows = {
-            r.part_id: r.n
-            for r in profiles.groupBy("part_id").agg(F.max("n_rows").alias("n")).collect()
-        }
+    # come from the collected counts (no extra scan, no Spark job).
+    def _commit(c: pa.Table):
+        part_rows = dict(zip(c["part_id"].to_pylist(), c["n_rows"].to_pylist()))
         manifest.record_many([
             {
                 "run_id": run_id, "part_id": str(pid), "status": "done",
@@ -738,7 +762,7 @@ def _run_pipeline(
         ])
         return part_rows
 
-    legs.leg("manifest", _commit, after=[prof])
+    legs.leg("manifest", _commit, after=[counts])
     part_rows = legs.result("manifest")
     timings["manifest"] = _dur("manifest")
 

@@ -90,6 +90,20 @@ def pyarrow_path(p: str) -> str:
     return p
 
 
+def pyarrow_fs(path: str):
+    """(pyarrow FileSystem, path on it) for a Hadoop URI, so a driver-side
+    pyarrow write lands where Spark reads it back: a file:// output dir
+    on the local disk, hdfs:// and s3a:// on pyarrow's own HDFS and S3
+    filesystems. A plain relative path is made absolute first
+    (FileSystem.from_uri needs a scheme or a leading /)."""
+    import pyarrow.fs as pafs
+
+    target = pyarrow_path(path)
+    if "://" not in target:
+        target = os.path.abspath(target)
+    return pafs.FileSystem.from_uri(target)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Load one of the driver-provided parquet tables."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")

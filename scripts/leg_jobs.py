@@ -1,5 +1,6 @@
-"""Spark work per pipeline leg: jobs, stages, tasks, task seconds and
-CPU seconds, read from the live status store of one perfbench workload.
+"""Spark work per pipeline leg: wall span, jobs, stages, tasks, task
+seconds and CPU seconds, read from the live status store of one
+perfbench workload.
 
     python scripts/leg_jobs.py --workload validate_resume --seed 7 --runs 3
 
@@ -17,7 +18,12 @@ neither as stages nor as tasks. The store keeps the last
 ``spark.ui.retainedJobs`` jobs (1,000 by default), far more than a run
 submits.
 
-Prints one table per run; the last line of each table sums every leg.
+Each leg's wall span (``wall_s``, end minus start) comes from the run
+summary's ``legs`` timeline, so a leg that runs no Spark job, such as a
+driver-side pyarrow write, still shows what it costs.
+
+Prints one table per run; the last line of each table sums every leg,
+except its ``wall_s``, which is the whole run's wall time.
 """
 
 from __future__ import annotations
@@ -76,10 +82,11 @@ def leg_work(sc, after_job: int) -> dict[str, dict]:
     return legs
 
 
-def table(legs: dict[str, dict]) -> str:
-    cols = ("jobs", "stages", "tasks", "task_s", "cpu_s", "py_stages")
-    rows = sorted(legs.items(), key=lambda kv: -kv[1]["task_s"])
+def table(legs: dict[str, dict], wall: float) -> str:
+    cols = ("wall_s", "jobs", "stages", "tasks", "task_s", "cpu_s", "py_stages")
+    rows = sorted(legs.items(), key=lambda kv: (-kv[1]["task_s"], -kv[1]["wall_s"]))
     total = {c: sum(v[c] for _, v in rows) for c in cols}
+    total["wall_s"] = wall
     width = max([len(n) for n, _ in rows] + [5])
     out = [f"{'leg':<{width}} " + " ".join(f"{c:>9}" for c in cols)]
     for name, v in [*rows, ("TOTAL", total)]:
@@ -116,10 +123,12 @@ def main() -> int:
             first = last_job_id(sc)
             summary, wall = run.timed_run()
             legs = leg_work(sc, first)
+            for name, (start, end) in summary["legs"].items():
+                legs[name]["wall_s"] = end - start
             errs = run.check(summary)
             print(f"# {wl.name} seed {args.seed} run {i + 1}: {wall:.2f} s, "
                   f"{'correct' if not errs else 'FAILED: ' + '; '.join(errs)}")
-            print(table(legs), flush=True)
+            print(table(legs, wall), flush=True)
     finally:
         if spark is not None:
             spark_env.stop_jvm(spark)

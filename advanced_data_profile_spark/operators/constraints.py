@@ -11,20 +11,24 @@ Scale design:
   (`evaluate`): a single scan computes every domain/not-null violation
   count per partition. Violation SAMPLES are a second, filter-pushdown
   scan that only runs for failed constraints.
-- uniqueness uses a two-stage aggregation so a duplicate-heavy key
-  never concentrates raw rows on one reducer: stage 1 is Spark's OWN
-  map-side partial agg (each key collapses to one count row per input
-  split before the shuffle — the implicit salt the north_star's
-  "salted repartition" asks for), stage 2 merges per key. Making the
-  salt explicit via spark_partition_id() (rounds 1-7) was redundant
-  for count aggregation and cost a second full Exchange.
-- referential checks broadcast the (small) reference set and anti-join;
-  violations come straight from the anti-join output.
+- unique and referential checks share ONE count relation
+  (`key_counts`): one scan, one aggregation of (partition, check, key)
+  records, persisted. Its map-side partial aggregation is the implicit
+  salt: each key collapses to one count row per input split before the
+  shuffle, so a duplicate-heavy key never concentrates raw rows on one
+  reducer (an explicit spark_partition_id() salt, used through round
+  7, was redundant for count aggregation and cost a second full
+  Exchange). The per-partition totals, the verdicts, every violating
+  key and the pipeline's id-index append all read that relation.
+- referential checks anti-join the count relation against the
+  broadcast (small) reference set; the orphan keys left are the
+  violations.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -82,11 +86,12 @@ def rowwise_count_exprs(rowwise: list[Check]) -> list[Column]:
     ]
 
 
-def rowwise_results_from_agg(
-    agg: DataFrame, rowwise: list[Check], part_col: str | None
+def results_from_agg(
+    agg: DataFrame, checks: list[Check], part_col: str | None
 ) -> DataFrame:
-    """Melt a wide aggregate carrying `n_rows` + rowwise_count_exprs
-    columns into RESULT_COLUMNS rows."""
+    """Melt a wide per-partition aggregate carrying `n_rows` and one
+    ``__v_<i>`` violation count per check (rowwise_count_exprs, or the
+    `key_counts` agg) into RESULT_COLUMNS rows."""
     part_expr = (
         F.col(part_col).cast("string") if part_col else F.lit("__all__")
     ).alias("part_id")
@@ -100,7 +105,7 @@ def rowwise_results_from_agg(
                     F.lit(c.kind).alias("kind"),
                     F.col(f"__v_{i}").alias("n_violations"),
                 )
-                for i, c in enumerate(rowwise)
+                for i, c in enumerate(checks)
             ])
         ).alias("s"),
     )
@@ -110,11 +115,11 @@ def rowwise_results_from_agg(
     )
 
 
-def rowwise_results_arrow(agg, rowwise: list[Check]):
-    """`rowwise_results_from_agg` over a wide aggregate already on the
-    driver: ``agg`` is a pyarrow Table with part_id, `n_rows` and the
-    rowwise_count_exprs columns (one row per partition); returns the
-    same RESULT_COLUMNS rows as a pyarrow Table."""
+def results_arrow(agg, checks: list[Check]):
+    """`results_from_agg` over a wide aggregate already on the driver:
+    ``agg`` is a pyarrow Table with part_id, `n_rows` and the
+    ``__v_<i>`` columns (one row per partition); returns the same
+    RESULT_COLUMNS rows as a pyarrow Table."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -128,7 +133,7 @@ def rowwise_results_arrow(agg, rowwise: list[Check]):
             "n_violations": agg[f"__v_{i}"],
             "passed": pc.equal(agg[f"__v_{i}"], 0),
         })
-        for i, c in enumerate(rowwise)
+        for i, c in enumerate(checks)
     ], promote_options="default")
 
 
@@ -187,6 +192,120 @@ def rowwise_violation_samples(
     )
 
 
+def key_counts(
+    df: DataFrame,
+    checks: list[Check],
+    part_col: str | None = "part_id",
+    cached: list | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The unique and referential checks over ONE persisted count
+    relation: returns (counts, agg, violations).
+
+    ``counts`` is one aggregation over one scan of ``df``: each row
+    becomes one record per check, keyed by that check's column, plus
+    one totals record, and records are counted per (partition, check,
+    key) into ``part_cnt``. Spark's map-side partial aggregation
+    collapses each (partition, key) to one row per input split before
+    the shuffle, so a duplicate-heavy key never concentrates raw rows
+    on one reducer (an explicit salt stage would only add an Exchange).
+    A unique check's rows then get ``cnt``, the key's count summed over
+    every partition in ``df``: uniqueness is table-wide, so a key seen
+    once in each of two partitions is a violation in both. A NULL key is
+    a group like any other, so a duplicated NULL is a violation too. A
+    referential check keeps only its orphan keys: its count rows are
+    anti-joined against the broadcast distinct reference keys. The
+    relation (part_col, __c = check index or -1 for the totals,
+    __key = the key as a string, part_cnt, cnt, __viol) is persisted
+    (and appended to ``cached`` when given, for the caller to release).
+
+    ``agg`` is one row per partition (part_col, n_rows, __v_<i> per
+    check), the shape `results_from_agg` and `results_arrow` melt into
+    RESULT_COLUMNS rows. ``violations`` is every duplicated or orphan
+    key per partition, in VIOLATION_COLUMNS, with its count as detail.
+
+    The scope is the partitions in ``df``; on a resumed pipeline run
+    that is the pending set (the cross-run check is the id index or the
+    full-table pass, see plans.pipeline)."""
+    keys = [part_col] if part_col else []
+    kcols = [f"__k{i}" for i in range(len(checks))]
+    uniq = [i for i, c in enumerate(checks) if c.kind == "unique"]
+    c_col, cnt = F.col("__c"), F.col("part_cnt")
+
+    def record(i: int) -> Column:
+        # WHEN false THEN col is a NULL of col's type: every record of
+        # the array has the same struct type
+        return F.struct(F.lit(i).alias("__c"), *[
+            F.when(F.lit(i == j), F.col(c.column)).alias(k)
+            for j, (c, k) in enumerate(zip(checks, kcols))
+        ])
+
+    per_key = (
+        df.select(*keys, F.explode(F.array(*map(record, range(-1, len(checks))))).alias("r"))
+        .select(*keys, "r.*")
+        .groupBy(*keys, "__c", *kcols)
+        .agg(F.count(F.lit(1)).alias("part_cnt"))
+    )
+    # a referential check's anti-join drops its records whose key is in
+    # the reference set; every other record has a NULL in that check's
+    # key column, matches nothing and is kept. The always-true
+    # part_cnt > 0 keeps the join above the aggregation: pushed below
+    # it (the optimizer would), the count scan could not start before
+    # the reference set is broadcast, where above it the two run side
+    # by side
+    for i, c in enumerate(checks):
+        if c.kind == "referential":
+            ref_keys = c.ref.select(F.col(c.ref_column).alias("__ref_key")).distinct()
+            per_key = per_key.join(
+                F.broadcast(ref_keys),
+                (F.col(kcols[i]) == F.col("__ref_key")) & (cnt > 0),
+                "left_anti",
+            )
+        elif c.kind != "unique":
+            raise ValueError(c.kind)
+    is_unique = c_col.isin(uniq)
+    global_cnt = F.sum(cnt).over(Window.partitionBy("__c", *kcols)) if keys else cnt
+    counts = per_key.select(
+        *keys, "__c",
+        F.coalesce(*[F.when(c_col == i, F.col(k).cast("string"))
+                     for i, k in enumerate(kcols)]).alias("__key"),
+        "part_cnt",
+        F.when(is_unique, global_cnt).otherwise(cnt).alias("cnt"),
+    ).withColumn("__viol", (c_col >= 0) & (~is_unique | (F.col("cnt") > 1)))
+    counts = counts.persist()
+    if cached is not None:
+        cached.append(counts)
+
+    def n(cond: Column) -> Column:
+        return F.coalesce(F.sum(F.when(cond, cnt)), F.lit(0))
+
+    agg = (counts.groupBy(*keys) if keys else counts).agg(
+        n(c_col == -1).alias("n_rows"),
+        *[n((c_col == i) & F.col("__viol")).alias(f"__v_{i}") for i in range(len(checks))],
+    )
+    part_str = F.col(part_col).cast("string") if part_col else F.lit("__all__")
+    dup_detail = F.to_json(F.struct(F.col("cnt").alias("duplicate_count")))
+    orphan_detail = F.to_json(F.struct(F.col("cnt").alias("orphan_count")))
+    violations = counts.where("__viol").select(
+        part_str.alias("part_id"),
+        F.element_at(F.array(*[F.lit(c.name) for c in checks]), c_col + 1).alias("constraint"),
+        F.col("__key").alias("key"),
+        F.when(is_unique, dup_detail).otherwise(orphan_detail).alias("detail"),
+    )
+    return counts, agg, violations
+
+
+def check_counts(counts: DataFrame, checks: list[Check], name: str,
+                 part_col: str = "part_id") -> DataFrame:
+    """(key, part_id, n) rows of check ``name`` from `key_counts`'
+    relation: its per-(key, partition) counts, part_id as a string."""
+    i = next(i for i, c in enumerate(checks) if c.name == name)
+    return counts.where(F.col("__c") == i).select(
+        F.col("__key").alias("key"),
+        F.col(part_col).cast("string").alias("part_id"),
+        F.col("part_cnt").alias("n"),
+    )
+
+
 def evaluate(
     df: DataFrame,
     checks: list[Check],
@@ -199,163 +318,33 @@ def evaluate(
     results: one row per (partition, constraint) with pass/fail.
     violations: up to sample_violations rows per (partition, constraint)
     for row-level checks, ALL violating keys for unique/referential.
-    Both read small persisted intermediates; when ``cached`` is a list,
-    they are appended to it so the caller can unpersist them once it
-    has consumed the results.
-    """
 
-    def _persist(d: DataFrame) -> DataFrame:
-        if cached is not None:
-            cached.append(d)
-        return d.persist()
-
-    keys = [part_col] if part_col else []
-    part_str = (F.col(part_col).cast("string") if part_col else F.lit("__all__"))
-
+    Row-wise checks are one wide aggregation plus a violation-sample
+    scan. Unique and referential checks all read the one count relation
+    `key_counts` persists; when ``cached`` is a list it is appended
+    there so the caller can unpersist it once it has consumed the
+    results."""
     rowwise = [c for c in checks if c.kind in ("not_null", "domain")]
-    uniques = [c for c in checks if c.kind == "unique"]
-    refs = [c for c in checks if c.kind == "referential"]
-
+    others = [c for c in checks if c.kind not in ("not_null", "domain")]
     results: list[DataFrame] = []
     violations: list[DataFrame] = []
 
-    # --- row-wise checks: ONE wide agg for every constraint ---
     if rowwise:
-        agg = (df.groupBy(*keys) if keys else df).agg(
+        agg = (df.groupBy(part_col) if part_col else df).agg(
             F.count(F.lit(1)).alias("n_rows"),
             *rowwise_count_exprs(rowwise),
         )
-        results.append(rowwise_results_from_agg(agg, rowwise, part_col))
+        results.append(results_from_agg(agg, rowwise, part_col))
         violations.append(
             rowwise_violation_samples(df, rowwise, part_col, sample_violations)
         )
-
-    # per-partition totals shared by unique/referential verdicts —
-    # cached because it is tiny (one row per partition) and otherwise
-    # re-scanned by every downstream action
-    totals = None
-    if uniques or refs:
-        totals = (df.groupBy(*keys) if keys else df).agg(
-            F.count(F.lit(1)).alias("__total")
-        )
-        totals = _persist(totals)
-
-    # --- uniqueness: two-stage aggregation (implicit map-side salt) ---
-    # stage 1 is Spark's OWN partial hash aggregation: the map-side
-    # combine collapses each (part, key) to one pre-aggregated count
-    # row per input split BEFORE the shuffle, so a duplicate-heavy key
-    # never concentrates raw rows on one reducer; stage 2 merges per
-    # (part, key); stage 3 merges per key GLOBALLY — uniqueness is a
-    # table-wide invariant, so a key duplicated ACROSS partitions is a
-    # violation even though each partition sees it once. (An explicit
-    # spark_partition_id() salt stage, used through round 7, is
-    # redundant for count aggregation — partial agg keys by input
-    # split implicitly, so the salted groups were singletons and the
-    # extra groupBy only added a full Exchange; A/B-measured ~35% of
-    # the query's wall time at sf0.1. Explicit salting stays necessary
-    # only where partial agg cannot collapse: exact per-key distincts,
-    # collect_list.) Violations are attributed back to every partition
-    # holding a globally-duplicated key. Only the (small)
-    # duplicate-key set is persisted — verdicts AND violation rows
-    # both derive from it.
-    # NB: the scope is the partitions in `df`; on a resumed run that is
-    # the pending set (cross-RUN global uniqueness needs a dedicated
-    # full-table pass — see pipeline docstring).
-    for c in uniques:
-        per_key_part = (
-            df.select(*keys, F.col(c.column).alias("__key"))
-            .groupBy(*keys, "__key")
-            .agg(F.count(F.lit(1)).alias("part_cnt"))
-        )
-        if keys:
-            per_key = per_key_part.groupBy("__key").agg(
-                F.sum("part_cnt").alias("cnt")
-            )
-            dup_global = per_key.where(F.col("cnt") > 1).withColumnRenamed(
-                "__key", "__gkey"
-            )
-            # attribute: every (part, key) row whose key is globally dup.
-            # NULL-SAFE join: groupBy treats NULL as a key group, so a
-            # duplicated NULL key is a violation too — a plain equi-join
-            # would silently drop it
-            dup_keys = _persist(per_key_part.join(
-                dup_global, F.col("__key").eqNullSafe(F.col("__gkey"))
-            ).drop("__gkey"))
-            viol = dup_keys.groupBy(*keys).agg(
-                F.sum("part_cnt").alias("n_violations")
-            )
-        else:
-            dup_keys = _persist(
-                per_key_part.where(F.col("part_cnt") > 1)
-                .withColumn("cnt", F.col("part_cnt"))
-            )
-            viol = dup_keys.agg(F.sum("part_cnt").alias("n_violations"))
-        res = (
-            totals.join(viol, on=keys, how="left") if keys
-            else totals.crossJoin(viol)
-        ).withColumn("n_violations", F.coalesce(F.col("n_violations"), F.lit(0)))
-        results.append(
-            res.select(
-                part_str.alias("part_id"),
-                F.lit(c.name).alias("constraint"),
-                F.lit("unique").alias("kind"),
-                F.col("__total").alias("n_rows"),
-                "n_violations",
-                (F.col("n_violations") == 0).alias("passed"),
-            )
-        )
-        violations.append(
-            dup_keys.select(
-                part_str.alias("part_id"),
-                F.lit(c.name).alias("constraint"),
-                F.col("__key").cast("string").alias("key"),
-                F.to_json(F.struct(F.col("cnt").alias("duplicate_count"))).alias("detail"),
-            )
-        )
-
-    # --- referential: broadcast anti-join; only the (small) orphan-key
-    # counts are persisted, feeding both verdicts and violations ---
-    for c in refs:
-        ref_keys = c.ref.select(F.col(c.ref_column).alias("__ref_key")).distinct()
-        orphans = df.select(*keys, F.col(c.column).alias("__key")).join(
-            F.broadcast(ref_keys),
-            F.col("__key") == F.col("__ref_key"),
-            "left_anti",
-        )
-        orph_counts = _persist(orphans.groupBy(*keys, "__key").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ))
-        viol = (orph_counts.groupBy(*keys) if keys else orph_counts).agg(
-            F.sum("cnt").alias("n_violations")
-        )
-        res = (
-            totals.join(viol, on=keys, how="left") if keys
-            else totals.crossJoin(viol)
-        ).withColumn("n_violations", F.coalesce(F.col("n_violations"), F.lit(0)))
-        results.append(
-            res.select(
-                part_str.alias("part_id"),
-                F.lit(c.name).alias("constraint"),
-                F.lit("referential").alias("kind"),
-                F.col("__total").alias("n_rows"),
-                "n_violations",
-                (F.col("n_violations") == 0).alias("passed"),
-            )
-        )
-        violations.append(
-            orph_counts.select(
-                part_str.alias("part_id"),
-                F.lit(c.name).alias("constraint"),
-                F.col("__key").cast("string").alias("key"),
-                F.to_json(F.struct(F.col("cnt").alias("orphan_count"))).alias("detail"),
-            )
-        )
+    if others:
+        _, agg, vio = key_counts(df, others, part_col, cached)
+        results.append(results_from_agg(agg, others, part_col))
+        violations.append(vio)
 
     def _union(dfs: list[DataFrame], cols: list[str]) -> DataFrame:
-        out = dfs[0].select(*cols)
-        for d in dfs[1:]:
-            out = out.unionByName(d.select(*cols))
-        return out
+        return reduce(DataFrame.unionByName, [d.select(*cols) for d in dfs])
 
     return _union(results, RESULT_COLUMNS), _union(violations, VIOLATION_COLUMNS)
 

@@ -9,9 +9,11 @@ rescan with a MAINTAINED INDEX:
 - at validation time each run APPENDS its partitions' per-(key,
   partition) counts to a parquet table bucketed by the key
   (``bucketBy(N, key)`` — the Spark-catalog spelling of Iceberg's
-  ``bucket(N, image_id)`` partition transform). Append cost is one
-  narrow agg over rows the run already scanned; payload bytes are
-  never touched.
+  ``bucket(N, image_id)`` partition transform). The append reuses the
+  run's counts: the pipeline hands `index_write` the per-(key,
+  partition) relation its uniqueness check already persisted
+  (constraints.key_counts), so the append runs no aggregation and
+  never touches payload bytes; each append adds one file per bucket.
 - the global check is then a PER-BUCKET SELF-CHECK over the index:
   every occurrence of a key lives in the same bucket by construction,
   so the duplicate-detection aggregations plan with ZERO Exchange
@@ -62,16 +64,29 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from advanced_data_profile_spark.operators.constraints import (
     RESULT_COLUMNS,
     VIOLATION_COLUMNS,
 )
-from advanced_data_profile_spark.plans.manifest import Manifest, new_run_id
+from advanced_data_profile_spark.plans.manifest import (
+    Manifest,
+    latest_rows,
+    new_run_id,
+    write_table,
+)
 
 DEFAULT_BUCKETS = 16
+# constraint_results_global as the full-rescan pass's Spark relation
+# types it (RESULT_COLUMNS; n_rows is NULL for a partition not yet
+# committed to the manifest)
+_GLOBAL_RESULT_SCHEMA = pa.schema([
+    pa.field(n, t, nullable=n in ("part_id", "n_rows")) for n, t in zip(RESULT_COLUMNS, (
+        pa.string(), pa.string(), pa.string(), pa.int64(), pa.int64(), pa.bool_()))
+])
 
 def _append_order():
     """latest-append-wins ordering: wall-clock stamp, ties broken by
@@ -100,26 +115,25 @@ def _existing_bucket_spec(
     return int(n), cols.strip("[]` ")
 
 
-def index_append(
-    df: DataFrame,
+def index_write(
+    rows: DataFrame,
     table_name: str,
     location: str,
-    key_col: str = "image_id",
-    part_col: str = "part_id",
     run_id: str | None = None,
     buckets: int = DEFAULT_BUCKETS,
 ) -> None:
-    """Append per-(key, partition) counts for df's rows to the bucketed
-    index table, creating it (external, at ``location``) on first use.
-    One narrow aggregation over columns the caller already scanned —
-    never reads payload bytes.
+    """Append ``rows``, per-(key, partition) counts with columns (key,
+    part_id string, n), to the bucketed index table, creating it
+    (external, at ``location``) on first use. The pipeline passes the
+    counts its uniqueness check already built (constraints.key_counts),
+    so the append runs no aggregation of its own.
 
     Raises ValueError if the existing table's bucket spec differs from
     ``buckets``: mixed bucket counts would silently break the
     per-bucket key clustering the zero-Exchange check depends on (see
     module docstring for bucket sizing — the count is fixed for the
     table's lifetime)."""
-    spark = df.sparkSession
+    spark = rows.sparkSession
     exists = spark.catalog.tableExists(table_name)
     existing = _existing_bucket_spec(spark, table_name)
     if exists and existing is None:
@@ -134,20 +148,43 @@ def index_append(
             "break bucket clustering. Pass the table's own bucket count "
             "(changing it requires a full rewrite)."
         )
-    rows = (
-        df.groupBy(
-            F.col(key_col).alias("key"),
-            F.col(part_col).cast("string").alias("part_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("run_id", F.lit(run_id or new_run_id()))
-        .withColumn("appended_at", F.lit(float(time.time())))
+    # hash-partitioned as the buckets are (the same murmur3 of key),
+    # mod the largest divisor of the bucket count that the cores can
+    # run in one wave: each bucket lands in exactly one write task, so
+    # every append adds one file per bucket
+    cores = spark.sparkContext.defaultParallelism
+    n_tasks = max(d for d in range(1, min(buckets, cores) + 1) if buckets % d == 0)
+    rows = rows.repartition(n_tasks, "key").select(
+        "key", "part_id", "n",
+        F.lit(run_id or new_run_id()).alias("run_id"),
+        F.lit(float(time.time())).alias("appended_at"),
     )
     writer = rows.write.format("parquet").bucketBy(buckets, "key").sortBy("key")
     if exists:
         writer.mode("append").saveAsTable(table_name)
     else:
         writer.option("path", location).saveAsTable(table_name)
+
+
+def index_append(
+    df: DataFrame,
+    table_name: str,
+    location: str,
+    key_col: str = "image_id",
+    part_col: str = "part_id",
+    run_id: str | None = None,
+    buckets: int = DEFAULT_BUCKETS,
+) -> None:
+    """`index_write` of the per-(key, partition) counts of df's raw
+    rows: one narrow aggregation over the key and partition columns —
+    never reads payload bytes."""
+    index_write(
+        df.groupBy(
+            F.col(key_col).alias("key"),
+            F.col(part_col).cast("string").alias("part_id"),
+        ).agg(F.count(F.lit(1)).alias("n")),
+        table_name, location, run_id=run_id, buckets=buckets,
+    )
 
 
 def duplicate_keys(spark: SparkSession, table_name: str) -> DataFrame:
@@ -248,82 +285,66 @@ def global_uniqueness_from_index(
     result/violation tables (overwritten — a global pass supersedes the
     previous one), same manifest lineage row, same summary dict; the
     data pass is the shuffle-free per-bucket self-check above instead
-    of a full payload-table rescan."""
+    of a full payload-table rescan. Only that self-check and the
+    violations_global write run in Spark: the per-partition violation
+    counts are collected, joined on the driver with the manifest's row
+    totals, and constraint_results_global (partitions-sized) is written
+    with pyarrow."""
     t0 = time.time()
     latest = _latest_per_part(spark, table_name)
-    per_key = latest.groupBy("key").agg(F.sum("n").alias("cnt"))
-    dup = per_key.where(F.col("cnt") > 1)
-    # attribute duplicates to every partition holding the key. The dup
-    # set is NORMALLY tiny (it is the violation set) and AQE broadcasts
-    # it from its runtime size, keeping the index side Exchange-free —
-    # but it is NOT forced: a pathologically duplicated corpus makes
-    # the violation set O(keys), where a broadcast hint would OOM the
-    # driver outright instead of degrading to a shuffle join (the same
-    # adversarial-cardinality discipline as decontaminate's hit
-    # relation)
+    # every (key, partition) row of a duplicated key, with the key's
+    # total: a window over the key, which the bucketed scan already
+    # clusters, so the plan has no Exchange, no broadcast and no join,
+    # and a pathologically duplicated corpus degrades to a bigger
+    # window, never to a driver-side broadcast. A NULL key is one
+    # window partition, as the null-safe duplicate check counts it
     dup_parts = (
-        latest.join(
-            dup.withColumnRenamed("key", "__dkey"),
-            F.col("key").eqNullSafe(F.col("__dkey")),
-        )
-        .drop("__dkey")
+        latest.withColumn("cnt", F.sum("n").over(Window.partitionBy("key")))
+        .where(F.col("cnt") > 1)
         .persist()
     )
-    viol_per_part = dup_parts.groupBy("part_id").agg(
-        F.sum("n").alias("n_violations")
-    )
-
-    # per-partition row totals from the manifest (latest done row wins)
-    # — collected driver-side, it is O(partitions), never a data scan
-    manifest = Manifest(spark, f"{output_dir}/manifest")
-    m = manifest.read().where(
-        (F.col("status") == "done") & (F.col("part_id") != "__global__")
-    )
-    totals = m.groupBy("part_id").agg(
-        F.max_by("n_rows", F.coalesce("finished_at", "started_at")).alias(
-            "n_rows"
-        )
-    )
-    # FULL outer: a partition indexed but not yet manifest-committed
-    # (the crash window between index append and manifest commit) must
-    # still appear here — otherwise its rows would show in
-    # violations_global but vanish from constraint_results_global and
-    # the two artifacts would disagree transiently. Such partitions
-    # carry NULL n_rows until their manifest row lands.
-    res = (
-        totals.join(viol_per_part, "part_id", "full")
-        .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-        .select(
+    try:
+        per_part = dup_parts.groupBy("part_id").agg(F.sum("n").alias("n")).toArrow()
+        violations = dup_parts.select(
             F.col("part_id"),
             F.lit(constraint).alias("constraint"),
-            F.lit("unique_global").alias("kind"),
-            F.col("n_rows"),
-            F.col("n_violations"),
-            (F.col("n_violations") == 0).alias("passed"),
+            F.col("key").cast("string").alias("key"),
+            F.to_json(F.struct(F.col("cnt").alias("duplicate_count"))).alias("detail"),
         )
-        .persist()
-    )
-    res_rows = res.collect()  # tiny: one row per partition
-    res.select(*RESULT_COLUMNS).coalesce(1).write.mode("overwrite").parquet(
-        f"{output_dir}/constraint_results_global"
-    )
-    violations = dup_parts.select(
-        F.col("part_id"),
-        F.lit(constraint).alias("constraint"),
-        F.col("key").cast("string").alias("key"),
-        F.to_json(F.struct(F.col("cnt").alias("duplicate_count"))).alias(
-            "detail"
-        ),
-    )
-    violations.select(*VIOLATION_COLUMNS).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{output_dir}/violations_global")
-    res.unpersist()
-    dup_parts.unpersist()
+        violations.select(*VIOLATION_COLUMNS).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{output_dir}/violations_global")
+    finally:
+        dup_parts.unpersist()
+    viol = dict(zip(per_part["part_id"].to_pylist(), per_part["n"].to_pylist()))
 
-    n_violations = sum(r.n_violations for r in res_rows)
-    failed_parts = sorted({r.part_id for r in res_rows if not r.passed})
-    table_rows = sum(r.n_rows or 0 for r in res_rows)
+    # per-partition row totals: each partition's latest done manifest
+    # row. FULL outer with the violation counts: a partition indexed
+    # but not yet manifest-committed (the crash window between index
+    # append and manifest commit) must still appear here — otherwise
+    # its rows would show in violations_global but vanish from
+    # constraint_results_global and the two artifacts would disagree
+    # transiently. Such partitions carry NULL n_rows until their
+    # manifest row lands.
+    manifest = Manifest(spark, f"{output_dir}/manifest")
+    done = [r for r in manifest.rows()
+            if r["status"] == "done" and r["part_id"] != "__global__"]
+    newest = latest_rows(done)
+    totals = {r["part_id"]: newest.get(r["part_id"], {}).get("n_rows") for r in done}
+    parts = sorted(set(totals) | set(viol))
+    n_viol = [viol.get(p, 0) for p in parts]
+    write_table(pa.table({
+        "part_id": parts,
+        "constraint": [constraint] * len(parts),
+        "kind": ["unique_global"] * len(parts),
+        "n_rows": [totals.get(p) for p in parts],
+        "n_violations": n_viol,
+        "passed": [v == 0 for v in n_viol],
+    }, schema=_GLOBAL_RESULT_SCHEMA), f"{output_dir}/constraint_results_global")
+
+    n_violations = sum(n_viol)
+    failed_parts = [p for p, v in zip(parts, n_viol) if v]
+    table_rows = sum(n for n in totals.values() if n is not None)
     run_id = new_run_id()
     manifest.record(
         run_id, "__global__", "done", started_at=t0,

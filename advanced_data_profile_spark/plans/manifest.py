@@ -7,12 +7,13 @@ The manifest is an append-only table of per-partition run records:
    metrics_json, input_path)
 
 Resume = anti-join pending partitions against DONE manifest rows (J5 in
-SURVEY.md §2.6) — a broadcast anti-join since the manifest is tiny
-relative to the data. Idempotence: result tables are written with
-dynamic partition overwrite keyed by part_id (`write_partitions` below
-for the driver-sized ones), so re-processing a partition replaces (not
-duplicates) its output; the manifest append of
-a `done` row is the commit point and is written AFTER the results.
+SURVEY.md §2.6). The manifest is partitions-sized, so it is read on the
+driver with pyarrow (`rows`, `done_set`): no Spark job. Idempotence:
+result tables are written with dynamic partition overwrite keyed by
+part_id (`write_partitions` below for the driver-sized ones), so
+re-processing a partition replaces (not duplicates) its output; the
+manifest append of a `done` row is the commit point and is written
+AFTER the results.
 
 Storage is parquet-append; on a real cluster this would be an Iceberg
 table with snapshot isolation — same reader/writer call shape.
@@ -24,6 +25,7 @@ import json
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,6 +42,24 @@ MANIFEST_SCHEMA = T.StructType([
     T.StructField("metrics_json", T.StringType(), True),
     T.StructField("input_path", T.StringType(), True),
 ])
+ARROW_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("part_id", pa.string()),
+    ("status", pa.string()), ("started_at", pa.float64()),
+    ("finished_at", pa.float64()), ("n_rows", pa.int64()),
+    ("metrics_json", pa.string()), ("input_path", pa.string()),
+])
+
+
+def latest_rows(rows: list[dict]) -> dict[str, dict]:
+    """part_id -> its row with the largest coalesce(finished_at,
+    started_at), as Spark's max_by picks it: rows with neither time are
+    ignored, and the first of equal times wins."""
+    latest: dict[str, tuple[float, dict]] = {}
+    for r in rows:
+        ts = r["finished_at"] if r["finished_at"] is not None else r["started_at"]
+        if ts is not None and (r["part_id"] not in latest or ts > latest[r["part_id"]][0]):
+            latest[r["part_id"]] = (ts, r)
+    return {p: r for p, (_, r) in latest.items()}
 
 
 class Manifest:
@@ -55,14 +75,27 @@ class Manifest:
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
+    def rows(self) -> list[dict]:
+        """Every manifest row, read on the driver with pyarrow (the
+        manifest is partitions-sized; no Spark job)."""
+        import pyarrow.dataset as pads
+
+        if not self.exists():
+            return []
+        fs, root = pyarrow_fs(self.path)
+        return pads.dataset(
+            root, schema=ARROW_SCHEMA, format="parquet", filesystem=fs
+        ).to_table().to_pylist()
+
+    def done_set(self) -> set[str]:
+        """Latest-status-wins: the part_ids whose latest row is `done`."""
+        return {p for p, r in latest_rows(self.rows()).items() if r["status"] == "done"}
+
     def done_parts(self) -> DataFrame:
-        """Latest-status-wins view of completed partitions."""
-        m = self.read()
-        latest = (
-            m.groupBy("part_id")
-            .agg(F.max_by("status", F.coalesce("finished_at", "started_at")).alias("status"))
+        """`done_set` as a one-column (part_id) local relation."""
+        return self.spark.createDataFrame(
+            [(p,) for p in sorted(self.done_set())], "part_id string"
         )
-        return latest.where(F.col("status") == "done").select("part_id")
 
     def pending(self, parts: DataFrame, part_col: str = "part_id") -> DataFrame:
         """Partitions still to process: anti-join against done set."""
@@ -104,7 +137,6 @@ class Manifest:
         from the path, so a file:// output dir lands where Spark reads
         it back (hdfs:// and s3a:// go through pyarrow's own HDFS and
         S3 filesystems)."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         now = time.time()
@@ -123,12 +155,7 @@ class Manifest:
             rows["n_rows"].append(r.get("n_rows"))
             rows["metrics_json"].append(json.dumps(r.get("metrics") or {}))
             rows["input_path"].append(r.get("input_path"))
-        table = pa.table(rows, schema=pa.schema([
-            ("run_id", pa.string()), ("part_id", pa.string()),
-            ("status", pa.string()), ("started_at", pa.float64()),
-            ("finished_at", pa.float64()), ("n_rows", pa.int64()),
-            ("metrics_json", pa.string()), ("input_path", pa.string()),
-        ]))
+        table = pa.table(rows, schema=ARROW_SCHEMA)
         fs, root = pyarrow_fs(self.path)
         fs.create_dir(root, recursive=True)
         fname = f"part-{uuid.uuid4().hex}.parquet"
@@ -202,6 +229,26 @@ def write_partitions(table, path: str, mode: str = "overwrite") -> None:
         fs.move(tmp, f"{d}/{name}")
     if mode == "overwrite":
         drop_staging()
+
+
+def write_table(table, path: str) -> None:
+    """Replace the Hadoop-URI directory ``path`` with ``table`` (a
+    pyarrow Table) as ONE flat parquet file, from the driver: a
+    partitions-sized table that Spark reads back as if its own writer
+    had made it. The file is written under a hidden name, the
+    directory's other entries are removed, then it is renamed in."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    fs, root = pyarrow_fs(path)
+    fs.create_dir(root, recursive=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(table, f"{root}/.{name}", filesystem=fs)
+    for info in fs.get_file_info(pafs.FileSelector(root)):
+        if info.base_name != f".{name}":
+            is_dir = info.type == pafs.FileType.Directory
+            (fs.delete_dir if is_dir else fs.delete_file)(info.path)
+    fs.move(f"{root}/.{name}", f"{root}/{name}")
 
 
 def new_run_id() -> str:

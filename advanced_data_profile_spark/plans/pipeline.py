@@ -15,13 +15,19 @@ critical path and FIFO scheduling lets the metadata legs back-fill the
 cores its wave leaves idle — and every write starts the moment its own
 inputs exist. Legs and their `after=` edges, in declaration order:
 
-  plan                      partition listing + manifest done set
-                            (after id_index_supersede_heal when a
-                            crashed backfill left its marker)
+  plan                      partition listing + manifest done set, both
+                            read on the driver (after
+                            id_index_supersede_heal when a crashed
+                            backfill left its marker)
   decode_plan               row-group task listing for the payload pass
   decode_verify             after decode_plan: the payload pass, the only
                             scan reading `bytes`; its per-partition
                             verdicts collected through Arrow
+  unique_referential        one persisted (partition, check, key) count
+                            relation (uniqueness global within the run,
+                            referential anti-join); its per-partition
+                            counts collected through Arrow
+  violations                row-wise violation samples (pushdown)
   histograms                stored-baseline snapshot (Arrow, kept on
                             the driver), bin edges, and this run's
                             counts collected once through Arrow
@@ -36,50 +42,57 @@ inputs exist. Legs and their `after=` edges, in declaration order:
                             through Arrow: one row per partition (exact
                             mode: separate `profile` and
                             `constraint_counts` collects)
-  unique_referential        uniqueness (two-stage agg, global within the
-                            run) + referential anti-join, collected
-  unique_violations         after unique_referential
-  violations                row-wise violation samples (pushdown)
-  write_row_sample          no inputs
+  write_row_sample          no inputs: <= 100 rows collected through
+                            Arrow, one flat file from the driver
   write_column_profiles     after profile_and_counts (melted on the
                             driver)
   write_profile_sketches    after profile_and_counts (melted on the
                             driver)
-  write_violations          after violations, unique_violations
+  write_violations          after violations, unique_referential (its
+                            violating keys read from the persisted counts)
   write_constraint_results  after profile_and_counts, unique_referential
   write_verdicts            after write_constraint_results,
                             decode_verify (append to the same table)
-  id_index_append           after every leg above
-  id_index_supersede        after id_index_append (backfills only)
+  id_index_append           after unique_referential: writes the
+                            persisted (image_id, partition) counts, no
+                            aggregation; overlaps the writes
+  id_index_supersede        after every leg above (backfills only)
   manifest                  after every leg above, its row counts from
                             profile_and_counts: the commit point
   global_uniqueness         after manifest, when cfg.global_unique
 
 Scan economy per run (any number of partitions/columns, approx mode):
-one metadata scan for profile_and_counts, one for unique_referential,
-one bytes scan for decode_verify, one for each drift family's counts
-(plus, on fresh runs, a tiny min/max agg that pins bin edges without
-waiting for the profile) and a violation-sample scan that reads only
-violating rows. Relations bounded by partitions × columns × bins stay
-off the cluster: each is collected once through Arrow and written from
-the driver by `manifest.write_partitions` (pyarrow, one file per
-part_id directory, no Spark job). column_profiles, profile_sketches,
-the row-wise constraint_results rows and the manifest's row counts all
-come from the one collected wide row per partition; constraint_results
-adds the collected uniqueness/referential verdicts, then the decode
-verdicts as an append; histograms and category_counts are the same
-collected counts their drift family scores on the driver; both
-drift_results tables are written from local verdict relations. Only
-violations (every violating key, unbounded) and row_sample are Spark
-writes.
+one metadata scan for profile_and_counts, one for unique_referential
+(plus the default phash reference set, a distinct over the whole
+table), one bytes scan for decode_verify, one for each drift family's
+counts (plus, on fresh runs, a tiny min/max agg that pins bin edges
+without waiting for the profile) and a violation-sample scan that reads
+only violating rows. The per-(key, partition) counts unique_referential
+persists are read three times without a rescan: for the verdicts, for
+the violating keys and for the id-index append. Relations bounded by
+partitions × columns × bins stay off the cluster: each is collected
+once through Arrow and written from the driver by
+`manifest.write_partitions` (pyarrow, one file per part_id directory,
+no Spark job). column_profiles, profile_sketches, the row-wise
+constraint_results rows and the manifest's row counts all come from the
+one collected wide row per partition; constraint_results adds the
+collected uniqueness/referential verdicts, then the decode verdicts as
+an append; histograms and category_counts are the same collected
+counts their drift family scores on the driver; both drift_results
+tables are written from local verdict relations. row_sample (at most
+100 rows) is one flat file written by `manifest.write_table`, and the
+manifest is read on the driver. Only violations (every violating key,
+unbounded) and the id index are Spark writes.
 
 Uniqueness scope note: within one run the check is global across the
 partitions being processed (cross-partition duplicates are detected and
 attributed to every partition holding the key). Across resumed runs the
 already-done partitions are not rescanned — the cross-RUN global check
-is the dedicated full-table pass `global_uniqueness_check` below (run
-on demand, or per run via PipelineConfig.global_unique), writing
-kind='unique_global' rows to constraint_results_global.
+is the id index's per-bucket self-check when PipelineConfig.id_index_table
+is set (plans.id_index), else the dedicated full-table pass
+`global_uniqueness_check` below (run on demand, or per run via
+PipelineConfig.global_unique); both write kind='unique_global' rows to
+constraint_results_global.
 """
 
 from __future__ import annotations
@@ -117,6 +130,7 @@ from advanced_data_profile_spark.plans.manifest import (
     Manifest,
     new_run_id,
     write_partitions,
+    write_table,
 )
 from advanced_data_profile_spark.session import (
     hadoop_path_exists,
@@ -403,9 +417,7 @@ def _run_pipeline(
             all_parts = images.select("part_id").distinct()
             pending = manifest.pending(all_parts) if resume else all_parts
             return [r.part_id for r in pending.collect()]
-        done = set()
-        if resume and manifest.exists():
-            done = {r.part_id for r in manifest.done_parts().collect()}
+        done = manifest.done_set() if resume else set()
         return [p for p in pids if str(p) not in done]
 
     legs.leg("plan", _plan)
@@ -437,15 +449,25 @@ def _run_pipeline(
     vio_row = C.rowwise_violation_samples(
         meta, rowwise, "part_id", cfg.sample_violations
     )
-    res_other, vio_other = C.evaluate(
-        df, others, part_col="part_id", sample_violations=cfg.sample_violations,
-        cached=legs.persisted,
+    # one persisted (partition, check, key) count relation: the
+    # unique/referential verdicts, their violation rows and the id-index
+    # append all read it
+    key_counts, agg_other, vio_other = C.key_counts(
+        df, others, "part_id", cached=legs.persisted
     )
     # metadata-only scans get large splits (split accounting counts the
     # pruned-out bytes column, so the default would over-parallelize
     # scans that read ~2% of each file); the decode pass keeps its own
     # split sizing
     spark.conf.set(SPLIT_CONF, "256m")
+    # started before the wide profile plan below is built, so the
+    # uniqueness chain (and the id-index append and global check that
+    # wait for it) runs while the driver builds that plan. The collect
+    # materializes the persisted key counts; the violations write and
+    # the id-index append read them from the cache
+    legs.leg("unique_referential",
+             lambda: C.results_arrow(agg_other.toArrow(), others))
+    legs.leg("violations", lambda: vio_row, persist=True)
 
     def _store(t: pa.Table, table: str, mode: str = "overwrite") -> None:
         # every driver-sized result table: one pyarrow file per part_id
@@ -458,8 +480,10 @@ def _run_pipeline(
         # Arrow (one row per partition); column_profiles,
         # profile_sketches, the row-wise verdicts and the manifest's
         # row counts are all built from it on the driver. Built before
-        # the metadata legs start: analysing this wide plan while they
-        # run would hold their jobs back (~1 s at 4 cores).
+        # the drift and profile legs start: analysing this wide plan
+        # while they run would hold their jobs back (~1 s at 4 cores).
+        # Only the uniqueness chain and the violation samples, declared
+        # above, run beside the build.
         dtypes = {f.name: f.dataType for f in meta_nb.schema.fields}
         prof_cols = [
             f.name for f in meta_nb.schema.fields
@@ -596,12 +620,6 @@ def _run_pipeline(
         legs.leg(counts, lambda: meta_nb.groupBy("part_id").agg(
             F.count(F.lit(1)).alias("n_rows"), *C.rowwise_count_exprs(rowwise),
         ).toArrow())
-    # the (small) uniqueness/referential intermediates evaluate persisted
-    # are materialized by this collect and reused by unique_violations
-    legs.leg("unique_referential", lambda: res_other.toArrow())
-    legs.leg("unique_violations", lambda _: vio_other,
-             after=["unique_referential"], persist=True)
-    legs.leg("violations", lambda: vio_row, persist=True)
 
     def _write_sample():
         # ~100 seeded random rows for the report (reference ships a
@@ -611,12 +629,14 @@ def _run_pipeline(
         # partitions must not REPLACE the table-wide sample. Existence
         # is a FileSystem-API probe, not a read-and-catch — a transient
         # read failure must never masquerade as 'not written yet'.
+        # Collected through Arrow and written as one flat file from the
+        # driver: one Spark job.
         if not hadoop_path_exists(spark, f"{output_dir}/row_sample"):
-            meta_nb.where(F.col("part_id") == pending_ids[0]).sample(
+            write_table(meta_nb.where(F.col("part_id") == pending_ids[0]).sample(
                 fraction=0.25, seed=42
-            ).limit(100).write.mode("overwrite").parquet(f"{output_dir}/row_sample")
+            ).limit(100).toArrow(), f"{output_dir}/row_sample")
 
-    def _write_violations(a: DataFrame, b: DataFrame) -> None:
+    def _write_violations(vio: DataFrame, _) -> None:
         # every violating key (unbounded), so a Spark write: hash-
         # repartitioned by the partition column so the write TASKS cover
         # the dynamic partitions in parallel while each partition dir
@@ -626,7 +646,7 @@ def _run_pipeline(
         # 0.28s per write job at the 128k steady fixture, same file
         # count).
         n_out = min(spark.sparkContext.defaultParallelism, len(pending_ids))
-        a.unionByName(b).repartition(n_out, "part_id").write.mode(
+        vio.unionByName(vio_other).repartition(n_out, "part_id").write.mode(
             "overwrite"
         ).partitionBy("part_id").parquet(f"{output_dir}/violations")
 
@@ -642,11 +662,11 @@ def _run_pipeline(
         writes.append("write_profile_sketches")
         legs.leg("write_profile_sketches",
                  lambda w: _store(_melt(w, "__sk_"), "profile_sketches"), after=[prof])
-    legs.leg("write_violations", _write_violations, after=["violations", "unique_violations"])
+    legs.leg("write_violations", _write_violations, after=["violations", "unique_referential"])
     legs.leg(
         "write_constraint_results",
         lambda w, u: _store(pa.concat_tables(
-            [C.rowwise_results_arrow(w, rowwise), u], promote_options="default"
+            [C.results_arrow(w, rowwise), u], promote_options="default"
         ), "constraint_results"),
         after=[counts, "unique_referential"],
     )
@@ -660,17 +680,54 @@ def _run_pipeline(
             lambda _, v: _store(v, "constraint_results", mode="append"),
             after=["write_constraint_results", "decode_verify"],
         )
+
+    # id-index append BEFORE the manifest commit (crash between them =>
+    # replayed append, deduped by the check's latest-per-(key,part)
+    # rule). It writes the per-(image_id, partition) counts the
+    # uniqueness check persisted, so it starts as soon as they exist,
+    # beside the result writes, and runs no aggregation of its own
+    if cfg.id_index_table:
+        def _index_append(_):
+            from advanced_data_profile_spark.plans.id_index import index_write
+
+            # re-validation detection for the append-only precondition:
+            # a PENDING partition that already has a 'done' manifest row
+            # was indexed by an earlier run (only non-resume reruns /
+            # explicit backfills). Read from the manifest on the driver —
+            # O(partitions) — never by scanning the index.
+            prior_done = {r["part_id"] for r in manifest.rows() if r["status"] == "done"}
+            revalidated = sorted({str(p) for p in pending_ids} & prior_done)
+            # durable marker BEFORE the append: a crash after the append
+            # but before the compaction would otherwise leave stale rows
+            # that a plain resume=True retry never heals; the marker
+            # survives the crash and any later run compacts first
+            need_supersede = bool(revalidated) or hadoop_path_exists(
+                spark, supersede_marker
+            )
+            if revalidated:
+                hadoop_touch(spark, supersede_marker, "\n".join(revalidated))
+            index_write(
+                C.check_counts(key_counts, others, "image_id_unique"),
+                cfg.id_index_table,
+                cfg.id_index_location or f"{output_dir}/id_index",
+                run_id=run_id,
+                buckets=cfg.id_index_buckets,
+            )
+            return need_supersede
+
+        legs.leg("id_index_append", _index_append, after=["unique_referential"])
     legs.result()
 
     # the timings keep their historical meaning, now read off the leg
     # timeline: compute_metadata runs from the wave's first leg until
-    # every metadata leg is done; writes/writes_and_drift are what the
+    # every metadata leg (profile and counts, unique_referential,
+    # violations) is done; writes/writes_and_drift are what the
     # writes/drift legs add past that barrier; compute also covers the
     # decode tail that overlaps them
     tl = legs.times
     wave = min(s for n, (s, _) in tl.items()
                if n not in ("plan", "id_index_supersede_heal"))
-    meta_end = max(tl[n][1] for n in (prof, counts, "unique_violations", "violations"))
+    meta_end = max(tl[n][1] for n in (prof, counts, "unique_referential", "violations"))
 
     def _past_meta(names):
         return max([0.0] + [tl[n][1] - meta_end for n in names])
@@ -693,46 +750,8 @@ def _run_pipeline(
         timings["decode_tail_overlapped"] = _past_meta(["decode_verify"])
         timings["compute"] += timings["decode_tail_overlapped"]
 
-    # id-index append BEFORE the manifest commit (crash between them =>
-    # replayed append, deduped by the check's latest-per-(key,part)
-    # rule) — one narrow agg over the pending partitions' id column,
-    # no payload bytes
     if cfg.id_index_table:
-        def _index_append():
-            from advanced_data_profile_spark.plans.id_index import index_append
-
-            # re-validation detection for the append-only precondition:
-            # a PENDING partition that already has a 'done' manifest row
-            # was indexed by an earlier run (only non-resume reruns /
-            # explicit backfills). Read from the manifest —
-            # O(partitions), driver-side — never by scanning the index.
-            prior_done = {
-                r.part_id
-                for r in manifest.read()
-                .where((F.col("status") == "done") & (F.col("part_id") != "__global__"))
-                .select("part_id").distinct().collect()
-            }
-            revalidated = sorted({str(p) for p in pending_ids} & prior_done)
-            # durable marker BEFORE the append: a crash after the append
-            # but before the compaction would otherwise leave stale rows
-            # that a plain resume=True retry never heals; the marker
-            # survives the crash and any later run compacts first
-            need_supersede = bool(revalidated) or hadoop_path_exists(
-                spark, supersede_marker
-            )
-            if revalidated:
-                hadoop_touch(spark, supersede_marker, "\n".join(revalidated))
-            index_append(
-                df.select("image_id", "part_id"),
-                cfg.id_index_table,
-                cfg.id_index_location or f"{output_dir}/id_index",
-                run_id=run_id,
-                buckets=cfg.id_index_buckets,
-            )
-            return need_supersede
-
-        legs.leg("id_index_append", _index_append)
-        if legs.result("id_index_append"):
+        if legs.results["id_index_append"]:
             # the regenerated partitions' new appends must fully
             # supersede their old index rows (keys REMOVED by the
             # backfill would otherwise linger as stale false
@@ -821,24 +840,29 @@ def global_uniqueness_check(
     t0 = time.time()
     images = read_images(spark, images_path, fmt=cfg.table_format)
     checks = [C.unique(f"{c}_unique_global", c) for c in key_cols]
-    results, violations = C.evaluate(
-        images, checks, part_col="part_id",
-        sample_violations=cfg.sample_violations,
-    )
-    results = results.withColumn("kind", F.lit("unique_global")).persist()
-    res_rows = results.collect()  # tiny: partitions x key_cols
-    results.coalesce(1).write.mode("overwrite").parquet(
-        f"{output_dir}/constraint_results_global"
-    )
-    violations.coalesce(1).write.mode("overwrite").parquet(
-        f"{output_dir}/violations_global"
-    )
-    results.unpersist()
-    n_violations = sum(r.n_violations for r in res_rows)
-    failed_parts = sorted({r.part_id for r in res_rows if not r.passed})
+    # the key counts evaluate persists are released when the pass ends,
+    # so a later pass over rewritten partitions counts the new rows
+    cached: list[DataFrame] = []
+    try:
+        results, violations = C.evaluate(
+            images, checks, part_col="part_id",
+            sample_violations=cfg.sample_violations, cached=cached,
+        )
+        # tiny (partitions x key_cols): collected, written from the driver
+        res = results.withColumn("kind", F.lit("unique_global")).toArrow()
+        write_table(res, f"{output_dir}/constraint_results_global")
+        violations.coalesce(1).write.mode("overwrite").parquet(
+            f"{output_dir}/violations_global"
+        )
+    finally:
+        for d in cached:
+            d.unpersist()
+    res_rows = res.to_pylist()
+    n_violations = sum(r["n_violations"] for r in res_rows)
+    failed_parts = sorted({r["part_id"] for r in res_rows if not r["passed"]})
     run_id = new_run_id()
     first = checks[0].name
-    table_rows = sum(r.n_rows for r in res_rows if r.constraint == first)
+    table_rows = sum(r["n_rows"] for r in res_rows if r["constraint"] == first)
     Manifest(spark, f"{output_dir}/manifest").record(
         run_id, "__global__", "done", started_at=t0,
         n_rows=int(table_rows),

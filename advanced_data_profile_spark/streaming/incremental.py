@@ -207,7 +207,7 @@ def finalize_stream_results(
     number of replays yields identical rows to one batch-pipeline pass
     over the same files."""
     from advanced_data_profile_spark.operators.constraints import (
-        rowwise_results_from_agg,
+        results_from_agg,
     )
 
     b = spark.read.parquet(f"{output_dir}/constraint_batches")
@@ -215,7 +215,7 @@ def finalize_stream_results(
         F.sum("n_rows").alias("n_rows"),
         *[F.sum(c.name).alias(f"__v_{i}") for i, c in enumerate(checks)],
     )
-    results = rowwise_results_from_agg(merged, checks, "part_id")
+    results = results_from_agg(merged, checks, "part_id")
     results.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("part_id").parquet(f"{output_dir}/constraint_results")

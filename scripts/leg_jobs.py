@@ -23,7 +23,12 @@ summary's ``legs`` timeline, so a leg that runs no Spark job, such as a
 driver-side pyarrow write, still shows what it costs.
 
 Prints one table per run; the last line of each table sums every leg,
-except its ``wall_s``, which is the whole run's wall time.
+except its ``wall_s``, which is the whole run's wall time. With
+``--jobs`` each table is followed by every job of the run, grouped by
+leg: its submit and completion times in seconds from the run's start
+(``submissionTime``/``completionTime`` in the store), its task counts
+and task seconds. A chain of small jobs, whose cost is scheduling latency rather
+than compute, shows there; the per-leg totals hide it.
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ import os
 import re
 import shutil
 import sys
+import time
 from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -82,6 +88,39 @@ def leg_work(sc, after_job: int) -> dict[str, dict]:
     return legs
 
 
+def job_spans(sc, after_job: int, t0: float) -> str:
+    """One line per job with an id above ``after_job``, grouped by leg
+    in order of first submission: job id, submit and complete times in
+    seconds from ``t0`` (epoch seconds), duration, tasks run, skipped
+    and failed, and the task seconds of its stages that ran."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    store = jsc.statusStore()
+    by_leg: dict[str, list] = defaultdict(list)
+    for job in sorted(_seq(store.jobsList(None)), key=lambda j: j.jobId()):
+        if job.jobId() <= after_job:
+            continue
+        desc = job.description()
+        sub, done = job.submissionTime(), job.completionTime()
+        start = sub.get().getTime() / 1e3 - t0 if sub.isDefined() else float("nan")
+        end = done.get().getTime() / 1e3 - t0 if done.isDefined() else float("nan")
+        stages = [store.lastStageAttempt(sid) for sid in _seq(job.stageIds())]
+        task_s = sum(st.executorRunTime() / 1e3 for st in stages
+                     if st.status().toString() != "SKIPPED")
+        by_leg[desc.get() if desc.isDefined() else "(none)"].append((
+            job.jobId(), start, end, job.numCompletedTasks(),
+            job.numSkippedTasks(), job.numFailedTasks(), task_s))
+    width = max([len(n) for n in by_leg] + [5])
+    out = [f"{'leg':<{width}} {'job':>5} {'submit_s':>9} {'done_s':>9} "
+           f"{'dur_s':>7} {'tasks':>6} {'skipped':>7} {'failed':>6} {'task_s':>7}"]
+    for name, jobs in sorted(by_leg.items(), key=lambda kv: kv[1][0][1]):
+        for jid, start, end, n, skipped, failed, task_s in jobs:
+            out.append(f"{name:<{width}} {jid:>5d} {start:>9.3f} {end:>9.3f} "
+                       f"{end - start:>7.3f} {n:>6d} {skipped:>7d} {failed:>6d} "
+                       f"{task_s:>7.2f}")
+    return "\n".join(out)
+
+
 def table(legs: dict[str, dict], wall: float) -> str:
     cols = ("wall_s", "jobs", "stages", "tasks", "task_s", "cpu_s", "py_stages")
     rows = sorted(legs.items(), key=lambda kv: (-kv[1]["task_s"], -kv[1]["wall_s"]))
@@ -100,6 +139,9 @@ def main() -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--jobs", action="store_true",
+                    help="also print every job of each leg with its submit and "
+                         "complete times and task counts")
     args = ap.parse_args()
 
     sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
@@ -120,15 +162,18 @@ def main() -> int:
         run.save_snapshot()
         for i in range(args.runs):
             run.reset()
-            first = last_job_id(sc)
+            first, t0 = last_job_id(sc), time.time()
             summary, wall = run.timed_run()
             legs = leg_work(sc, first)
+            spans = job_spans(sc, first, t0) if args.jobs else None
             for name, (start, end) in summary["legs"].items():
                 legs[name]["wall_s"] = end - start
             errs = run.check(summary)
             print(f"# {wl.name} seed {args.seed} run {i + 1}: {wall:.2f} s, "
                   f"{'correct' if not errs else 'FAILED: ' + '; '.join(errs)}")
             print(table(legs, wall), flush=True)
+            if spans:
+                print(spans, flush=True)
     finally:
         if spark is not None:
             spark_env.stop_jvm(spark)

@@ -34,13 +34,6 @@ def decimal_places(c: Column) -> Column:
     return F.coalesce(F.length(frac), F.lit(0))
 
 
-def is_integral(c: Column) -> Column:
-    """True iff every non-null value satisfies x % 1 == 0
-    (reference Profiler.py:208-210). Aggregate expression."""
-    ok = (c == F.floor(c)).cast("int")
-    return F.coalesce(F.min(ok) == 1, F.lit(False))
-
-
 def _iter_caps(a_max: float) -> tuple[int, int]:
     """Iteration caps scaled with a = dof/2. The series needs ~a + few
     sqrt(a) terms when x is near a (term ratio x/n only drops below 1

@@ -413,8 +413,8 @@ def drift_from_stored_state(
     **kwargs,
 ) -> DataFrame:
     """`drift_from_sketches` over two pipeline runs' PERSISTED sketch
-    state ({output_dir}/profile_sketches, written by plans.pipeline
-    when persist_sketches is on). Optional part_id filters compare any
+    state ({output_dir}/profile_sketches, written by every approx-mode
+    plans.pipeline run). Optional part_id filters compare any
     partition subsets — e.g. this week's partitions vs last week's —
     reading only the tiny sketch relations; the raw tables are never
     rescanned. `base_path`/`cur_path` may be the same directory with

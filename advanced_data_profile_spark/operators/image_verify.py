@@ -12,8 +12,11 @@ decode UDFs"):
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set in session.py)
   because rows are payload-wide. ``validate_payloads_files`` is the
   same kernel with the parquet row groups read by pyarrow INSIDE the
-  Python workers — bytes never enter the JVM (the pipeline's default
-  decode leg for hive-layout parquet).
+  Python workers — bytes never enter the JVM. Its tasks are byte-sized
+  file slices planned on the driver from the partition listing
+  (``decode_file_tasks``: no footer read, no Spark job), so it is the
+  pipeline's decode leg for every hive-layout parquet source; the JVM
+  scan serves only sources with no hive listing (Iceberg, flat files).
 
 - ``verify_against_reference``: per-row invariant vs a reference table —
   decoded-pixel PSNR (>= min_psnr passes; lossless identical ⇒ capped
@@ -46,6 +49,36 @@ VERIFY_SCHEMA = (
     "caption_ok boolean, error string"
 )
 
+# decode slices are sized as Spark sizes its parquet splits at its
+# defaults (spark.sql.files.maxPartitionBytes and openCostInBytes):
+# min(MAX_SPLIT_BYTES, max(MIN_SPLIT_BYTES, pending bytes / cores)).
+# The JVM scan's child session reads MAX_SPLIT_BYTES too.
+MAX_SPLIT_BYTES = 128 << 20
+MIN_SPLIT_BYTES = 4 << 20
+# rows per Arrow batch of a decode slice (rows are payload-wide; the
+# same bound session.py sets for the JVM leg's Arrow batches)
+_BATCH_ROWS = 2048
+# most partitions the decode task relation is spread over
+_MAX_DECODE_PARTITIONS = 100_000
+
+
+def _binary_views(barr, n):
+    """(offsets, data-memoryview, array) for a flat Arrow binary array —
+    the zero-copy access pattern both kernels use: payload i is
+    data[offsets[i]:offsets[i+1]], no per-row Python bytes objects."""
+    import pyarrow as pa
+
+    if isinstance(barr, pa.ChunkedArray):  # defensive; batches are flat
+        barr = barr.combine_chunks()
+    bufs = barr.buffers()
+    # [validity, offsets, data]; honor the array's logical offset
+    off_dtype = np.int64 if pa.types.is_large_binary(barr.type) else np.int32
+    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
+        barr.offset: barr.offset + n + 1
+    ]
+    data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
+    return offsets, data, barr
+
 
 def _validate_arrow(it):
     """Arrow-native validation kernel: payloads are read as ZERO-COPY
@@ -61,16 +94,7 @@ def _validate_arrow(it):
         ws = cols["w"].to_numpy(zero_copy_only=False)
         hs = cols["h"].to_numpy(zero_copy_only=False)
         fmts = cols["fmt"].to_pylist()
-        barr = cols["bytes"]
-        if isinstance(barr, pa.ChunkedArray):  # defensive; batches are flat
-            barr = barr.combine_chunks()
-        bufs = barr.buffers()
-        # [validity, offsets, data]; honor the array's logical offset
-        off_dtype = np.int64 if pa.types.is_large_binary(barr.type) else np.int32
-        offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-            barr.offset: barr.offset + n + 1
-        ]
-        data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
+        offsets, data, barr = _binary_views(cols["bytes"], n)
 
         decode_ok = np.zeros(n, dtype=bool)
         dims_match = np.zeros(n, dtype=bool)
@@ -107,21 +131,23 @@ def validate_payloads(images: DataFrame) -> DataFrame:
 
 def decode_file_tasks(
     spark, images_path: str, part_ids: list
-) -> list[tuple[str, int, int]]:
-    """(path, part_id, row_group) decode tasks for the pyarrow decode
-    leg, covering exactly the pending hive partitions. File listing is
-    per part-dir via the Hadoop FS API (pruning = listing only pending
-    dirs); row-group counts come from a DISTRIBUTED footer read (one
-    tiny Spark job over the file list, built from an Arrow table so it
-    plans as a JVM LocalTableScan with no pickled-row stage in front),
-    not a driver loop over file opens. At real-table scale the task
-    list is the same O(files) driver state Spark's own file index
-    holds; an Iceberg deployment would derive it from the manifest's
-    per-file metrics instead of footer reads."""
-    import pyarrow as pa
-
+) -> list[tuple[str, int, int, int]]:
+    """(path, part_id, k, n) decode tasks for the pyarrow decode leg,
+    covering exactly the pending hive partitions, planned on the driver
+    from the per-part-dir listing alone (Hadoop FS API; pruning = listing
+    only pending dirs): no footer is read and no Spark job runs. A file
+    of ``len`` bytes is cut into n = ceil(len / split) slices, with split
+    = min(MAX_SPLIT_BYTES, max(MIN_SPLIT_BYTES, pending bytes /
+    defaultParallelism)) — the split size Spark's parquet scan computes
+    at its defaults. Slice k decodes the file's row groups
+    [k·R//n, (k+1)·R//n), so each row group is read by exactly one task
+    and, like a Spark split holding no row-group midpoint, a slice past
+    the file's row-group count is empty. So on any hive input this leg
+    has at least as many non-empty tasks as the JVM scan. At
+    real-table scale the task list is the same O(files) driver state
+    Spark's own file index holds."""
     from advanced_data_profile_spark.session import (
-        hadoop_list_files,
+        hadoop_list_file_sizes,
         hadoop_path_exists,
     )
 
@@ -136,73 +162,44 @@ def decode_file_tasks(
         # shape for missing dirs; real listing errors still propagate.
         if not hadoop_path_exists(spark, d):
             continue
-        files += [(p, int(pid)) for p in hadoop_list_files(spark, d)]
-    if not files:
-        return []
-    fdf = spark.createDataFrame(
-        pa.table(list(zip(*files)), names=["path", "part_id"]), "path string, part_id int"
-    ).repartition(min(len(files), spark.sparkContext.defaultParallelism))
-
-    def footers(it):
-        import pyarrow.parquet as pq
-
-        for b in it:
-            paths = b.column(0).to_pylist()
-            pids = b.column(1).to_pylist()
-            nrgs = [
-                pq.ParquetFile(pyarrow_path(p)).metadata.num_row_groups
-                for p in paths
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    b.column(1),
-                    pa.array(nrgs, type=pa.int32()),
-                ],
-                names=["path", "part_id", "n_rgs"],
-            )
-
-    meta = fdf.mapInArrow(
-        footers, "path string, part_id int, n_rgs int"
-    ).collect()
+        files += [(p, int(pid), size) for p, size in hadoop_list_file_sizes(spark, d)]
+    pending = sum(size for _, _, size in files)
+    split = min(MAX_SPLIT_BYTES, max(
+        MIN_SPLIT_BYTES, pending // spark.sparkContext.defaultParallelism))
     return [
-        (r.path, int(r.part_id), rg)
-        for r in sorted(meta, key=lambda r: r.path)
-        for rg in range(int(r.n_rgs))
+        (p, pid, k, n)
+        for p, pid, size in sorted(files)
+        for n in [-(-size // split)]
+        for k in range(n)
     ]
 
 
 def validate_payloads_files(
-    spark,
-    images_path: str,
-    part_ids: list,
-    tasks: list | None = None,
-    batch_size: int = 2048,
-    max_tasks_per_partition_cap: int = 100_000,
+    spark, images_path: str, part_ids: list, tasks: list | None = None
 ) -> DataFrame:
     """The pyarrow DECODE LEG: same validation rows as
     validate_payloads, but the payload bytes are read by pyarrow
-    INSIDE the Python workers (one task per parquet row group) instead
-    of flowing parquet -> JVM scan -> Arrow IPC -> Python. On a
-    memory-bandwidth-bound box that extra JVM hop is the decode
-    stage's dominant cost: A/B at the 512k-image scaling fixture
-    (local[32], min-of-3) measured 13.5s for the JVM scan at 16m
-    splits, 6.1s at its best split size (256m), and 3.97s for this
+    INSIDE the Python workers (one task per file slice, see
+    decode_file_tasks) instead of flowing parquet -> JVM scan -> Arrow
+    IPC -> Python. On a memory-bandwidth-bound box that extra JVM hop
+    is the decode stage's dominant cost: A/B at the 512k-image scaling
+    fixture (local[32], min-of-3) measured 13.5s for the JVM scan at
+    16m splits, 6.1s at its best split size (256m), and 3.97s for this
     leg — AT the frameworkless kernel probe's 4.05s floor, i.e. zero
     measurable framework overhead on the bytes stream. The decoded
     verdicts (6 narrow columns) are the only rows that ever cross
     into the JVM.
 
-    Distribution: the task relation (path, part_id, row_group), an
-    Arrow table (a LocalTableScan), is round-robin repartitioned so
-    each Spark task streams its row group's batches through the same
-    zero-copy _validate_arrow kernel as the JVM leg — identical
-    output, property- and parity-tested.
-    Granularity is one row group (Spark's own split floor for
-    parquet); callers should prefer the JVM leg when the task count
-    can't cover the cluster (pipeline 'auto' mode checks this).
-    Partition count is capped so a billion-row-group table doesn't
-    ask the scheduler for a billion single-row partitions."""
+    Distribution: the task relation (path, part_id, k, n), an Arrow
+    table (a LocalTableScan), is round-robin repartitioned so each
+    Spark task opens its file's footer, takes its slice's row groups
+    and streams them through the same zero-copy _validate_arrow kernel
+    as the JVM leg — identical output, property- and parity-tested.
+    The slices are sized as Spark sizes its parquet splits, so the
+    pipeline decodes every hive-layout parquet source through this leg
+    whatever its size. Partition count is capped so a billion-slice
+    table doesn't ask the scheduler for a billion single-task
+    partitions."""
     import pyarrow as pa
 
     if tasks is None:
@@ -213,30 +210,31 @@ def validate_payloads_files(
             f"{list(part_ids)[:5]}..."
         )
     tdf = spark.createDataFrame(
-        pa.table(list(zip(*tasks)), names=["path", "part_id", "row_group"]),
-        "path string, part_id int, row_group int",
-    ).repartition(min(len(tasks), max_tasks_per_partition_cap))
+        pa.table(list(zip(*tasks)), names=["path", "part_id", "k", "n"]),
+        "path string, part_id int, k int, n int",
+    ).repartition(min(len(tasks), _MAX_DECODE_PARTITIONS))
 
-    def decode_rgs(it):
+    def decode_slices(it):
         import pyarrow.parquet as pq
 
         cols = ["image_id", "bytes", "w", "h", "fmt"]
         for b in it:
-            paths = b.column(0).to_pylist()
-            pids = b.column(1).to_pylist()
-            rgs = b.column(2).to_pylist()
-            for p, pid, rg in zip(paths, pids, rgs):
-                pf = pq.ParquetFile(pyarrow_path(p))
-                for rb in pf.iter_batches(
-                    batch_size=batch_size, row_groups=[rg], columns=cols
-                ):
-                    rb = rb.append_column(
-                        "part_id",
-                        pa.array([pid] * rb.num_rows, type=pa.int32()),
-                    )
-                    yield from _validate_arrow([rb])
+            for p, pid, k, n in zip(*(c.to_pylist() for c in b.columns)):
+                with pq.ParquetFile(pyarrow_path(p)) as pf:
+                    r = pf.metadata.num_row_groups
+                    rgs = list(range(k * r // n, (k + 1) * r // n))
+                    if not rgs:
+                        continue
+                    for rb in pf.iter_batches(
+                        batch_size=_BATCH_ROWS, row_groups=rgs, columns=cols
+                    ):
+                        rb = rb.append_column(
+                            "part_id",
+                            pa.array([pid] * rb.num_rows, type=pa.int32()),
+                        )
+                        yield from _validate_arrow([rb])
 
-    return tdf.mapInArrow(decode_rgs, schema=VALIDATION_SCHEMA)
+    return tdf.mapInArrow(decode_slices, schema=VALIDATION_SCHEMA)
 
 
 def validation_verdicts(validated: DataFrame) -> DataFrame:
@@ -266,24 +264,6 @@ def validation_verdicts(validated: DataFrame) -> DataFrame:
         "part_id", "s.constraint", F.lit("image").alias("kind"),
         "n_rows", "s.n_violations", (F.col("s.n_violations") == 0).alias("passed"),
     )
-
-
-def _binary_views(barr, n):
-    """(offsets, data-memoryview, validity-checker) for a flat Arrow
-    binary array — the zero-copy access pattern _validate_arrow uses:
-    payload i is data[offsets[i]:offsets[i+1]], no per-row Python
-    bytes objects."""
-    import pyarrow as pa
-
-    if isinstance(barr, pa.ChunkedArray):  # defensive; batches are flat
-        barr = barr.combine_chunks()
-    bufs = barr.buffers()
-    off_dtype = np.int64 if pa.types.is_large_binary(barr.type) else np.int32
-    offsets = np.frombuffer(bufs[1], dtype=off_dtype)[
-        barr.offset: barr.offset + n + 1
-    ]
-    data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-    return offsets, data, barr
 
 
 def _verify_arrow(min_psnr: float):

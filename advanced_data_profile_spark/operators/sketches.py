@@ -191,7 +191,7 @@ def rollup_stored_profile_sketches(
 ) -> DataFrame:
     """Table-level profile stats from the pipeline's PERSISTED
     per-partition sketch state ({output_dir}/profile_sketches, written
-    by plans.pipeline when persist_sketches is on): one row per column
+    by every approx-mode plans.pipeline run): one row per column
     with the merged HLL distinct estimate and merged KLL quantiles.
     Reads only the tiny sketch relation — the raw table is never
     rescanned, which is the point: at 10^12 rows a table-level (or

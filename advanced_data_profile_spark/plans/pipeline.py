@@ -19,7 +19,9 @@ inputs exist. Legs and their `after=` edges, in declaration order:
                             read on the driver (after
                             id_index_supersede_heal when a crashed
                             backfill left its marker)
-  decode_plan               row-group task listing for the payload pass
+  decode_plan               the payload pass's file-slice tasks, planned
+                            on the driver from the partition listing (no
+                            Spark job)
   decode_verify             after decode_plan: the payload pass, the only
                             scan reading `bytes`; its per-partition
                             verdicts collected through Arrow
@@ -107,6 +109,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from advanced_data_profile_spark.operators import constraints as C
+from advanced_data_profile_spark.operators import image_verify as IV
 from advanced_data_profile_spark.operators.drift import (
     categorical_counts,
     categorical_drift_verdicts,
@@ -115,10 +118,6 @@ from advanced_data_profile_spark.operators.drift import (
     histogram,
     ks_psi_arrow,
     shared_bins,
-)
-from advanced_data_profile_spark.operators.image_verify import (
-    validate_payloads,
-    validation_verdicts,
 )
 from advanced_data_profile_spark.operators.stats import (
     SKIP_PROFILE_TYPES,
@@ -172,11 +171,6 @@ class PipelineConfig:
     id_index_table: str | None = None
     id_index_location: str | None = None
     id_index_buckets: int = 16
-    # persist per-(partition, column) KLL/HLL sketch STATE next to the
-    # profile values (approx mode only; the fused agg shares buffers so
-    # the marginal scan cost is ~zero) — later rollups merge stored
-    # sketches instead of rescanning raw data
-    persist_sketches: bool = True
 
 
 class _Legs:
@@ -306,42 +300,37 @@ def _payload_verdicts(
     spark: SparkSession, images_path: str, pending_ids: list, cfg: PipelineConfig
 ) -> DataFrame:
     """The decode pass's verdict rows over the pending partitions
-    (lazy). The scan is chosen from the source: row-group tasks read
-    by pyarrow INSIDE the Python workers
-    (image_verify.validate_payloads_files; bytes never cross the JVM,
-    measured at the frameworkless kernel floor: 3.97s vs 6.1s best-JVM
-    at the 512k scaling fixture, local[32] min-of-3) when the source is
-    a hive part_id=K parquet layout AND the row-group task count covers
-    the cluster (>= defaultParallelism); otherwise the Catalyst parquet
-    scan + mapInArrow (non-parquet/Iceberg sources, flat layouts, or
-    inputs too small to fill the cluster at row-group granularity)."""
-    from advanced_data_profile_spark.operators.image_verify import (
-        decode_file_tasks,
-        validate_payloads_files,
-    )
-
+    (lazy). A hive part_id=K parquet layout with any file to decode
+    goes through the pyarrow leg: byte-sized file slices planned on
+    the driver from the partition listing, read by pyarrow INSIDE the
+    Python workers (image_verify.validate_payloads_files; bytes never
+    cross the JVM, measured at the frameworkless kernel floor: 3.97s vs
+    6.1s best-JVM at the 512k scaling fixture, local[32] min-of-3). Its
+    slices are sized as Spark sizes its splits, so it has at least as
+    many tasks as the JVM scan on any hive input. Sources with no hive
+    listing (Iceberg, flat layouts) take the Catalyst parquet scan +
+    mapInArrow."""
     # no first-partition existence gate: decode_file_tasks itself
     # skips pending partitions without a hive dir, and a flat non-hive
     # layout simply yields zero tasks
     tasks = []
     if cfg.table_format == "parquet":
-        tasks = decode_file_tasks(spark, images_path, pending_ids)
-    if len(tasks) >= spark.sparkContext.defaultParallelism:
-        return validation_verdicts(validate_payloads_files(
+        tasks = IV.decode_file_tasks(spark, images_path, pending_ids)
+    if tasks:
+        return IV.validation_verdicts(IV.validate_payloads_files(
             spark, images_path, pending_ids, tasks=tasks
         ))
     # JVM scan leg in a child session (shared context, independent
-    # SQLConf). 128m splits: the old 16m "balanced small tasks" sizing
-    # was A/B-measured 2x slower at scale (13.5s vs 8.1s @128m / 6.1s
-    # @256m on the 512k fixture) — per-task scheduling + Arrow-stream
-    # setup dominates below ~100m; 128m keeps a small-fixture wave
-    # balanced while near the large-split plateau.
+    # SQLConf), at the split size the pyarrow leg's slices use: the old
+    # 16m "balanced small tasks" sizing was A/B-measured 2x slower at
+    # scale (13.5s vs 8.1s @128m / 6.1s @256m on the 512k fixture) —
+    # per-task scheduling + Arrow-stream setup dominates below ~100m.
     s2 = spark.newSession()
-    s2.conf.set(SPLIT_CONF, "128m")
+    s2.conf.set(SPLIT_CONF, str(IV.MAX_SPLIT_BYTES))
     df2 = read_images(s2, images_path, fmt=cfg.table_format).where(
         F.col("part_id").isin(pending_ids)
     )
-    return validation_verdicts(validate_payloads(df2))
+    return IV.validation_verdicts(IV.validate_payloads(df2))
 
 
 def run_pipeline(
@@ -430,10 +419,11 @@ def _run_pipeline(
         }
     if cfg.validate_images:
         # the decode pass is the critical path: its legs start first,
-        # before the metadata plans are even built, so its footer-read
-        # and decode jobs are submitted ahead of the metadata jobs and
-        # FIFO scheduling lets those back-fill the cores it leaves idle.
-        # Planning is its own leg, so decode_verify times the job alone.
+        # before the metadata plans are even built, so its decode job is
+        # submitted ahead of the metadata jobs and FIFO scheduling lets
+        # those back-fill the cores it leaves idle. Planning (a driver
+        # listing, no Spark job) is its own leg, so decode_verify times
+        # the job alone.
         legs.leg("decode_plan", lambda: _payload_verdicts(spark, images_path, pending_ids, cfg))
         legs.leg("decode_verify", lambda v: v.toArrow(), after=["decode_plan"])
     # partition pruning: isin on the partition column prunes at the scan
@@ -493,8 +483,7 @@ def _run_pipeline(
         wide = meta_nb.groupBy("part_id").agg(
             F.count(F.lit(1)).alias("n_rows"),
             *[column_profile_struct(c, dtypes[c], True) for c in prof_cols],
-            *([sketch_state_struct(c, dtypes[c]) for c in prof_cols]
-              if cfg.persist_sketches else []),
+            *[sketch_state_struct(c, dtypes[c]) for c in prof_cols],
             *C.rowwise_count_exprs(rowwise),
         )
 
@@ -658,7 +647,7 @@ def _run_pipeline(
         lambda p: _store(_melt(p, "__p_") if cfg.approx else p, "column_profiles"),
         after=[prof],
     )
-    if cfg.approx and cfg.persist_sketches:
+    if cfg.approx:
         writes.append("write_profile_sketches")
         legs.leg("write_profile_sketches",
                  lambda w: _store(_melt(w, "__sk_"), "profile_sketches"), after=[prof])
@@ -895,8 +884,8 @@ def sketch_drift_between_runs(
     write: bool = True,
 ):
     """Snapshot-over-snapshot drift from two pipeline runs' PERSISTED
-    sketch state ({output_dir}/profile_sketches, written when
-    PipelineConfig.persist_sketches is on): KS/PSI per column via
+    sketch state ({output_dir}/profile_sketches, written by every
+    approx-mode run): KS/PSI per column via
     operators.drift.drift_from_sketches — a merge over the tiny stored
     sketch relations, no raw-data rescan, no bin pre-pinning, and any
     partition subsets comparable after the fact (base_parts/cur_parts).

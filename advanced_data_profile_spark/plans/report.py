@@ -15,17 +15,21 @@ import json
 import time
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from advanced_data_profile_spark.plans.manifest import Manifest, latest_rows
 
 
-def _rows(spark: SparkSession, path: str) -> list[dict]:
+def _rows(spark: SparkSession, path: str, limit: int | None = None) -> list[dict]:
     from advanced_data_profile_spark.session import hadoop_path_exists
 
     # FileSystem-API probe: a skipped stage legitimately has no table,
     # but a real read error on an existing one must propagate
     if not hadoop_path_exists(spark, path):
         return []
-    return [r.asDict(recursive=True) for r in spark.read.parquet(path).collect()]
+    df = spark.read.parquet(path)
+    if limit is not None:
+        df = df.limit(limit)
+    return [r.asDict(recursive=True) for r in df.collect()]
 
 
 def assemble_report(
@@ -36,8 +40,9 @@ def assemble_report(
     drift = _rows(spark, f"{output_dir}/drift_results")
     cat_drift = _rows(spark, f"{output_dir}/drift_results_categorical")
     hists = _rows(spark, f"{output_dir}/histograms")
-    manifest = _rows(spark, f"{output_dir}/manifest")
-    violations = _rows(spark, f"{output_dir}/violations")
+    manifest = Manifest(spark, f"{output_dir}/manifest").rows()
+    # every violating key is stored (unbounded); the report shows 200
+    violations = _rows(spark, f"{output_dir}/violations", limit=200)
     row_sample = _rows(spark, f"{output_dir}/row_sample")
     global_constraints = _rows(spark, f"{output_dir}/constraint_results_global")
 
@@ -85,12 +90,8 @@ def assemble_report(
 
     # the manifest is append-only: a partition re-processed across runs
     # has multiple rows — count only the LATEST row per partition (the
-    # same max_by convention as Manifest.done_parts)
-    latest: dict[str, dict] = {}
-    for m in manifest:
-        ts = m.get("finished_at") or m.get("started_at") or 0
-        if m["part_id"] not in latest or ts >= latest[m["part_id"]][0]:
-            latest[m["part_id"]] = (ts, m)
+    # rule Manifest.done_set resolves resume by)
+    latest = latest_rows(manifest)
 
     # cross-RUN global checks (unique_global): latest full-table pass,
     # grouped per constraint with per-partition attribution
@@ -123,7 +124,7 @@ def assemble_report(
         "n_partitions": len(parts),
         "total_rows": sum(
             m["n_rows"] or 0
-            for _, m in latest.values()
+            for m in latest.values()
             if m["status"] == "done" and m["part_id"] != "__global__"
         ),
         "overall_passed": all(p["passed"] for p in per_partition.values())
@@ -131,7 +132,7 @@ def assemble_report(
         "partitions": per_partition,
         "global_constraints": global_checks,
         "histograms": hists,
-        "violation_samples": violations[:200],
+        "violation_samples": violations,
         "row_sample": row_sample[:100],
         "lineage": manifest,
     }

@@ -104,11 +104,6 @@ def pyarrow_fs(path: str):
     return pafs.FileSystem.from_uri(target)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Load one of the driver-provided parquet tables."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     """Filesystem-agnostic existence probe via the Hadoop FileSystem API
     (works for file://, hdfs://, s3a:// — wherever the output lives).
@@ -157,6 +152,12 @@ def hadoop_list_files(spark: SparkSession, path: str) -> list[str]:
     snapshot zero data files (e.g. a streaming batch_id-partitioned
     state written into a flat index path) — every batch would "match
     nothing". Loud failure beats a silently empty index."""
+    return [p for p, _ in hadoop_list_file_sizes(spark, path)]
+
+
+def hadoop_list_file_sizes(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """hadoop_list_files with each file's length, both from the same
+    FileStatus (no extra call per file)."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -174,4 +175,4 @@ def hadoop_list_files(spark: SparkSession, path: str) -> list[str]:
             "(streaming batch_id-partitioned state has its own path "
             "contract)."
         )
-    return [st.getPath().toString() for st in visible]
+    return [(st.getPath().toString(), int(st.getLen())) for st in visible]

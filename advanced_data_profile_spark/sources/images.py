@@ -213,9 +213,9 @@ def write_images_bucketed(
 def read_images(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     if fmt == "iceberg":
         return spark.read.format("iceberg").load(path)
-    df = spark.read.parquet(path)
-    # parquet partition columns come back as the discovered type; pin int
-    return df.withColumn("part_id", F.col("part_id").cast("int"))
+    # the declared schema (part_id included, as an int) spares a
+    # footer-read Spark job per read to infer it
+    return spark.read.schema(IMAGES_SCHEMA).parquet(path)
 
 
 def phash_reference(images: DataFrame) -> DataFrame:

@@ -253,7 +253,7 @@ Job: end-to-end images validation — metadata column profile (one wide
 agg), constraint verdicts + violations (fused row-wise agg, two-stage
 uniqueness via map-side partial combine, broadcast anti-join
 referential), payload
-decode/verify (the only bytes-reading pass — pyarrow row-group tasks
+decode/verify (the only bytes-reading pass — pyarrow file-slice tasks
 decoded inside the Python workers, zero-copy Arrow kernel),
 shared-bin KS/PSI drift, manifest commit. Fixture: {n_parts} partitions,
 dims {DIMS[0]}/{DIMS[1]} (~12-50 KB payloads), decode-dominant like

@@ -229,3 +229,56 @@ def test_pyarrow_decode_leg_tolerates_missing_part_dir(spark, images_path):
     with_missing = decode_file_tasks(spark, images_path, [1, 9999])
     only_real = decode_file_tasks(spark, images_path, [1])
     assert with_missing == only_real and len(only_real) > 0
+
+
+def test_pyarrow_decode_slices_read_each_row_group_once(spark, tmp_path, monkeypatch):
+    """A hive file with several row groups, cut into more slices than
+    it has row groups (the split constant made small): the slices
+    cover every row group exactly once, so the pyarrow leg yields every
+    row once and the same multiset as the JVM leg."""
+    import pyarrow.parquet as pq
+
+    from advanced_data_profile_spark.operators import image_verify as IV
+    from advanced_data_profile_spark.sources.images import generate_images
+
+    part = tmp_path / "rgs" / "part_id=0"
+    part.mkdir(parents=True)
+    t = generate_images(spark, n_parts=1, rows_per_part=500).drop("part_id").toArrow()
+    pq.write_table(t, str(part / "f.parquet"), row_group_size=100,
+                   compression="none")
+    assert pq.ParquetFile(str(part / "f.parquet")).metadata.num_row_groups == 5
+    size = (part / "f.parquet").stat().st_size
+    monkeypatch.setattr(IV, "MIN_SPLIT_BYTES", 1)
+    monkeypatch.setattr(IV, "MAX_SPLIT_BYTES", size // 10)
+    n = -(-size // (size // 10))  # 10 or 11 slices over 5 row groups
+    path = str(tmp_path / "rgs")
+    tasks = IV.decode_file_tasks(spark, path, [0])
+    assert [t[2:] for t in tasks] == [(k, n) for k in range(n)]
+    rows = IV.validate_payloads_files(spark, path, [0], tasks=tasks).collect()
+    assert len(rows) == 500
+
+    def norm(rs):
+        return sorted(
+            (r.image_id, r.part_id, r.decode_ok, r.dims_match, r.fmt_known, r.error)
+            for r in rs
+        )
+
+    jvm = IV.validate_payloads(read_images(spark, path)).collect()
+    assert norm(rows) == norm(jvm)
+
+
+def test_decode_slices_follow_spark_split_size(spark, images_path):
+    """With no monkeypatching, a small hive input gets the floor split
+    (MIN_SPLIT_BYTES): one slice per file of the fixture, planned from
+    the listing with no Spark job."""
+    from advanced_data_profile_spark.operators import image_verify as IV
+
+    sc = spark.sparkContext
+    sc.setJobGroup("decode_plan_probe", "decode_plan_probe")
+    try:
+        tasks = IV.decode_file_tasks(spark, images_path, [0, 1, 2, 3])
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("decode_plan_probe") == []
+    assert sorted(t[1] for t in tasks) == [0, 1, 2, 3]
+    assert all(t[2:] == (0, 1) for t in tasks)

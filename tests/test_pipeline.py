@@ -383,3 +383,41 @@ def test_file_uri_output_dir_commits_and_resumes(spark, images_path, tmp_path, m
     assert Manifest(spark, f"{out}/manifest").exists()
     assert run_pipeline(spark, images_path, out, cfg=cfg)["partitions"] == 0
     assert not [d for d in os.listdir(tmp_path) if d.startswith("file:")]
+
+
+def test_small_hive_input_decodes_without_the_jvm_scan(spark, tmp_path, monkeypatch):
+    """Two hive partitions on the 8-core session (fewer files than
+    cores) still decode through the pyarrow leg: with the JVM scan
+    leg made to raise, the run succeeds and its decode verdicts equal
+    the planted ground truth."""
+    from advanced_data_profile_spark.operators import image_verify
+    from advanced_data_profile_spark.plans import pipeline
+    from advanced_data_profile_spark.sources.images import (
+        generate_images,
+        write_images,
+    )
+
+    def jvm_scan(_):
+        raise AssertionError("hive input reached the JVM decode scan")
+
+    monkeypatch.setattr(image_verify, "validate_payloads", jvm_scan)
+    monkeypatch.setattr(pipeline, "validate_payloads", jvm_scan, raising=False)
+    src = str(tmp_path / "hive")
+    write_images(generate_images(spark, n_parts=2, rows_per_part=40), src)
+    out = str(tmp_path / "out")
+    assert run_pipeline(spark, src, out)["partitions"] == 2
+
+    got = {
+        (int(r.part_id), r.constraint): r.n_violations
+        for r in spark.read.parquet(f"{out}/constraint_results")
+        .where(F.col("kind") == "image").collect()
+    }
+    expect = {}
+    for p, g in ground_truth(2, 40).items():
+        expect.update({
+            (p, "fmt_known"): g["fmt_violations"],
+            (p, "payload_decodes"): g["corrupt_payloads"] + g["fmt_violations"]
+            + g["w_domain_violations"] + g["dim_mismatch"],
+            (p, "dims_match_payload"): 0,
+        })
+    assert got == expect

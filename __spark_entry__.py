@@ -322,10 +322,10 @@ def q_decimal_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     from advanced_data_profile_spark.functions.numeric import decimal_places
 
     li = _t(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.max(decimal_places(F.col("l_quantity"))).cast("bigint").alias("dec_quantity"),
-        F.max(decimal_places(F.col("l_discount"))).cast("bigint").alias("dec_discount"),
-    )
+    return li.agg(*[
+        F.expr(f"CAST(max({decimal_places(c)}) AS BIGINT) AS dec_{c[2:]}")
+        for c in ("l_quantity", "l_discount")
+    ])
 
 
 def q_drift_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:

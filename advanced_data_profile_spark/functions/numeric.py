@@ -3,35 +3,38 @@
 The reference computes moments with pandas defaults: sample stddev
 (ddof=1), sample-adjusted skewness G1 and excess kurtosis G2
 (reference Profiler.py:706-726). Spark's built-ins are population
-(g1, g2), so the adjustment factors are applied explicitly here —
-as Column expressions, so they stay inside whole-stage codegen.
+(g1, g2), so the adjustment factors are applied explicitly here. Each
+formula is SQL text over the SQL of its operands, so a caller splices
+it into a larger expression (operators.stats builds each column's
+profile as one) and it stays inside whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+def sample_skewness(x: str, n: str) -> str:
+    """pandas-style G1 = g1 * sqrt(n*(n-1)) / (n-2) of the values ``x``
+    with non-NULL count ``n``; NULL when n < 3."""
+    return (
+        f"CASE WHEN {n} >= 3 THEN skewness({x})"
+        f" * (sqrt({n} * ({n} - 1)) / ({n} - 2)) END"
+    )
 
 
-def sample_skewness(c: Column, n: Column) -> Column:
-    """pandas-style G1 = g1 * sqrt(n*(n-1)) / (n-2); null when n < 3."""
-    g1 = F.skewness(c)
-    adj = F.sqrt(n * (n - 1)) / (n - 2)
-    return F.when(n >= 3, g1 * adj)
+def sample_kurtosis(x: str, n: str) -> str:
+    """pandas-style excess G2 = (n-1)/((n-2)(n-3)) * ((n+1)*g2 + 6) of
+    the values ``x`` with non-NULL count ``n``; NULL when n < 4."""
+    return (
+        f"CASE WHEN {n} >= 4 THEN ({n} - 1) / (({n} - 2) * ({n} - 3))"
+        f" * (({n} + 1) * kurtosis({x}) + 6) END"
+    )
 
 
-def sample_kurtosis(c: Column, n: Column) -> Column:
-    """pandas-style excess G2 = (n-1)/((n-2)(n-3)) * ((n+1)*g2 + 6); null when n < 4."""
-    g2 = F.kurtosis(c)
-    adj = (n - 1) / ((n - 2) * (n - 3)) * ((n + 1) * g2 + 6)
-    return F.when(n >= 4, adj)
-
-
-def decimal_places(c: Column) -> Column:
-    """Max number of digits after the decimal point, as rendered by a
-    plain string cast (reference Profiler.py:584-588 splits on '.')."""
-    frac = F.split(c.cast("string"), r"\.").getItem(1)
-    return F.coalesce(F.length(frac), F.lit(0))
+def decimal_places(c: str) -> str:
+    """Number of digits after the decimal point of ``c`` as rendered by
+    a plain string cast (reference Profiler.py:584-588 splits on '.');
+    0 when there is none."""
+    return rf"coalesce(length(split(CAST({c} AS STRING), '\\.')[1]), 0)"
 
 
 def _iter_caps(a_max: float) -> tuple[int, int]:

@@ -30,10 +30,15 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 RESULT_COLUMNS = ["part_id", "constraint", "kind", "n_rows", "n_violations", "passed"]
+# constraint_results as every driver-side writer stores it: one schema
+# for each of its files, whichever leg wrote them
+RESULT_SCHEMA = pa.schema(list(zip(RESULT_COLUMNS, (
+    pa.string(), pa.string(), pa.string(), pa.int64(), pa.int64(), pa.bool_()))))
 VIOLATION_COLUMNS = ["part_id", "constraint", "key", "detail"]
 
 
@@ -119,22 +124,18 @@ def results_arrow(agg, checks: list[Check]):
     """`results_from_agg` over a wide aggregate already on the driver:
     ``agg`` is a pyarrow Table with part_id, `n_rows` and the
     ``__v_<i>`` columns (one row per partition); returns the same
-    RESULT_COLUMNS rows as a pyarrow Table."""
-    import pyarrow as pa
+    RESULT_COLUMNS rows as a pyarrow Table of RESULT_SCHEMA."""
     import pyarrow.compute as pc
 
-    part, n = pc.cast(agg["part_id"], pa.string()), agg.num_rows
+    part, n = agg["part_id"].cast(pa.string()), agg.num_rows
     return pa.concat_tables([
-        pa.table({
-            "part_id": part,
-            "constraint": pa.array([c.name] * n, pa.string()),
-            "kind": pa.array([c.kind] * n, pa.string()),
-            "n_rows": agg["n_rows"],
-            "n_violations": agg[f"__v_{i}"],
-            "passed": pc.equal(agg[f"__v_{i}"], 0),
-        })
+        pa.table([
+            part, pa.array([c.name] * n, pa.string()),
+            pa.array([c.kind] * n, pa.string()), agg["n_rows"],
+            agg[f"__v_{i}"], pc.equal(agg[f"__v_{i}"], 0),
+        ], schema=RESULT_SCHEMA)
         for i, c in enumerate(checks)
-    ], promote_options="default")
+    ])
 
 
 def rowwise_violation_samples(

@@ -93,196 +93,155 @@ SKETCH_FIELDS = [
 
 KLL_K = 2048      # ~0.2% normalized rank error
 HLL_LG_K = 12     # ~1.6% distinct-count error
+_QUANTILE_PROBS = (0.25, 0.5, 0.75)
+_QUANTILE_FIELDS = list(zip(("p25", "p50", "p75"), _QUANTILE_PROBS))
+
+
+def _ident(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str_lit(s: str) -> str:
+    """``s`` as a SQL string literal, read back unchanged."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _struct(schema: list[tuple[str, str]], exprs: dict[str, str], alias: str) -> Column:
+    """One ``named_struct`` aggregate with every field of ``schema``:
+    a field without SQL in ``exprs`` is ``CAST(NULL AS <its type>)``."""
+    body = ", ".join(
+        f"{_str_lit(f)}, {exprs.get(f, f'CAST(NULL AS {t})')}" for f, t in schema
+    )
+    return F.expr(f"named_struct({body}) AS {_ident(alias)}")
+
+
+def _kll(c: str) -> str:
+    return f"kll_sketch_agg_double(CAST({c} AS DOUBLE), {KLL_K})"
+
+
+def _hll(c: str) -> str:
+    return f"hll_sketch_agg(CAST({c} AS STRING), {HLL_LG_K})"
 
 
 def sketch_state_struct(name: str, dt: T.DataType) -> Column:
     """One column's mergeable sketch state as a struct-valued aggregate
-    — built with the IDENTICAL aggregate expressions
-    column_profile_struct(approx=True) uses for its quantile/distinct
-    stats, so when both are fused into one agg Catalyst dedupes them
-    into shared buffers: persisting the state costs (almost) nothing
-    beyond the profile scan itself."""
-    c = F.col(name)
-    if _is_numeric(dt):
-        kll = F.kll_sketch_agg_double(c.cast("double"), F.lit(KLL_K))
-    else:
-        kll = F.first(F.lit(None).cast("binary"))
-    hll = F.hll_sketch_agg(c.cast("string"), HLL_LG_K)
-    return F.struct(
-        F.lit(name).alias("column"), kll.alias("kll"), hll.alias("hll")
-    ).alias(f"__sk_{name}")
+    (SKETCH_FIELDS), one SQL expression. Its KLL and HLL aggregates are
+    the text column_profile_struct(approx=True) uses for its quantiles
+    and distincts, so when both are fused into one agg Catalyst dedupes
+    them into shared buffers: persisting the state costs (almost)
+    nothing beyond the profile scan itself. ``kll`` is NULL for a
+    non-numeric column."""
+    c = _ident(name)
+    kll = {"kll": _kll(c)} if _is_numeric(dt) else {}
+    exprs = {"column": _str_lit(name), "hll": _hll(c), **kll}
+    return _struct(SKETCH_FIELDS, exprs, f"__sk_{name}")
 
 
 def _is_numeric(dt: T.DataType) -> bool:
     return isinstance(dt, _NUMERIC_TYPES)
 
 
-def _is_time(dt: T.DataType) -> bool:
-    return isinstance(dt, _TIME_TYPES)
-
-
-def _null_d() -> Column:
-    return F.lit(None).cast("double")
+# requesting any field of a set computes the whole set
+_TOGETHER = (
+    {f for f, _ in _QUANTILE_FIELDS}, {"min_str", "max_str"}, {"n_distinct", "unique_ratio"},
+)
+_ALWAYS = {"column", "n_rows", "n_nonnull", "n_null", "null_ratio"}
+_NON_ASCII = _str_lit(r"[^\x00-\x7F]")
 
 
 def column_profile_struct(
     name: str, dt: T.DataType, approx: bool, with_quantiles: bool = True,
     fields: set[str] | None = None,
 ) -> Column:
-    """All stats for one column as a single struct-valued aggregate.
+    """All stats for one column as a single struct-valued aggregate:
+    one ``named_struct`` SQL expression, so building it is one
+    ``F.expr`` call (a handful of py4j round trips).
+
+    The NULL rule: each stat the column's type has maps to its SQL;
+    every PROFILE_FIELDS slot without one (the type lacks it, or
+    ``fields`` did not request it) is ``CAST(NULL AS <its type>)``, so
+    the melted schema is stable. ``fields`` (None = all) limits what is
+    COMPUTED, with these exceptions: n_rows, n_nonnull, n_null and
+    null_ratio are always computed; p25/p50/p75, min_str/max_str and
+    n_distinct/unique_ratio are each computed together; has_non_ascii
+    is false for a non-string column. The expensive off-menu items are
+    the string-cast aggregates (max_length/max_decimals render every
+    numeric value as a string — ~1.2s of a 1.6s fused agg on 4 double
+    columns at sf1.0) and skew/kurt's higher power sums; callers that
+    only read a subset (the profile_lineitem contract reads 9 of 22
+    fields) shouldn't pay for the rest.
 
     n_distinct note: exact ``count_distinct`` must NOT live in this
     struct — mixing DISTINCT aggregates with the heavy percentile /
     moment aggregates makes Catalyst rewrite the whole agg through an
     EXPAND (one replicated input copy per distinct group), multiplying
     the cost of every other aggregate (measured 10x at sf0.1). Exact
-    mode therefore computes distincts in a separate scan (see
-    ``profile``); approx HLL sketches are expand-free and stay fused.
-
-    ``fields`` (None = all) limits which stats are COMPUTED; the struct
-    always carries every PROFILE_FIELDS slot (unrequested ones as
-    NULL), so the melted schema is stable. The expensive off-menu items
-    are the string-cast aggregates (max_length/max_decimals render
-    every numeric value as a string — ~1.2s of a 1.6s fused agg on
-    4 double columns at sf1.0) and skew/kurt's higher power sums;
-    callers that only read a subset (the profile_lineitem contract
-    reads 9 of 22 fields) shouldn't pay for the rest.
+    mode therefore leaves n_distinct NULL and computes distincts in a
+    separate scan (see ``profile``); approx HLL sketches are
+    expand-free and stay fused. Exact mode without ``with_quantiles``
+    leaves the quantiles NULL too: they come from the rank search
+    (_exact_quantiles_driver), since Percentile is a
+    TypedImperativeAggregate whose boxed value->count map merges
+    single-threaded — measured 13s of an 18.9s profile on one
+    4.5M-distinct double column at sf1.0.
     """
-
-    def need(f: str) -> bool:
-        return fields is None or f in fields
-
-    c = F.col(name)
-    n_rows = F.count(F.lit(1))
-    n_nonnull = F.count(c)
-
-    if not (need("n_distinct") or need("unique_ratio")):
-        distinct = F.lit(None).cast("bigint")
-    elif approx:
-        # Datasketches HLL (same construction as sketch_state_struct, so
-        # a fused agg shares ONE buffer for the estimate and the
+    c = _ident(name)
+    n, nn, cd = "count(1)", f"count({c})", f"CAST({c} AS DOUBLE)"
+    stringy, numeric = isinstance(dt, T.StringType), _is_numeric(dt)
+    exprs = {
+        "column": _str_lit(name), "n_rows": n, "n_nonnull": nn, "n_null": f"{n} - {nn}",
+        "null_ratio": f"CASE WHEN {n} > 0 THEN ({n} - {nn}) / {n} END",
+        "max_length": f"CAST(max(length(CAST({c} AS STRING))) AS BIGINT)",
+    }
+    if approx:
+        # Datasketches HLL (the sketch_state_struct aggregate, so a
+        # fused agg shares ONE buffer for the estimate and the
         # persisted state; estimate error ~1.6% at lg_k=12)
-        distinct = F.hll_sketch_estimate(
-            F.hll_sketch_agg(c.cast("string"), HLL_LG_K)
-        ).cast("bigint")
-    else:
-        distinct = F.lit(None).cast("bigint")  # filled by the distinct pass
-
-    numeric = _is_numeric(dt)
-    timey = _is_time(dt)
-    stringy = isinstance(dt, T.StringType)
-
-    want_q = need("p25") or need("p50") or need("p75")
-    if numeric:
-        cd = c.cast("double")
-        if not want_q:
-            q = F.array(_null_d(), _null_d(), _null_d())
-        elif approx:
-            # KLL sketch quantiles (north_star: per-partition stats via
-            # 'KLL-sketch quantiles'): the sketch aggregate appears once
-            # (Catalyst dedupes identical aggregate expressions into one
-            # buffer), the three quantile reads are scalar post-steps.
-            # Unlike percentile_approx's GK summary, the KLL state is
-            # MERGEABLE (kll_merge_agg_double — see operators/sketches),
-            # so per-partition profile state rolls up without rescans.
-            # k=KLL_K → ~0.2% normalized rank error. A group with no
-            # non-NULL, non-NaN value leaves the sketch empty, which the
-            # quantile getter rejects: its quantiles are NULL.
-            sk = F.kll_sketch_agg_double(cd, F.lit(KLL_K))
-            q = F.array(*[
-                F.when(
-                    F.kll_sketch_get_n_double(sk) > 0,
-                    F.kll_sketch_get_quantile_double(sk, F.lit(p)),
-                )
-                for p in (0.25, 0.5, 0.75)
-            ])
-        elif with_quantiles:
-            q = F.percentile(cd, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-        else:
-            # exact quantiles come from the distributed histogram pass
-            # (_exact_quantile_relation) and are joined back; Percentile
-            # is a TypedImperativeAggregate whose boxed value->count map
-            # merges single-threaded — measured 13s of an 18.9s profile
-            # on one 4.5M-distinct double column at sf1.0
-            q = F.array(_null_d(), _null_d(), _null_d())
-        mean = F.avg(cd) if need("mean") else _null_d()
-        stddev = F.stddev_samp(cd) if need("stddev") else _null_d()
-        stddev_pop = F.stddev_pop(cd) if need("stddev_pop") else _null_d()
-        mn = F.min(cd) if need("min_num") else _null_d()
-        mx = F.max(cd) if need("max_num") else _null_d()
-        skew = sample_skewness(cd, n_nonnull) if need("skewness") else _null_d()
-        kurt = sample_kurtosis(cd, n_nonnull) if need("kurtosis") else _null_d()
-        p25, p50, p75 = q.getItem(0), q.getItem(1), q.getItem(2)
-        max_dec = (
-            F.max(decimal_places(c)).cast("bigint")
-            if need("max_decimals")
-            else F.lit(None).cast("bigint")
-        )
-    else:
-        mean = stddev = stddev_pop = mn = mx = skew = kurt = _null_d()
-        p25 = p50 = p75 = _null_d()
-        max_dec = F.lit(None).cast("bigint")
-
-    want_minmax_str = need("min_str") or need("max_str")
-    if not want_minmax_str:
-        min_str = max_str = F.lit(None).cast("string")
-    elif numeric or timey:
-        min_str = F.min(c).cast("string")
-        max_str = F.max(c).cast("string")
-    elif stringy:
-        min_str, max_str = F.min(c), F.max(c)
-    else:
-        min_str = max_str = F.lit(None).cast("string")
-
+        nd = f"CAST(hll_sketch_estimate({_hll(c)}) AS BIGINT)"
+        exprs["n_distinct"] = nd
+        exprs["unique_ratio"] = f"CASE WHEN {n} > 0 THEN {nd} / {n} END"
+    if stringy or numeric or isinstance(dt, _TIME_TYPES):
+        exprs.update((f"{m}_str", f"CAST({m}({c}) AS STRING)") for m in ("min", "max"))
     if stringy:
-        max_len = (
-            F.max(F.length(c)).cast("bigint")
-            if need("max_length")
-            else F.lit(None).cast("bigint")
+        exprs["has_non_ascii"] = (
+            f"coalesce(max(CAST({c} RLIKE {_NON_ASCII} AS INT)) = 1, false)"
         )
-        non_ascii = (
-            F.coalesce(
-                F.max(c.rlike(r"[^\x00-\x7F]").cast("int")) == 1, F.lit(False)
-            )
-            if need("has_non_ascii")
-            else F.lit(None).cast("boolean")
+    if numeric:
+        exprs.update(
+            mean=f"avg({cd})", stddev=f"stddev_samp({cd})",
+            stddev_pop=f"stddev_pop({cd})", min_num=f"min({cd})", max_num=f"max({cd})",
+            skewness=sample_skewness(cd, nn), kurtosis=sample_kurtosis(cd, nn),
+            max_decimals=f"CAST(max({decimal_places(c)}) AS BIGINT)",
         )
-    else:
-        max_len = (
-            F.max(F.length(c.cast("string"))).cast("bigint")
-            if need("max_length")
-            else F.lit(None).cast("bigint")
-        )
-        non_ascii = F.lit(False)
-
-    return F.struct(
-        F.lit(name).alias("column"),
-        n_rows.alias("n_rows"),
-        n_nonnull.alias("n_nonnull"),
-        (n_rows - n_nonnull).alias("n_null"),
-        F.when(n_rows > 0, (n_rows - n_nonnull) / n_rows).alias("null_ratio"),
-        distinct.cast("bigint").alias("n_distinct"),
-        F.when(n_rows > 0, distinct / n_rows).alias("unique_ratio"),
-        mean.alias("mean"),
-        stddev.alias("stddev"),
-        stddev_pop.alias("stddev_pop"),
-        mn.alias("min_num"),
-        mx.alias("max_num"),
-        p25.alias("p25"),
-        p50.alias("p50"),
-        p75.alias("p75"),
-        skew.alias("skewness"),
-        kurt.alias("kurtosis"),
-        min_str.alias("min_str"),
-        max_str.alias("max_str"),
-        max_len.alias("max_length"),
-        max_dec.alias("max_decimals"),
-        non_ascii.alias("has_non_ascii"),
-    ).alias(f"__p_{name}")
+    if numeric and approx:
+        # KLL sketch quantiles (north_star: per-partition stats via
+        # 'KLL-sketch quantiles'): the sketch aggregate appears once
+        # (Catalyst dedupes identical aggregate expressions into one
+        # buffer), the three quantile reads are scalar post-steps.
+        # Unlike percentile_approx's GK summary, the KLL state is
+        # MERGEABLE (kll_merge_agg_double — see operators/sketches), so
+        # per-partition profile state rolls up without rescans.
+        # k=KLL_K → ~0.2% normalized rank error. A group with no
+        # non-NULL, non-NaN value leaves the sketch empty, which the
+        # quantile getter rejects: its quantiles are NULL.
+        exprs.update((f, f"CASE WHEN kll_sketch_get_n_double({_kll(c)}) > 0 THEN "
+                         f"kll_sketch_get_quantile_double({_kll(c)}, {p}D) END")
+                     for f, p in _QUANTILE_FIELDS)
+    elif numeric and with_quantiles:
+        probs = ", ".join(f"{p}D" for p in _QUANTILE_PROBS)
+        exprs.update((f, f"percentile({cd}, array({probs}))[{i}]")
+                     for i, (f, _) in enumerate(_QUANTILE_FIELDS))
+    if fields is not None:
+        want = _ALWAYS | set(fields)
+        want |= {f for group in _TOGETHER if want & group for f in group}
+        exprs = {f: e for f, e in exprs.items() if f in want}
+    if not stringy:
+        exprs["has_non_ascii"] = "false"
+    return _struct(PROFILE_FIELDS, exprs, f"__p_{name}")
 
 
 _QUANTILE_BUCKETS = 1024
-_QUANTILE_PROBS = (0.25, 0.5, 0.75)
 # max exact-histogram rows the final quantile job may collect per
 # bracketing region; a needed region with more DISTINCT values than
 # this is sub-bucketed in another (cheap, filter-pushed) pass instead —

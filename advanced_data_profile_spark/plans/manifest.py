@@ -6,9 +6,10 @@ The manifest is an append-only table of per-partition run records:
   (run_id, part_id, status, started_at, finished_at, n_rows,
    metrics_json, input_path)
 
-Resume = anti-join pending partitions against DONE manifest rows (J5 in
+Resume = drop the partitions whose latest manifest row is DONE (J5 in
 SURVEY.md §2.6). The manifest is partitions-sized, so it is read on the
-driver with pyarrow (`rows`, `done_set`): no Spark job. Idempotence:
+driver with pyarrow (`rows`, `done_set`) and the partition ids are
+filtered against it there: no Spark job. Idempotence:
 result tables are written with dynamic partition overwrite keyed by
 part_id (`write_partitions` below for the driver-sized ones), so
 re-processing a partition replaces (not duplicates) its output; the
@@ -27,7 +28,6 @@ import uuid
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from advanced_data_profile_spark.session import hadoop_path_exists, pyarrow_fs
@@ -95,15 +95,6 @@ class Manifest:
         """`done_set` as a one-column (part_id) local relation."""
         return self.spark.createDataFrame(
             [(p,) for p in sorted(self.done_set())], "part_id string"
-        )
-
-    def pending(self, parts: DataFrame, part_col: str = "part_id") -> DataFrame:
-        """Partitions still to process: anti-join against done set."""
-        done = self.done_parts().withColumnRenamed("part_id", "__done_pid")
-        return parts.join(
-            F.broadcast(done),
-            parts[part_col].cast("string") == F.col("__done_pid"),
-            "left_anti",
         )
 
     def record(

@@ -12,8 +12,9 @@ thread that starts, in declaration order, once its `after=` legs have
 resolved, and each Spark job it submits carries the leg's name as its
 job description. The decode legs are declared first — decode is the
 critical path and FIFO scheduling lets the metadata legs back-fill the
-cores its wave leaves idle — and every write starts the moment its own
-inputs exist. Legs and their `after=` edges, in declaration order:
+cores its wave leaves idle — then the profile legs, whose job is the
+largest metadata job, and every write starts the moment its own inputs
+exist. Legs and their `after=` edges, in declaration order:
 
   plan                      partition listing + manifest done set, both
                             read on the driver (after
@@ -25,6 +26,13 @@ inputs exist. Legs and their `after=` edges, in declaration order:
   decode_verify             after decode_plan: the payload pass, the only
                             scan reading `bytes`; its per-partition
                             verdicts collected through Arrow
+  profile_and_counts        profile + row-wise constraint counts FUSED
+                            into one wide aggregation, whose plan the
+                            leg builds itself (one SQL expression per
+                            column struct), collected once through
+                            Arrow: one row per partition (exact mode:
+                            separate `profile` and `constraint_counts`
+                            collects)
   unique_referential        one persisted (partition, check, key) count
                             relation (uniqueness global within the run,
                             referential anti-join); its per-partition
@@ -39,11 +47,6 @@ inputs exist. Legs and their `after=` edges, in declaration order:
                             verdicts
   category_counts, write_category_counts, drift_results_categorical
                             the same three legs for categorical drift
-  profile_and_counts        profile + row-wise constraint counts FUSED
-                            into one wide aggregation, collected once
-                            through Arrow: one row per partition (exact
-                            mode: separate `profile` and
-                            `constraint_counts` collects)
   write_row_sample          no inputs: <= 100 rows collected through
                             Arrow, one flat file from the driver
   write_column_profiles     after profile_and_counts (melted on the
@@ -393,19 +396,17 @@ def _run_pipeline(
     def _plan():
         # partition discovery via a filesystem listing of the hive
         # layout: Spark's metadata-only-query rule is off by default,
-        # so select(part_id).distinct() SCANS the table. Both sides are
-        # driver-sized (partition ids + done set), so resume resolves
-        # in Python and a fresh output dir costs ZERO Spark jobs here
-        # (manifest part_ids are strings; compare canonically).
-        # Non-hive/iceberg sources fall back to the scan.
+        # so select(part_id).distinct() SCANS the table. Non-hive and
+        # Iceberg sources fall back to that scan. Either way both sides
+        # are driver-sized (partition ids + done set), so resume
+        # resolves in Python (manifest part_ids are strings; compare
+        # canonically) and a fresh hive dir costs ZERO Spark jobs here.
         pids = (
             _list_hive_part_ids(spark, images_path)
             if cfg.table_format == "parquet" else None
         )
         if pids is None:
-            all_parts = images.select("part_id").distinct()
-            pending = manifest.pending(all_parts) if resume else all_parts
-            return [r.part_id for r in pending.collect()]
+            pids = [r.part_id for r in images.select("part_id").distinct().collect()]
         done = manifest.done_set() if resume else set()
         return [p for p in pids if str(p) not in done]
 
@@ -436,6 +437,44 @@ def _run_pipeline(
     )
     rowwise = [c for c in checks if c.kind in ("not_null", "domain")]
     others = [c for c in checks if c.kind in ("unique", "referential")]
+    # metadata-only scans get large splits (split accounting counts the
+    # pruned-out bytes column, so the default would over-parallelize
+    # scans that read ~2% of each file); the decode pass keeps its own
+    # split sizing
+    spark.conf.set(SPLIT_CONF, "256m")
+    # the profile legs are the first metadata legs: the profile job is
+    # the largest metadata job, and FIFO queues it right behind decode
+    if cfg.approx:
+        def _wide():
+            # FUSED wide agg: every profile stat AND every row-wise
+            # constraint count in one scan/job, collected once through
+            # Arrow (one row per partition); column_profiles,
+            # profile_sketches, the row-wise verdicts and the
+            # manifest's row counts are all built from it on the
+            # driver. The leg builds the plan itself: one SQL
+            # expression per column struct
+            dtypes = {f.name: f.dataType for f in meta_nb.schema.fields}
+            prof_cols = [
+                c for c, t in dtypes.items()
+                if not isinstance(t, SKIP_PROFILE_TYPES) and c != "part_id"
+            ]
+            return meta_nb.groupBy("part_id").agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                *[column_profile_struct(c, dtypes[c], True) for c in prof_cols],
+                *[sketch_state_struct(c, dtypes[c]) for c in prof_cols],
+                *C.rowwise_count_exprs(rowwise),
+            ).toArrow()
+
+        # one leg is both the profile and the counts source
+        prof = counts = "profile_and_counts"
+        legs.leg(prof, _wide)
+    else:
+        prof, counts = "profile", "constraint_counts"
+        legs.leg(prof, lambda: profile(meta_nb, group_by="part_id", approx=False).toArrow())
+        legs.leg(counts, lambda: meta_nb.groupBy("part_id").agg(
+            F.count(F.lit(1)).alias("n_rows"), *C.rowwise_count_exprs(rowwise),
+        ).toArrow())
+
     vio_row = C.rowwise_violation_samples(
         meta, rowwise, "part_id", cfg.sample_violations
     )
@@ -445,16 +484,8 @@ def _run_pipeline(
     key_counts, agg_other, vio_other = C.key_counts(
         df, others, "part_id", cached=legs.persisted
     )
-    # metadata-only scans get large splits (split accounting counts the
-    # pruned-out bytes column, so the default would over-parallelize
-    # scans that read ~2% of each file); the decode pass keeps its own
-    # split sizing
-    spark.conf.set(SPLIT_CONF, "256m")
-    # started before the wide profile plan below is built, so the
-    # uniqueness chain (and the id-index append and global check that
-    # wait for it) runs while the driver builds that plan. The collect
-    # materializes the persisted key counts; the violations write and
-    # the id-index append read them from the cache
+    # the collect materializes the persisted key counts; the violations
+    # write and the id-index append read them from the cache
     legs.leg("unique_referential",
              lambda: C.results_arrow(agg_other.toArrow(), others))
     legs.leg("violations", lambda: vio_row, persist=True)
@@ -464,37 +495,13 @@ def _run_pipeline(
         # directory, no Spark job
         write_partitions(t, f"{output_dir}/{table}", mode)
 
-    if cfg.approx:
-        # FUSED wide agg: every profile stat AND every row-wise
-        # constraint count in one scan/job, collected once through
-        # Arrow (one row per partition); column_profiles,
-        # profile_sketches, the row-wise verdicts and the manifest's
-        # row counts are all built from it on the driver. Built before
-        # the drift and profile legs start: analysing this wide plan
-        # while they run would hold their jobs back (~1 s at 4 cores).
-        # Only the uniqueness chain and the violation samples, declared
-        # above, run beside the build.
-        dtypes = {f.name: f.dataType for f in meta_nb.schema.fields}
-        prof_cols = [
-            f.name for f in meta_nb.schema.fields
-            if not isinstance(f.dataType, SKIP_PROFILE_TYPES)
-            and f.name != "part_id"
-        ]
-        wide = meta_nb.groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            *[column_profile_struct(c, dtypes[c], True) for c in prof_cols],
-            *[sketch_state_struct(c, dtypes[c]) for c in prof_cols],
-            *C.rowwise_count_exprs(rowwise),
-        )
-
-        def _melt(w: pa.Table, prefix: str) -> pa.Table:
-            # one row per (partition, column): part_id, then the fields
-            # of the column's struct
-            return pa.concat_tables([
-                pa.Table.from_struct_array(w[f"{prefix}{c}"]).add_column(
-                    0, "part_id", w["part_id"])
-                for c in prof_cols
-            ], promote_options="default")
+    def _melt(w: pa.Table, prefix: str) -> pa.Table:
+        # one row per (partition, column): part_id, then the fields of
+        # the column's struct
+        return pa.concat_tables([
+            pa.Table.from_struct_array(w[c]).add_column(0, "part_id", w["part_id"])
+            for c in w.column_names if c.startswith(prefix)
+        ], promote_options="default")
 
     # unscorable drift cells are REPORTED, not silently dropped and not
     # disguised as fake 0.0 timing entries: this dict lands in the
@@ -599,17 +606,6 @@ def _run_pipeline(
             ("category",), "categorical_",
         )
 
-    if cfg.approx:
-        # one leg is both the profile and the counts source
-        prof = counts = "profile_and_counts"
-        legs.leg(prof, wide.toArrow)
-    else:
-        prof, counts = "profile", "constraint_counts"
-        legs.leg(prof, lambda: profile(meta_nb, group_by="part_id", approx=False).toArrow())
-        legs.leg(counts, lambda: meta_nb.groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("n_rows"), *C.rowwise_count_exprs(rowwise),
-        ).toArrow())
-
     def _write_sample():
         # ~100 seeded random rows for the report (reference ships a
         # random sample, Profiler.py:542-543 / O3) — metadata only,
@@ -654,9 +650,8 @@ def _run_pipeline(
     legs.leg("write_violations", _write_violations, after=["violations", "unique_referential"])
     legs.leg(
         "write_constraint_results",
-        lambda w, u: _store(pa.concat_tables(
-            [C.results_arrow(w, rowwise), u], promote_options="default"
-        ), "constraint_results"),
+        lambda w, u: _store(
+            pa.concat_tables([C.results_arrow(w, rowwise), u]), "constraint_results"),
         after=[counts, "unique_referential"],
     )
     if cfg.validate_images:
@@ -666,7 +661,8 @@ def _run_pipeline(
         writes.append("write_verdicts")
         legs.leg(
             "write_verdicts",
-            lambda _, v: _store(v, "constraint_results", mode="append"),
+            lambda _, v: _store(
+                v.cast(C.RESULT_SCHEMA), "constraint_results", mode="append"),
             after=["write_constraint_results", "decode_verify"],
         )
 

@@ -20,7 +20,9 @@ submits.
 
 Each leg's wall span (``wall_s``, end minus start) comes from the run
 summary's ``legs`` timeline, so a leg that runs no Spark job, such as a
-driver-side pyarrow write, still shows what it costs.
+driver-side pyarrow write, still shows what it costs. Driver work a leg
+does before its first job counts too: ``profile_and_counts`` builds the
+wide profile plan itself.
 
 Prints one table per run; the last line of each table sums every leg,
 except its ``wall_s``, which is the whole run's wall time. With

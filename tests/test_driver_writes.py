@@ -197,3 +197,35 @@ def test_a_table_mixing_spark_and_driver_files_reads_back_as_one(
     want = sorted((tuple(r) for r in rel.select(*back.columns).collect()), key=repr)
     assert sorted((tuple(r) for r in back.collect()), key=repr) == want
     assert pads.dataset(local, format="parquet", partitioning="hive").count_rows() == len(want)
+
+
+def test_constraint_results_files_share_one_schema_after_a_fresh_run_and_a_resume(
+    spark, images_path, tmp_path
+):
+    """The metadata verdicts (overwrite) and the decode verdicts
+    (append) land in the same partition directories; a reader that
+    takes its schema from the first file it lists must read the same
+    table whichever file that is."""
+    done = str(tmp_path / "images_done")
+    for p in range(N_PARTS - 1):
+        os.makedirs(f"{done}/part_id={p}")
+        for f in _data_files(f"{images_path}/part_id={p}"):
+            os.link(f"{images_path}/part_id={p}/{f}", f"{done}/part_id={p}/{f}")
+    out = str(tmp_path / "out")
+
+    def schemas():
+        root = f"{out}/constraint_results"
+        return [
+            pq.read_schema(f"{root}/{d}/{f}")
+            for d in os.listdir(root) if not d.startswith((".", "_"))
+            for f in _data_files(f"{root}/{d}")
+        ]
+
+    assert run_pipeline(spark, done, out)["partitions"] == N_PARTS - 1
+    first = schemas()
+    assert len(first) == 2 * (N_PARTS - 1)
+    assert all(s.equals(first[0], check_metadata=True) for s in first)
+    assert run_pipeline(spark, images_path, out)["partitions"] == 1
+    resumed = schemas()
+    assert len(resumed) == 2 * N_PARTS
+    assert all(s.equals(first[0], check_metadata=True) for s in resumed)

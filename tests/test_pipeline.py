@@ -333,7 +333,8 @@ def test_flat_layout_runs_the_jvm_decode_scan(spark, tmp_path):
     """A flat (non-hive) images table: partitions are found by a scan,
     not a directory listing, and the decode pass runs the JVM parquet
     scan (a flat layout yields no pyarrow row-group tasks); the
-    verdicts still equal the planted ground truth."""
+    verdicts still equal the planted ground truth, and a second run
+    resumes past every partition the first one committed."""
     from advanced_data_profile_spark.sources.images import (
         generate_images,
         write_images,
@@ -368,6 +369,7 @@ def test_flat_layout_runs_the_jvm_decode_scan(spark, tmp_path):
             (p, "dims_match_payload", "image"): 0,
         })
     assert got == expect
+    assert run_pipeline(spark, flat, out)["partitions"] == 0
 
 
 def test_file_uri_output_dir_commits_and_resumes(spark, images_path, tmp_path, monkeypatch):

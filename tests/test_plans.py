@@ -88,16 +88,6 @@ def test_referential_uses_broadcast_join(spark, images_path):
     assert "LeftAnti" in _plan(res)
 
 
-def test_resume_antijoin_is_broadcast(spark, images_path, tmp_path):
-    from advanced_data_profile_spark.plans.manifest import Manifest
-
-    images = read_images(spark, images_path)
-    m = Manifest(spark, str(tmp_path / "m"))
-    m.record("r", "0", "done", n_rows=1)
-    pending = m.pending(images.select("part_id").distinct())
-    assert "BroadcastHashJoin" in _plan(pending)
-
-
 def test_topk_global_is_take_ordered(lineitem):
     df = lineitem.groupBy("l_returnflag").count().orderBy(F.desc("count")).limit(3)
     assert "TakeOrderedAndProject" in _plan(df)

@@ -11,7 +11,17 @@ import math
 import pandas as pd
 import pytest
 
-from advanced_data_profile_spark.operators.stats import outlier_pct, profile, table_summary
+from pyspark.sql import functions as F
+
+from advanced_data_profile_spark.operators.stats import (
+    SKIP_PROFILE_TYPES,
+    column_profile_struct,
+    outlier_pct,
+    profile,
+    sketch_state_struct,
+    table_summary,
+)
+from advanced_data_profile_spark.sources.images import read_images
 
 
 @pytest.fixture(scope="module")
@@ -249,3 +259,33 @@ def test_exact_quantiles_driver_raises_on_unresolved_rank(spark):
     n, mn, mx = df.agg(F.count("x"), F.min("x"), F.max("x")).first()
     with pytest.raises(RuntimeError, match="'x'"):
         _exact_quantiles_driver(df, ["x"], {"x": (n + 5, mn, mx)})
+
+
+def test_profile_structs_build_with_one_jvm_call_each(spark, images_path, monkeypatch):
+    """The pipeline's 7 profiled columns: each profile and sketch struct
+    is one SQL expression, built by one ``F.expr`` (a class lookup, a
+    member lookup and the call: 3 py4j round trips). The Column API form
+    made ~750 calls per column."""
+    meta = read_images(spark, images_path).withColumn(
+        "caption_len", F.length("caption")).drop("bytes")
+    cols = {f.name: f.dataType for f in meta.schema.fields
+            if not isinstance(f.dataType, SKIP_PROFILE_TYPES) and f.name != "part_id"}
+    assert len(cols) == 7
+    gateway = spark.sparkContext._gateway._gateway_client
+    send, calls = gateway.send_command, []
+    monkeypatch.setattr(gateway, "send_command",
+                        lambda *a, **k: calls.append(1) or send(*a, **k))
+    structs = [column_profile_struct(c, t, True) for c, t in cols.items()]
+    structs += [sketch_state_struct(c, t) for c, t in cols.items()]
+    monkeypatch.undo()
+    assert len(calls) <= 3 * len(structs)
+    assert meta.groupBy("part_id").agg(*structs).count() == 4
+
+
+def test_profile_struct_of_a_column_whose_name_needs_quoting(spark):
+    name = "it's `a` \\ b"
+    df = spark.createDataFrame([(1,), (2,)], "x int").withColumnRenamed("x", name)
+    dt = df.schema[name].dataType
+    prof, sk = df.agg(
+        column_profile_struct(name, dt, True), sketch_state_struct(name, dt)).first()
+    assert (prof.column, prof.n_rows, prof.max_num, sk.column) == (name, 2, 2.0, name)

@@ -722,7 +722,7 @@ def profile(
         # Approx mode is single-pass mergeable sketches and skips this.
         sc = df.sparkSession.sparkContext
         keep_cols = [group_by] + columns
-        narrow = df.select(*keep_cols)
+        narrow = df.select(*[F.col(_ident(c)) for c in keep_cols])
         if narrow.rdd.getNumPartitions() < sc.defaultParallelism:
             df = narrow.repartition(sc.defaultParallelism)
 
@@ -735,7 +735,7 @@ def profile(
 
     melted = agg.select(
         *keep,
-        F.explode(F.array(*[F.col(f"__p_{c}") for c in columns])).alias("s"),
+        F.explode(F.array(*[F.col(_ident(f"__p_{c}")) for c in columns])).alias("s"),
     )
     out = melted.select(*keep, *[F.col(f"s.{f}").alias(f) for f, _ in PROFILE_FIELDS])
     if approx:
@@ -758,7 +758,7 @@ def profile(
     # stays.
     keys = [group_by]
     dagg = df.groupBy(*keys).agg(
-        *[F.count_distinct(F.col(c)).alias(f"__d_{c}") for c in columns]
+        *[F.count_distinct(F.col(_ident(c))).alias(f"__d_{c}") for c in columns]
     )
     dmelt = dagg.select(
         *keys,
@@ -766,7 +766,7 @@ def profile(
             F.array(*[
                 F.struct(
                     F.lit(c).alias("column"),
-                    F.col(f"__d_{c}").cast("bigint").alias("__nd"),
+                    F.col(_ident(f"__d_{c}")).cast("bigint").alias("__nd"),
                 )
                 for c in columns
             ])

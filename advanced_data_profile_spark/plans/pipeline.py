@@ -20,12 +20,15 @@ exist. Legs and their `after=` edges, in declaration order:
                             read on the driver (after
                             id_index_supersede_heal when a crashed
                             backfill left its marker)
-  decode_plan               the payload pass's file-slice tasks, planned
-                            on the driver from the partition listing (no
-                            Spark job)
+  decode_plan               the payload pass's file slices, planned on
+                            the driver from the partition listing and
+                            packed into split-sized groups (no Spark job)
   decode_verify             after decode_plan: the payload pass, the only
-                            scan reading `bytes`; its per-partition
-                            verdicts collected through Arrow
+                            scan reading `bytes`, as one single-stage
+                            Spark job of at most one Python task per
+                            group; each task folds its verdicts into
+                            per-partition counts, collected through
+                            Arrow and summed on the driver
   profile_and_counts        profile + row-wise constraint counts FUSED
                             into one wide aggregation, whose plan the
                             leg builds itself (one SQL expression per
@@ -69,25 +72,29 @@ exist. Legs and their `after=` edges, in declaration order:
 Scan economy per run (any number of partitions/columns, approx mode):
 one metadata scan for profile_and_counts, one for unique_referential
 (plus the default phash reference set, a distinct over the whole
-table), one bytes scan for decode_verify, one for each drift family's
-counts (plus, on fresh runs, a tiny min/max agg that pins bin edges
-without waiting for the profile) and a violation-sample scan that reads
-only violating rows. The per-(key, partition) counts unique_referential
-persists are read three times without a rescan: for the verdicts, for
-the violating keys and for the id-index append. Relations bounded by
-partitions × columns × bins stay off the cluster: each is collected
-once through Arrow and written from the driver by
-`manifest.write_partitions` (pyarrow, one file per part_id directory,
-no Spark job). column_profiles, profile_sketches, the row-wise
-constraint_results rows and the manifest's row counts all come from the
-one collected wide row per partition; constraint_results adds the
-collected uniqueness/referential verdicts, then the decode verdicts as
-an append; histograms and category_counts are the same collected
-counts their drift family scores on the driver; both drift_results
-tables are written from local verdict relations. row_sample (at most
-100 rows) is one flat file written by `manifest.write_table`, and the
-manifest is read on the driver. Only violations (every violating key,
-unbounded) and the id index are Spark writes.
+table), one bytes scan for decode_verify (one job, no shuffle: its
+tasks return per-partition counts, not per-image rows), one for each
+drift family's counts (plus, on fresh runs, a tiny min/max agg that
+pins bin edges without waiting for the profile) and a violation-sample
+scan that reads only violating rows. The metadata scans run at 256m
+splits with no minimum split count, so a small pending set is read in
+a few tasks, not cut to its file bytes / cores. The per-(key,
+partition) counts unique_referential persists are read three times
+without a rescan: for the verdicts, for the violating keys and for the
+id-index append. Relations bounded by partitions × columns × bins stay
+off the cluster: each is collected once through Arrow and written from
+the driver by `manifest.write_partitions` (pyarrow, one file per
+part_id directory, no Spark job). column_profiles, profile_sketches,
+the row-wise constraint_results rows and the manifest's row counts all
+come from the one collected wide row per partition; constraint_results
+adds the collected uniqueness/referential verdicts, then the decode
+verdicts as an append; histograms and category_counts are the same
+collected counts their drift family scores on the driver; both
+drift_results tables are written from local verdict relations.
+row_sample (at most 100 rows) is one flat file written by
+`manifest.write_table`, and the manifest is read on the driver. Only
+violations (every violating key, unbounded) and the id index are Spark
+writes.
 
 Uniqueness scope note: within one run the check is global across the
 partitions being processed (cross-partition duplicates are detected and
@@ -142,6 +149,7 @@ from advanced_data_profile_spark.session import (
 from advanced_data_profile_spark.sources.images import phash_reference, read_images
 
 SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
+MIN_PARTS_CONF = "spark.sql.files.minPartitionNum"
 
 
 @dataclass
@@ -193,12 +201,13 @@ class _Legs:
     Used as a context manager. Exit joins every leg (a caller that
     catches the error and retries must never race writer threads of
     the failed run), unpersists everything persisted through it,
-    restores the session's split-size conf, and raises the first error
-    with every later one attached as a note."""
+    restores the session's scan confs (split size and minimum split
+    count, set or unset as they were), and raises the first error with
+    every later one attached as a note."""
 
     def __init__(self, spark: SparkSession):
         self.spark, self.t0 = spark, time.time()
-        self.split = spark.conf.get(SPLIT_CONF)
+        self.scan_confs = {k: spark.conf.get(k, None) for k in (SPLIT_CONF, MIN_PARTS_CONF)}
         self.times: dict[str, list[float]] = {}
         self.threads: dict[str, threading.Thread] = {}
         self.results: dict = {}
@@ -254,7 +263,11 @@ class _Legs:
                 d.unpersist()
             except Exception as e:
                 self.errors.append(("unpersist", e))
-        self.spark.conf.set(SPLIT_CONF, self.split)
+        for k, v in self.scan_confs.items():
+            if v is None:
+                self.spark.conf.unset(k)
+            else:
+                self.spark.conf.set(k, v)
         first = exc if exc is not None else next((e for _, e in self.errors), None)
         for name, e in self.errors:
             if e is not first:
@@ -299,30 +312,30 @@ def image_checks(images_ref: DataFrame, cfg: PipelineConfig) -> list[C.Check]:
     ]
 
 
-def _payload_verdicts(
+def _payload_counts(
     spark: SparkSession, images_path: str, pending_ids: list, cfg: PipelineConfig
 ) -> DataFrame:
-    """The decode pass's verdict rows over the pending partitions
-    (lazy). A hive part_id=K parquet layout with any file to decode
-    goes through the pyarrow leg: byte-sized file slices planned on
-    the driver from the partition listing, read by pyarrow INSIDE the
-    Python workers (image_verify.validate_payloads_files; bytes never
-    cross the JVM, measured at the frameworkless kernel floor: 3.97s vs
-    6.1s best-JVM at the 512k scaling fixture, local[32] min-of-3). Its
-    slices are sized as Spark sizes its splits, so it has at least as
-    many tasks as the JVM scan on any hive input. Sources with no hive
-    listing (Iceberg, flat layouts) take the Catalyst parquet scan +
-    mapInArrow."""
-    # no first-partition existence gate: decode_file_tasks itself
+    """The decode pass over the pending partitions (lazy): per-task
+    verdict counts (image_verify.COUNTS_SCHEMA) that
+    image_verify.verdict_rows sums into constraint_results rows. A hive
+    part_id=K parquet layout with any file to decode goes through the
+    pyarrow leg: byte-sized file slices planned on the driver from the
+    partition listing and packed into split-sized groups, read by
+    pyarrow INSIDE the Python workers in one single-stage Spark job
+    (image_verify.verdict_counts_files; bytes never cross the JVM,
+    measured at the frameworkless kernel floor: 3.97s vs 6.1s best-JVM
+    at the 512k scaling fixture, local[32] min-of-3). Sources with no
+    hive listing (Iceberg, flat layouts) take the Catalyst parquet scan
+    + mapInArrow through the same kernel and fold
+    (image_verify.verdict_counts)."""
+    # no first-partition existence gate: the slice planning itself
     # skips pending partitions without a hive dir, and a flat non-hive
-    # layout simply yields zero tasks
-    tasks = []
+    # layout simply yields zero slices
+    groups = []
     if cfg.table_format == "parquet":
-        tasks = IV.decode_file_tasks(spark, images_path, pending_ids)
-    if tasks:
-        return IV.validation_verdicts(IV.validate_payloads_files(
-            spark, images_path, pending_ids, tasks=tasks
-        ))
+        groups = IV.decode_file_groups(spark, images_path, pending_ids)
+    if groups:
+        return IV.verdict_counts_files(spark, groups)
     # JVM scan leg in a child session (shared context, independent
     # SQLConf), at the split size the pyarrow leg's slices use: the old
     # 16m "balanced small tasks" sizing was A/B-measured 2x slower at
@@ -333,7 +346,7 @@ def _payload_verdicts(
     df2 = read_images(s2, images_path, fmt=cfg.table_format).where(
         F.col("part_id").isin(pending_ids)
     )
-    return IV.validation_verdicts(IV.validate_payloads(df2))
+    return IV.verdict_counts(df2)
 
 
 def run_pipeline(
@@ -349,7 +362,7 @@ def run_pipeline(
 
     Every phase runs as a leg of one `_Legs` runner, so when any leg
     raises, every leg is joined, every relation the run persisted is
-    released and the session's split-size conf is restored before the
+    released and the session's scan confs are restored before the
     first error propagates; later errors are attached to it as notes."""
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     with _Legs(spark) as legs:
@@ -425,8 +438,9 @@ def _run_pipeline(
         # those back-fill the cores it leaves idle. Planning (a driver
         # listing, no Spark job) is its own leg, so decode_verify times
         # the job alone.
-        legs.leg("decode_plan", lambda: _payload_verdicts(spark, images_path, pending_ids, cfg))
-        legs.leg("decode_verify", lambda v: v.toArrow(), after=["decode_plan"])
+        legs.leg("decode_plan", lambda: _payload_counts(spark, images_path, pending_ids, cfg))
+        legs.leg("decode_verify", lambda c: IV.verdict_rows(c.toArrow()),
+                 after=["decode_plan"])
     # partition pruning: isin on the partition column prunes at the scan
     df = images.where(F.col("part_id").isin(pending_ids))
     meta = df.withColumn("caption_len", F.length("caption"))
@@ -439,9 +453,13 @@ def _run_pipeline(
     others = [c for c in checks if c.kind in ("unique", "referential")]
     # metadata-only scans get large splits (split accounting counts the
     # pruned-out bytes column, so the default would over-parallelize
-    # scans that read ~2% of each file); the decode pass keeps its own
-    # split sizing
+    # scans that read ~2% of each file), and a small pending set is not
+    # cut to its bytes / cores either (minPartitionNum=1): each scan
+    # task of the profile's ObjectHashAggregate builds its projections
+    # anew, 0.25-0.35 s per task on a 4-core box. The decode pass keeps
+    # its own split sizing
     spark.conf.set(SPLIT_CONF, "256m")
+    spark.conf.set(MIN_PARTS_CONF, "1")
     # the profile legs are the first metadata legs: the profile job is
     # the largest metadata job, and FIFO queues it right behind decode
     if cfg.approx:
@@ -661,8 +679,7 @@ def _run_pipeline(
         writes.append("write_verdicts")
         legs.leg(
             "write_verdicts",
-            lambda _, v: _store(
-                v.cast(C.RESULT_SCHEMA), "constraint_results", mode="append"),
+            lambda _, v: _store(v, "constraint_results", mode="append"),
             after=["write_constraint_results", "decode_verify"],
         )
 

@@ -31,6 +31,18 @@ leg: its submit and completion times in seconds from the run's start
 (``submissionTime``/``completionTime`` in the store), its task counts
 and task seconds. A chain of small jobs, whose cost is scheduling latency rather
 than compute, shows there; the per-leg totals hide it.
+
+With ``--stacks`` a driver thread samples, 20 ms apart during each
+run, the stacks of the executor threads that are running a task, from
+inside the JVM (py4j ``Thread.getStackTrace``; works with the UI off
+and needs no ``jstack`` attach), and each table is followed by the
+Spark frames found in the most samples (inclusive: a frame counts once
+per sampled stack that holds it, wherever in the stack), with the
+samples each leg's tasks took; ``--stacks LEG`` counts the frames of
+that leg's tasks only. A per-task fixed cost, such as code generation
+at an operator's start, shows there as a frame present in most
+samples. The sampling takes driver CPU, so leave it off when the wall
+times matter.
 """
 
 from __future__ import annotations
@@ -40,11 +52,15 @@ import os
 import re
 import shutil
 import sys
+import threading
 import time
-from collections import defaultdict
+from collections import Counter, defaultdict
+from contextlib import nullcontext
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PYTHON_SCOPE = re.compile(r"Python|InPandas|InArrow|EvalPython")
+# a running task's thread: "Executor task launch worker for task 3.0 in stage 7.0 (TID 41)"
+STAGE_IN_NAME = re.compile(r" in stage (\d+)\.")
 
 
 def _seq(s) -> list:
@@ -90,6 +106,18 @@ def leg_work(sc, after_job: int) -> dict[str, dict]:
     return legs
 
 
+def stage_legs(sc, after_job: int) -> dict[int, str]:
+    """{stage id: leg} for the stages of every job with an id above
+    ``after_job``."""
+    out = {}
+    for job in _seq(sc._jsc.sc().statusStore().jobsList(None)):
+        if job.jobId() > after_job:
+            desc = job.description()
+            for sid in _seq(job.stageIds()):
+                out[sid] = desc.get() if desc.isDefined() else "(none)"
+    return out
+
+
 def job_spans(sc, after_job: int, t0: float) -> str:
     """One line per job with an id above ``after_job``, grouped by leg
     in order of first submission: job id, submit and complete times in
@@ -123,6 +151,75 @@ def job_spans(sc, after_job: int, t0: float) -> str:
     return "\n".join(out)
 
 
+class StackSampler:
+    """Samples the stacks of the executor threads running a task every
+    ``interval`` seconds while entered, from a driver thread through
+    py4j: a thread's ``getStackTrace()`` is set on one Throwable and
+    printed by ``ExceptionUtils.getStackTrace``, four py4j calls per
+    executor thread and sample with the thread's name, which names the
+    task's stage. The executor threads are listed again every second
+    (task threads come from a growing pool)."""
+
+    def __init__(self, sc, interval: float = 0.02):
+        self.jvm, self.interval = sc._jvm, interval
+        # per stage id: samples, and inclusive frame counts
+        self.stages, self.frames = Counter(), defaultdict(Counter)
+        self.stop = threading.Event()
+        self.thread = threading.Thread(target=self._run, name="stack-sampler", daemon=True)
+
+    def _executor_threads(self) -> list:
+        ts = self.jvm.java.lang.Thread.getAllStackTraces().keySet().toArray()
+        return [t for t in ts if "task launch worker" in t.getName()]
+
+    def _run(self) -> None:
+        printer = self.jvm.org.apache.commons.lang3.exception.ExceptionUtils
+        holder = self.jvm.java.lang.Throwable("stack sample")
+        threads, listed = [], 0.0
+        while not self.stop.wait(self.interval):
+            if time.time() - listed > 1.0:
+                threads, listed = self._executor_threads(), time.time()
+            for t in threads:
+                holder.setStackTrace(t.getStackTrace())
+                stack = printer.getStackTrace(holder)
+                if "Executor$TaskRunner.run" not in stack:
+                    continue  # an idle pool thread
+                m = STAGE_IN_NAME.search(t.getName())
+                sid = int(m.group(1)) if m else -1
+                self.stages[sid] += 1
+                # "\tat app//pkg.Cls.method(File.java:1)" -> pkg.Cls.method
+                self.frames[sid].update({
+                    line[4:].split("(", 1)[0].split("//", 1)[-1]
+                    for line in stack.splitlines() if line.startswith("\tat ")
+                })
+
+    def __enter__(self) -> StackSampler:
+        self.thread.start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.stop.set()
+        self.thread.join()
+
+    def top(self, stage_legs: dict[int, str], leg: str = "", n: int = 30) -> str:
+        """The ``n`` Spark frames in the most samples, of every leg or
+        of ``leg`` only."""
+        by_leg, frames, samples = Counter(), Counter(), 0
+        for sid, c in self.stages.items():
+            by_leg[stage_legs.get(sid, "(none)")] += c
+            if leg in ("", stage_legs.get(sid)):
+                samples += c
+                frames.update(self.frames[sid])
+        out = [f"# executor stacks: {sum(by_leg.values())} samples of threads running a "
+               f"task, every {self.interval * 1e3:.0f} ms; by leg: "
+               + ", ".join(f"{name} {c}" for name, c in by_leg.most_common()),
+               f"{'share':>6} {'samples':>7}  inclusive Spark frame"
+               + (f" ({leg} only)" if leg else "")]
+        spark = [(f, c) for f, c in frames.most_common() if f.startswith("org.apache.spark.")]
+        for f, c in spark[:n]:
+            out.append(f"{c / max(samples, 1):>6.1%} {c:>7d}  {f}")
+        return "\n".join(out)
+
+
 def table(legs: dict[str, dict], wall: float) -> str:
     cols = ("wall_s", "jobs", "stages", "tasks", "task_s", "cpu_s", "py_stages")
     rows = sorted(legs.items(), key=lambda kv: (-kv[1]["task_s"], -kv[1]["wall_s"]))
@@ -144,6 +241,10 @@ def main() -> int:
     ap.add_argument("--jobs", action="store_true",
                     help="also print every job of each leg with its submit and "
                          "complete times and task counts")
+    ap.add_argument("--stacks", nargs="?", const="", metavar="LEG",
+                    help="also sample the executor threads' stacks every 20 ms and "
+                         "print the Spark frames found in the most samples (of LEG's "
+                         "tasks only, when given)")
     args = ap.parse_args()
 
     sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
@@ -165,7 +266,8 @@ def main() -> int:
         for i in range(args.runs):
             run.reset()
             first, t0 = last_job_id(sc), time.time()
-            summary, wall = run.timed_run()
+            with StackSampler(sc) if args.stacks is not None else nullcontext() as sampler:
+                summary, wall = run.timed_run()
             legs = leg_work(sc, first)
             spans = job_spans(sc, first, t0) if args.jobs else None
             for name, (start, end) in summary["legs"].items():
@@ -176,6 +278,8 @@ def main() -> int:
             print(table(legs, wall), flush=True)
             if spans:
                 print(spans, flush=True)
+            if sampler:
+                print(sampler.top(stage_legs(sc, first), args.stacks), flush=True)
     finally:
         if spark is not None:
             spark_env.stop_jvm(spark)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -282,3 +284,152 @@ def test_decode_slices_follow_spark_split_size(spark, images_path):
     assert sc.statusTracker().getJobIdsForGroup("decode_plan_probe") == []
     assert sorted(t[1] for t in tasks) == [0, 1, 2, 3]
     assert all(t[2:] == (0, 1) for t in tasks)
+
+
+def test_packing_covers_each_slice_once_within_the_split():
+    """Slices of any size pack into groups holding every slice exactly
+    once; a group of two or more slices stays within the split size,
+    split-sized slices (table scale) get a group each, and slices that
+    fit cores x split in pairs fill one group per core."""
+    import random
+
+    from advanced_data_profile_spark.operators import image_verify as IV
+
+    rng = random.Random(7)
+    split = 64 << 20
+    slices = [
+        ((f"f{i}", i % 3, 0, 1),
+         rng.choice([rng.randrange(1, 1 << 20), rng.randrange(1 << 20, split), split]))
+        for i in range(300)
+    ]
+    groups = IV.pack_slices(slices, split)
+    assert sorted(t for g in groups for t in g) == sorted(t for t, _ in slices)
+    size = dict(slices)
+    assert all(len(g) == 1 or sum(size[t] for t in g) <= split for g in groups)
+    assert any(len(g) > 1 for g in groups)
+    full = [((f"f{i}", 0, 0, 1), split) for i in range(5)]
+    assert IV.pack_slices(full, split) == [[t] for t, _ in full]
+    assert IV.pack_slices([], split) == []
+    mb = 1 << 20
+    files = [((f"g{i}", i, 0, 1), b) for i, b in enumerate(
+        [26 * mb, 27 * mb, 26 * mb, 26 * mb, 26 * mb, 26 * mb, 39 * mb, 38 * mb])]
+    groups = IV.pack_slices(files, (sum(b for _, b in files) + 8 * IV.OPEN_COST_BYTES) // 4)
+    assert sorted(len(g) for g in groups) == [2, 2, 2, 2]
+
+
+def test_fixture_slices_pack_into_at_most_one_task_per_core(spark, images_path):
+    from advanced_data_profile_spark.operators import image_verify as IV
+
+    groups = IV.decode_file_groups(spark, images_path, [0, 1, 2, 3])
+    assert 1 <= len(groups) <= spark.sparkContext.defaultParallelism
+    assert sorted(t for g in groups for t in g) == sorted(
+        IV.decode_file_tasks(spark, images_path, [0, 1, 2, 3]))
+
+
+def test_fold_counts_each_verdict_per_partition():
+    """The in-task fold and the driver rollup count what
+    validation_verdicts counts, a decoded payload with the wrong dims
+    included (the codecs reject one before it decodes, so only a
+    hand-made batch holds it)."""
+    import pyarrow as pa
+
+    from advanced_data_profile_spark.operators import image_verify as IV
+
+    b = pa.RecordBatch.from_pydict({
+        "image_id": list("abcde"),
+        "part_id": pa.array([0, 0, 1, 1, 1], pa.int32()),
+        "decode_ok": [True, False, True, True, False],
+        "dims_match": [True, False, False, True, False],
+        "fmt_known": [True, True, False, True, False],
+        "error": [None, "x", None, None, "y"],
+    })
+    folded = pa.Table.from_batches(list(IV._fold_verdicts(iter([b, b.slice(2)]))))
+    assert sorted(folded.to_pylist(), key=lambda r: r["part_id"]) == [
+        {"part_id": 0, "n_rows": 2, "v_decode": 1, "v_dims": 0, "v_fmt": 0},
+        {"part_id": 1, "n_rows": 6, "v_decode": 2, "v_dims": 2, "v_fmt": 4},
+    ]
+    rows = {(r["part_id"], r["constraint"]): (r["kind"], r["n_rows"], r["n_violations"],
+                                              r["passed"])
+            for r in IV.verdict_rows(pa.concat_tables([folded, folded])).to_pylist()}
+    assert rows == {
+        ("0", "payload_decodes"): ("image", 4, 2, False),
+        ("0", "dims_match_payload"): ("image", 4, 0, True),
+        ("0", "fmt_known"): ("image", 4, 0, True),
+        ("1", "payload_decodes"): ("image", 12, 4, False),
+        ("1", "dims_match_payload"): ("image", 12, 4, False),
+        ("1", "fmt_known"): ("image", 12, 8, False),
+    }
+    assert list(IV._fold_verdicts(iter([]))) == []
+
+
+def _adversarial_tables(spark, root):
+    """Hive and flat copies of a 2-partition images table with NULL,
+    truncated, unknown-fmt (and NULL-fmt) payloads and declared dims
+    that do not match their payload; each hive file has 6 row groups."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from advanced_data_profile_spark.sources.images import generate_images
+
+    t = generate_images(spark, n_parts=2, rows_per_part=60).toArrow()
+    payload, fmt, w = (t[c].to_pylist() for c in ("bytes", "fmt", "w"))
+    for i in range(t.num_rows):
+        kind = i % 6
+        if kind == 1:
+            payload[i] = None
+        elif kind == 2 and payload[i]:
+            payload[i] = payload[i][: len(payload[i]) // 2]
+        elif kind == 3:
+            fmt[i] = "tiff"
+        elif kind == 4:
+            w[i] += 1
+        elif kind == 5:
+            fmt[i] = None
+    for name, col in (("bytes", pa.array(payload, pa.binary())),
+                      ("fmt", pa.array(fmt, pa.string())),
+                      ("w", pa.array(w, pa.int32()))):
+        t = t.set_column(t.schema.get_field_index(name), name, col)
+    flat = root / "flat"
+    flat.mkdir()
+    pq.write_table(t, str(flat / "f.parquet"), compression="none")
+    for p in (0, 1):
+        d = root / "hive" / f"part_id={p}"
+        d.mkdir(parents=True)
+        pq.write_table(t.filter(pc.equal(t["part_id"], p)).drop_columns(["part_id"]),
+                       str(d / "f.parquet"), row_group_size=10, compression="none")
+    return str(root / "hive"), str(flat)
+
+
+def test_folded_verdicts_equal_per_image_verdicts_on_both_legs(spark, tmp_path, monkeypatch):
+    """The pipeline's decode pass (per-task folds summed on the driver)
+    gives the rows validation_verdicts(validate_payloads(...)) gives:
+    through the pyarrow leg over a hive layout, with each file cut into
+    several slices and, separately, with both partitions' files packed
+    into one task, and through the JVM leg over a flat copy."""
+    from advanced_data_profile_spark.operators import image_verify as IV
+    from advanced_data_profile_spark.plans.pipeline import PipelineConfig, _payload_counts
+
+    hive, flat = _adversarial_tables(spark, tmp_path)
+    size = os.path.getsize(f"{hive}/part_id=0/f.parquet")
+
+    def check(path):
+        want = {tuple(r) for r in IV.validation_verdicts(
+            IV.validate_payloads(read_images(spark, path))).collect()}
+        counts = _payload_counts(spark, path, [0, 1], PipelineConfig()).toArrow()
+        got = {tuple(r.values()) for r in IV.verdict_rows(counts).to_pylist()}
+        assert got == want, path
+        assert {(r[0], r[1]) for r in want if r[4] > 0} >= {
+            (p, c) for p in ("0", "1") for c in ("payload_decodes", "fmt_known")}
+
+    assert IV.decode_file_groups(spark, flat, [0, 1]) == []
+    check(flat)
+    with monkeypatch.context() as m:
+        m.setattr(IV, "MIN_SPLIT_BYTES", 1)
+        m.setattr(IV, "MAX_SPLIT_BYTES", size // 3)
+        groups = IV.decode_file_groups(spark, hive, [0, 1])
+        assert len(groups) >= 8 and all(len(g) == 1 for g in groups)
+        check(hive)
+    groups = IV.decode_file_groups(spark, hive, [0, 1])
+    assert [sorted(t[1] for t in g) for g in groups] == [[0, 1]]
+    check(hive)

@@ -393,7 +393,6 @@ def test_small_hive_input_decodes_without_the_jvm_scan(spark, tmp_path, monkeypa
     leg made to raise, the run succeeds and its decode verdicts equal
     the planted ground truth."""
     from advanced_data_profile_spark.operators import image_verify
-    from advanced_data_profile_spark.plans import pipeline
     from advanced_data_profile_spark.sources.images import (
         generate_images,
         write_images,
@@ -402,8 +401,7 @@ def test_small_hive_input_decodes_without_the_jvm_scan(spark, tmp_path, monkeypa
     def jvm_scan(_):
         raise AssertionError("hive input reached the JVM decode scan")
 
-    monkeypatch.setattr(image_verify, "validate_payloads", jvm_scan)
-    monkeypatch.setattr(pipeline, "validate_payloads", jvm_scan, raising=False)
+    monkeypatch.setattr(image_verify, "verdict_counts", jvm_scan)
     src = str(tmp_path / "hive")
     write_images(generate_images(spark, n_parts=2, rows_per_part=40), src)
     out = str(tmp_path / "out")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from advanced_data_profile_spark.plans import pipeline
 from advanced_data_profile_spark.plans.manifest import Manifest
 from advanced_data_profile_spark.plans.pipeline import (
+    MIN_PARTS_CONF,
     SPLIT_CONF,
     PipelineConfig,
     _Legs,
@@ -78,7 +79,8 @@ def test_failed_run_cleans_up_and_resume_matches_clean_run(
 ):
     out = str(tmp_path_factory.mktemp("legs_fail") / "out")
     rdds, split = _persistent_rdds(spark), spark.conf.get(SPLIT_CONF)
-    spark.conf.set(SPLIT_CONF, "77m")  # a value no run sets
+    spark.conf.set(SPLIT_CONF, "77m")  # values no run sets
+    spark.conf.set(MIN_PARTS_CONF, "3")
 
     def broken(*_a, **_k):
         raise RuntimeError("planted drift failure")
@@ -90,7 +92,9 @@ def test_failed_run_cleans_up_and_resume_matches_clean_run(
     assert not _leg_threads()
     assert _persistent_rdds(spark) == rdds
     assert spark.conf.get(SPLIT_CONF) == "77m"
+    assert spark.conf.get(MIN_PARTS_CONF) == "3"
     spark.conf.set(SPLIT_CONF, split)
+    spark.conf.unset(MIN_PARTS_CONF)
     assert not Manifest(spark, f"{out}/manifest").exists()
 
     s = run_pipeline(spark, images_path, out, resume=True)
@@ -146,3 +150,32 @@ def test_rerun_over_rewritten_input_sees_the_new_rows(spark, tmp_path):
     res = spark.read.parquet(str(tmp_path / "out2" / "constraint_results"))
     n_rows = {(r.constraint, r.n_rows) for r in res.where(F.col("part_id") == 1).collect()}
     assert {n for _, n in n_rows} == {50}, n_rows
+
+
+def _jobs_after(spark, job_id: int) -> list:
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    jobs = jsc.statusStore().jobsList(None)
+    return [j for j in (jobs.apply(i) for i in range(jobs.size())) if j.jobId() > job_id]
+
+
+def test_decode_pass_is_one_job_without_an_exchange(spark, images_path, tmp_path):
+    """On the 4-part fixture the decode pass submits one Spark job of
+    one stage, with at most one task per core, and its plan holds no
+    exchange; a clean run leaves the scan confs as it found them (here:
+    unset)."""
+    spark.conf.unset(MIN_PARTS_CONF)
+    counts = pipeline._payload_counts(spark, images_path, list(range(N_PARTS)),
+                                      PipelineConfig())
+    assert "Exchange" not in counts._jdf.queryExecution().executedPlan().toString()
+
+    first = max([j.jobId() for j in _jobs_after(spark, -1)], default=-1)
+    s = run_pipeline(spark, images_path, str(tmp_path / "out"),
+                     cfg=PipelineConfig(drift=False))
+    assert s["partitions"] == N_PARTS
+    decode = [j for j in _jobs_after(spark, first)
+              if j.description().isDefined() and j.description().get() == "decode_verify"]
+    assert len(decode) == 1
+    assert decode[0].stageIds().size() == 1
+    assert 1 <= decode[0].numTasks() <= spark.sparkContext.defaultParallelism
+    assert spark.conf.get(MIN_PARTS_CONF, None) is None

@@ -289,3 +289,20 @@ def test_profile_struct_of_a_column_whose_name_needs_quoting(spark):
     prof, sk = df.agg(
         column_profile_struct(name, dt, True), sketch_state_struct(name, dt)).first()
     assert (prof.column, prof.n_rows, prof.max_num, sk.column) == (name, 2, 2.0, name)
+
+
+@pytest.mark.parametrize("group_by,approx", [(None, True), ("g", True), ("g", False)])
+def test_profile_of_a_column_whose_name_holds_a_backtick(spark, group_by, approx):
+    """The melt selects each column's struct by a quoted name (and the
+    exact grouped path its columns and distinct counts), so a backtick
+    in a column name reaches the output as the column's name instead of
+    failing the attribute-name parse."""
+    name = "a`b"
+    df = spark.createDataFrame(
+        [("x", 1), ("x", 2), ("y", 5)], "g string, v int"
+    ).withColumnRenamed("v", name)
+    rows = profile(df, columns=[name], group_by=group_by, approx=approx).collect()
+    got = sorted((r[group_by] if group_by else None, r.column, r.n_rows, r.max_num)
+                 for r in rows)
+    want = [("x", name, 2, 2.0), ("y", name, 1, 5.0)] if group_by else [(None, name, 3, 5.0)]
+    assert got == want

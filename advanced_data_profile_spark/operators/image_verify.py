@@ -376,30 +376,12 @@ def verdict_rows(counts):
 def validation_verdicts(validated: DataFrame) -> DataFrame:
     """Roll per-image validation up to per-partition constraint rows in
     the constraint_results shape."""
-    agg = validated.groupBy("part_id").agg(
+    return C.results_from_agg(validated.groupBy("part_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum((~F.col("decode_ok")).cast("long")).alias("v_decode"),
-        F.sum((F.col("decode_ok") & ~F.col("dims_match")).cast("long")).alias("v_dims"),
-        F.sum((~F.col("fmt_known")).cast("long")).alias("v_fmt"),
-    )
-    melted = agg.select(
-        F.col("part_id").cast("string"),
-        F.col("n_rows"),
-        F.explode(
-            F.array(
-                F.struct(F.lit("payload_decodes").alias("constraint"),
-                         F.col("v_decode").alias("n_violations")),
-                F.struct(F.lit("dims_match_payload").alias("constraint"),
-                         F.col("v_dims").alias("n_violations")),
-                F.struct(F.lit("fmt_known").alias("constraint"),
-                         F.col("v_fmt").alias("n_violations")),
-            )
-        ).alias("s"),
-    )
-    return melted.select(
-        "part_id", "s.constraint", F.lit("image").alias("kind"),
-        "n_rows", "s.n_violations", (F.col("s.n_violations") == 0).alias("passed"),
-    )
+        F.sum((~F.col("decode_ok")).cast("long")).alias("__v_0"),
+        F.sum((F.col("decode_ok") & ~F.col("dims_match")).cast("long")).alias("__v_1"),
+        F.sum((~F.col("fmt_known")).cast("long")).alias("__v_2"),
+    ), DECODE_CHECKS, "part_id")
 
 
 def _verify_arrow(min_psnr: float):

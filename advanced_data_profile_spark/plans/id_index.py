@@ -1,10 +1,9 @@
-"""Incremental cross-run global uniqueness via a maintained bucketed
-id-index (north_rule: uniqueness of image_id at 10^12-image scale).
+"""Cross-run global uniqueness (north_rule: uniqueness of image_id at
+10^12-image scale) via a maintained bucketed id-index.
 
-The dedicated full-table pass (pipeline.global_uniqueness_check) has
-the right semantics but the wrong cost model at design scale: every
-invocation rescans the whole payload table. This module replaces the
-rescan with a MAINTAINED INDEX:
+A full-table rescan (`global_uniqueness_check`) has the right semantics
+but the wrong cost model at design scale: every invocation rescans the
+whole payload table. The index replaces the rescan:
 
 - at validation time each run APPENDS its partitions' per-(key,
   partition) counts to a parquet table bucketed by the key
@@ -53,11 +52,13 @@ sandbox number: size buckets so each holds O(10^7-10^8) keys at design
 scale (10^12 keys -> O(10^4-10^5) buckets), and keep the count FIXED
 for the table's lifetime — changing it requires a full rewrite.
 
-Outputs are IDENTICAL in shape and values to the full-pass check
-(equivalence-tested): kind='unique_global' RESULT_COLUMNS rows per
-partition into constraint_results_global, violation rows with
-duplicate_count detail into violations_global, one part_id='__global__'
-manifest lineage row.
+Both passes are one engine (`_global_check`) fed by two count
+sources, (key, part_id, n) rows from the index or from the rescan: it
+writes kind='unique_global' RESULT_COLUMNS rows per partition into
+constraint_results_global, violation rows with duplicate_count detail
+into violations_global, and one part_id='__global__' manifest lineage
+row. The rescan stays as the reference the index pass is
+equivalence-tested against.
 """
 
 from __future__ import annotations
@@ -68,25 +69,17 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from advanced_data_profile_spark.operators.constraints import (
-    RESULT_COLUMNS,
-    VIOLATION_COLUMNS,
-)
+from advanced_data_profile_spark.operators import constraints as C
 from advanced_data_profile_spark.plans.manifest import (
     Manifest,
     latest_rows,
     new_run_id,
     write_table,
 )
+from advanced_data_profile_spark.sources.images import read_images
 
 DEFAULT_BUCKETS = 16
-# constraint_results_global as the full-rescan pass's Spark relation
-# types it (RESULT_COLUMNS; n_rows is NULL for a partition not yet
-# committed to the manifest)
-_GLOBAL_RESULT_SCHEMA = pa.schema([
-    pa.field(n, t, nullable=n in ("part_id", "n_rows")) for n, t in zip(RESULT_COLUMNS, (
-        pa.string(), pa.string(), pa.string(), pa.int64(), pa.int64(), pa.bool_()))
-])
+
 
 def _append_order():
     """latest-append-wins ordering: wall-clock stamp, ties broken by
@@ -274,6 +267,86 @@ def index_compact(
     return n_rows
 
 
+def _global_check(
+    counts: DataFrame,
+    totals: dict,
+    output_dir: str,
+    constraint: str,
+    key_col: str,
+    t0: float,
+    input_path: str | None = None,
+    **lineage,
+) -> dict:
+    """The cross-run global uniqueness result from one count relation:
+    ``counts`` holds (key, part_id string, n) rows, ``totals`` maps each
+    part_id to its row count (None for a partition indexed but not yet
+    committed). Both global passes end here; they differ only in where
+    their counts come from.
+
+    Results fully OVERWRITE constraint_results_global and
+    violations_global (a global pass supersedes the previous one, never
+    merged with per-run rows). Lineage: one part_id='__global__'
+    manifest row, whose metrics carry ``lineage``. Returns the summary
+    dict."""
+    # every (key, partition) row of a duplicated key, with the key's
+    # total: a window over the key, which the bucketed index scan
+    # already clusters, so the index pass plans it with no Exchange, no
+    # broadcast and no join, and a pathologically duplicated corpus
+    # degrades to a bigger window, never to a driver-side broadcast. A
+    # NULL key is one window partition, as the null-safe duplicate
+    # check counts it
+    dup_parts = (
+        counts.withColumn("cnt", F.sum("n").over(Window.partitionBy("key")))
+        .where(F.col("cnt") > 1)
+        .persist()
+    )
+    try:
+        per_part = dup_parts.groupBy("part_id").agg(F.sum("n").alias("n")).toArrow()
+        dup_parts.select(
+            "part_id",
+            F.lit(constraint).alias("constraint"),
+            F.col("key").cast("string").alias("key"),
+            F.to_json(F.struct(F.col("cnt").alias("duplicate_count"))).alias("detail"),
+        ).coalesce(1).write.mode("overwrite").parquet(f"{output_dir}/violations_global")
+    finally:
+        dup_parts.unpersist()
+    viol = dict(zip(per_part["part_id"].to_pylist(), per_part["n"].to_pylist()))
+
+    # every partition with a total or a violation: a partition indexed
+    # but not yet committed (the crash window between index append and
+    # manifest commit) still appears, with NULL n_rows, so the rows
+    # violations_global attributes to it are counted here too
+    parts = sorted(set(totals) | set(viol))
+    write_table(C.results_arrow(pa.table({
+        "part_id": pa.array(parts, pa.string()),
+        "n_rows": pa.array([totals.get(p) for p in parts], pa.int64()),
+        "__v_0": pa.array([viol.get(p, 0) for p in parts], pa.int64()),
+    }), [C.Check(constraint, "unique_global")]), f"{output_dir}/constraint_results_global")
+
+    n_violations, failed_parts = sum(viol.values()), sorted(viol)
+    run_id = new_run_id()
+    Manifest(counts.sparkSession, f"{output_dir}/manifest").record(
+        run_id, "__global__", "done", started_at=t0,
+        n_rows=sum(n for n in totals.values() if n is not None),
+        metrics={
+            "kind": "unique_global",
+            "key_cols": [key_col],
+            **lineage,
+            "n_violations": n_violations,
+            "failed_partitions": failed_parts,
+            "elapsed_sec": round(time.time() - t0, 3),
+        },
+        input_path=input_path,
+    )
+    return {
+        "run_id": run_id,
+        "n_violations": n_violations,
+        "failed_partitions": failed_parts,
+        "passed": n_violations == 0,
+        "elapsed_sec": round(time.time() - t0, 3),
+    }
+
+
 def global_uniqueness_from_index(
     spark: SparkSession,
     table_name: str,
@@ -281,88 +354,45 @@ def global_uniqueness_from_index(
     constraint: str = "image_id_unique_global",
     key_col: str = "image_id",
 ) -> dict:
-    """The index-backed twin of pipeline.global_uniqueness_check: same
-    result/violation tables (overwritten — a global pass supersedes the
-    previous one), same manifest lineage row, same summary dict; the
-    data pass is the shuffle-free per-bucket self-check above instead
-    of a full payload-table rescan. Only that self-check and the
-    violations_global write run in Spark: the per-partition violation
-    counts are collected, joined on the driver with the manifest's row
-    totals, and constraint_results_global (partitions-sized) is written
-    with pyarrow."""
+    """Cross-run global uniqueness from the index: the counts are the
+    shuffle-free per-bucket latest-append rows, the totals each
+    partition's latest done manifest row (read on the driver), so the
+    payload table is never read."""
     t0 = time.time()
-    latest = _latest_per_part(spark, table_name)
-    # every (key, partition) row of a duplicated key, with the key's
-    # total: a window over the key, which the bucketed scan already
-    # clusters, so the plan has no Exchange, no broadcast and no join,
-    # and a pathologically duplicated corpus degrades to a bigger
-    # window, never to a driver-side broadcast. A NULL key is one
-    # window partition, as the null-safe duplicate check counts it
-    dup_parts = (
-        latest.withColumn("cnt", F.sum("n").over(Window.partitionBy("key")))
-        .where(F.col("cnt") > 1)
-        .persist()
-    )
-    try:
-        per_part = dup_parts.groupBy("part_id").agg(F.sum("n").alias("n")).toArrow()
-        violations = dup_parts.select(
-            F.col("part_id"),
-            F.lit(constraint).alias("constraint"),
-            F.col("key").cast("string").alias("key"),
-            F.to_json(F.struct(F.col("cnt").alias("duplicate_count"))).alias("detail"),
-        )
-        violations.select(*VIOLATION_COLUMNS).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{output_dir}/violations_global")
-    finally:
-        dup_parts.unpersist()
-    viol = dict(zip(per_part["part_id"].to_pylist(), per_part["n"].to_pylist()))
-
-    # per-partition row totals: each partition's latest done manifest
-    # row. FULL outer with the violation counts: a partition indexed
-    # but not yet manifest-committed (the crash window between index
-    # append and manifest commit) must still appear here — otherwise
-    # its rows would show in violations_global but vanish from
-    # constraint_results_global and the two artifacts would disagree
-    # transiently. Such partitions carry NULL n_rows until their
-    # manifest row lands.
-    manifest = Manifest(spark, f"{output_dir}/manifest")
-    done = [r for r in manifest.rows()
+    done = [r for r in Manifest(spark, f"{output_dir}/manifest").rows()
             if r["status"] == "done" and r["part_id"] != "__global__"]
     newest = latest_rows(done)
     totals = {r["part_id"]: newest.get(r["part_id"], {}).get("n_rows") for r in done}
-    parts = sorted(set(totals) | set(viol))
-    n_viol = [viol.get(p, 0) for p in parts]
-    write_table(pa.table({
-        "part_id": parts,
-        "constraint": [constraint] * len(parts),
-        "kind": ["unique_global"] * len(parts),
-        "n_rows": [totals.get(p) for p in parts],
-        "n_violations": n_viol,
-        "passed": [v == 0 for v in n_viol],
-    }, schema=_GLOBAL_RESULT_SCHEMA), f"{output_dir}/constraint_results_global")
-
-    n_violations = sum(n_viol)
-    failed_parts = [p for p, v in zip(parts, n_viol) if v]
-    table_rows = sum(n for n in totals.values() if n is not None)
-    run_id = new_run_id()
-    manifest.record(
-        run_id, "__global__", "done", started_at=t0,
-        n_rows=int(table_rows),
-        metrics={
-            "kind": "unique_global",
-            "key_cols": [key_col],
-            "mode": "index",
-            "index_table": table_name,
-            "n_violations": int(n_violations),
-            "failed_partitions": failed_parts,
-            "elapsed_sec": round(time.time() - t0, 3),
-        },
+    return _global_check(
+        _latest_per_part(spark, table_name), totals, output_dir, constraint, key_col,
+        t0, mode="index", index_table=table_name,
     )
-    return {
-        "run_id": run_id,
-        "n_violations": int(n_violations),
-        "failed_partitions": failed_parts,
-        "passed": n_violations == 0,
-        "elapsed_sec": round(time.time() - t0, 3),
-    }
+
+
+def global_uniqueness_check(
+    spark: SparkSession,
+    images_path: str,
+    output_dir: str,
+    key_col: str = "image_id",
+    cfg=None,
+) -> dict:
+    """Cross-run global uniqueness by a full-table rescan, the reference
+    for the index pass: resumed runs check uniqueness across their
+    pending partitions only, so a late partition duplicating an id an
+    earlier run processed is caught here (or by the index). The counts
+    are one (key, partition) aggregation over the whole images table,
+    whose map-side partial aggregation keeps a duplicate-heavy key from
+    concentrating on one reducer; the totals are summed from them.
+    ``cfg`` is a pipeline PipelineConfig; only its table_format is
+    read."""
+    t0 = time.time()
+    images = read_images(spark, images_path, fmt=cfg.table_format if cfg else "parquet")
+    counts = images.groupBy(
+        F.col(key_col).alias("key"), F.col("part_id").cast("string").alias("part_id")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    per_part = counts.groupBy("part_id").agg(F.sum("n").alias("n")).toArrow()
+    totals = dict(zip(per_part["part_id"].to_pylist(), per_part["n"].to_pylist()))
+    return _global_check(
+        counts, totals, output_dir, f"{key_col}_unique_global", key_col, t0,
+        input_path=images_path,
+    )

@@ -222,6 +222,23 @@ def write_partitions(table, path: str, mode: str = "overwrite") -> None:
         drop_staging()
 
 
+def read_partition(path: str, part_id, columns: list[str] | None = None):
+    """The ``columns`` of one part_id=<v> directory of the Hadoop-URI
+    table ``path``, as `write_partitions` or Spark's partitionBy writer
+    lays it out, read on the driver with pyarrow (hidden ./_-prefixed
+    files skipped); None when the directory is missing or holds no
+    rows."""
+    import pyarrow.dataset as pads
+    import pyarrow.fs as pafs
+
+    fs, root = pyarrow_fs(path)
+    d = f"{root}/{_part_dir(part_id)}"
+    if fs.get_file_info(d).type == pafs.FileType.NotFound:
+        return None
+    t = pads.dataset(d, format="parquet", filesystem=fs).to_table(columns=columns)
+    return t if t.num_rows else None
+
+
 def write_table(table, path: str) -> None:
     """Replace the Hadoop-URI directory ``path`` with ``table`` (a
     pyarrow Table) as ONE flat parquet file, from the driver: a

@@ -99,12 +99,12 @@ writes.
 Uniqueness scope note: within one run the check is global across the
 partitions being processed (cross-partition duplicates are detected and
 attributed to every partition holding the key). Across resumed runs the
-already-done partitions are not rescanned — the cross-RUN global check
-is the id index's per-bucket self-check when PipelineConfig.id_index_table
-is set (plans.id_index), else the dedicated full-table pass
-`global_uniqueness_check` below (run on demand, or per run via
-PipelineConfig.global_unique); both write kind='unique_global' rows to
-constraint_results_global.
+already-done partitions are not rescanned; the cross-RUN check is one
+engine in plans.id_index with two count sources: the id index's
+per-bucket self-check when PipelineConfig.id_index_table is set, else a
+full-table rescan (`global_uniqueness_check`). It runs per run with
+PipelineConfig.global_unique, or on demand, and writes kind='unique_global'
+rows to constraint_results_global.
 """
 
 from __future__ import annotations
@@ -135,9 +135,16 @@ from advanced_data_profile_spark.operators.stats import (
     profile,
     sketch_state_struct,
 )
+from advanced_data_profile_spark.plans.id_index import (
+    global_uniqueness_check,
+    global_uniqueness_from_index,
+    index_compact,
+    index_write,
+)
 from advanced_data_profile_spark.plans.manifest import (
     Manifest,
     new_run_id,
+    read_partition,
     write_partitions,
     write_table,
 )
@@ -387,8 +394,6 @@ def _run_pipeline(
     supersede_marker = f"{output_dir}/id_index_compact_pending"
 
     def _supersede():
-        from advanced_data_profile_spark.plans.id_index import index_compact
-
         index_compact(
             spark,
             cfg.id_index_table,
@@ -544,18 +549,13 @@ def _run_pipeline(
 
         def _counts():
             # resumed run whose baseline partition is already done: the
-            # stored baseline is the comparison target, SNAPSHOT to the
-            # driver through Arrow before write_<table> dynamic-overwrites
-            # the files a lazy plan would re-read (it is tiny). Existence
-            # is a FileSystem-API probe (output may live on hdfs:// or
-            # s3a://), not a read-and-catch: a real read error must
-            # propagate, not be mistaken for 'first run'.
-            base = None
-            if not base_pending and hadoop_path_exists(spark, path):
-                base = spark.read.parquet(path).where(
-                    F.col("grp") == cfg.baseline_part
-                ).select("column", *keys, "cnt").toArrow()
-                base = base if base.num_rows else None
+            # stored baseline is the comparison target, its part_id
+            # directory read on the driver with pyarrow (no Spark job)
+            # before write_<table> dynamic-overwrites the files a lazy
+            # plan would re-read (it is tiny). Only a missing or empty
+            # directory means 'no baseline': a real read error propagates
+            base = None if base_pending else read_partition(
+                path, cfg.baseline_part, ["column", *keys, "cnt"])
             return base, count(cols, base).toArrow()
 
         def _score(counts):
@@ -625,19 +625,21 @@ def _run_pipeline(
         )
 
     def _write_sample():
-        # ~100 seeded random rows for the report (reference ships a
+        # 100 pseudo-random rows for the report (reference ships a
         # random sample, Profiler.py:542-543 / O3) — metadata only,
-        # from ONE pending partition so the scan prunes to 1/n_parts.
-        # Written only when absent: a resumed run over a few late
-        # partitions must not REPLACE the table-wide sample. Existence
-        # is a FileSystem-API probe, not a read-and-catch — a transient
-        # read failure must never masquerade as 'not written yet'.
-        # Collected through Arrow and written as one flat file from the
-        # driver: one Spark job.
+        # from ONE pending partition so the scan prunes to 1/n_parts:
+        # the rows first in xxhash64 order over their columns, ties
+        # broken by the columns, so the sample does not depend on the
+        # scan's split layout. Written only when absent: a resumed run
+        # over a few late partitions must not REPLACE the table-wide
+        # sample. Existence is a FileSystem-API probe, not a
+        # read-and-catch — a transient read failure must never
+        # masquerade as 'not written yet'. Collected through Arrow and
+        # written as one flat file from the driver: one Spark job.
         if not hadoop_path_exists(spark, f"{output_dir}/row_sample"):
-            write_table(meta_nb.where(F.col("part_id") == pending_ids[0]).sample(
-                fraction=0.25, seed=42
-            ).limit(100).toArrow(), f"{output_dir}/row_sample")
+            one = meta_nb.where(F.col("part_id") == pending_ids[0])
+            write_table(one.orderBy(F.xxhash64(*one.columns), *one.columns).limit(100)
+                        .toArrow(), f"{output_dir}/row_sample")
 
     def _write_violations(vio: DataFrame, _) -> None:
         # every violating key (unbounded), so a Spark write: hash-
@@ -690,8 +692,6 @@ def _run_pipeline(
     # beside the result writes, and runs no aggregation of its own
     if cfg.id_index_table:
         def _index_append(_):
-            from advanced_data_profile_spark.plans.id_index import index_write
-
             # re-validation detection for the append-only precondition:
             # a PENDING partition that already has a 'done' manifest row
             # was indexed by an earlier run (only non-resume reruns /
@@ -798,92 +798,15 @@ def _run_pipeline(
         "timings": {k: round(v, 3) for k, v in timings.items()},
     }
     if cfg.global_unique:
-        def _global_unique():
-            if not cfg.id_index_table:
-                return global_uniqueness_check(spark, images_path, output_dir, cfg=cfg)
-            from advanced_data_profile_spark.plans.id_index import (
-                global_uniqueness_from_index,
-            )
-
-            return global_uniqueness_from_index(spark, cfg.id_index_table, output_dir)
-
-        legs.leg("global_uniqueness", _global_unique)
+        if cfg.id_index_table:
+            legs.leg("global_uniqueness", lambda: global_uniqueness_from_index(
+                spark, cfg.id_index_table, output_dir))
+        else:
+            legs.leg("global_uniqueness", lambda: global_uniqueness_check(
+                spark, images_path, output_dir, cfg=cfg))
         summary["global_uniqueness"] = legs.result("global_uniqueness")
     summary["legs"] = legs.timeline()
     return summary
-
-
-def global_uniqueness_check(
-    spark: SparkSession,
-    images_path: str,
-    output_dir: str,
-    key_cols: tuple = ("image_id",),
-    cfg: PipelineConfig | None = None,
-) -> dict:
-    """Dedicated CROSS-RUN global uniqueness pass.
-
-    The incremental pipeline checks uniqueness globally across the
-    partitions of ONE run; resumed runs do not rescan already-done
-    partitions, so a late partition duplicating an id that an earlier
-    run processed is invisible to the incremental check (documented at
-    the top of this module). This job closes that gap: one full-table
-    scan regardless of the manifest — the same two-stage
-    aggregation (constraints.evaluate), so a duplicate-heavy key still
-    never concentrates on one reducer — emitting kind='unique_global'
-    rows attributed to every partition holding a duplicated key.
-
-    Results fully OVERWRITE {output_dir}/constraint_results_global and
-    violations_global (a global pass supersedes the previous one —
-    never dynamic-partition-merged with incremental results, which
-    would clobber per-run rows). Lineage: one manifest row with
-    part_id='__global__'. Run it on demand or per run via
-    PipelineConfig.global_unique."""
-    cfg = cfg or PipelineConfig()
-    t0 = time.time()
-    images = read_images(spark, images_path, fmt=cfg.table_format)
-    checks = [C.unique(f"{c}_unique_global", c) for c in key_cols]
-    # the key counts evaluate persists are released when the pass ends,
-    # so a later pass over rewritten partitions counts the new rows
-    cached: list[DataFrame] = []
-    try:
-        results, violations = C.evaluate(
-            images, checks, part_col="part_id",
-            sample_violations=cfg.sample_violations, cached=cached,
-        )
-        # tiny (partitions x key_cols): collected, written from the driver
-        res = results.withColumn("kind", F.lit("unique_global")).toArrow()
-        write_table(res, f"{output_dir}/constraint_results_global")
-        violations.coalesce(1).write.mode("overwrite").parquet(
-            f"{output_dir}/violations_global"
-        )
-    finally:
-        for d in cached:
-            d.unpersist()
-    res_rows = res.to_pylist()
-    n_violations = sum(r["n_violations"] for r in res_rows)
-    failed_parts = sorted({r["part_id"] for r in res_rows if not r["passed"]})
-    run_id = new_run_id()
-    first = checks[0].name
-    table_rows = sum(r["n_rows"] for r in res_rows if r["constraint"] == first)
-    Manifest(spark, f"{output_dir}/manifest").record(
-        run_id, "__global__", "done", started_at=t0,
-        n_rows=int(table_rows),
-        metrics={
-            "kind": "unique_global",
-            "key_cols": list(key_cols),
-            "n_violations": int(n_violations),
-            "failed_partitions": failed_parts,
-            "elapsed_sec": round(time.time() - t0, 3),
-        },
-        input_path=images_path,
-    )
-    return {
-        "run_id": run_id,
-        "n_violations": int(n_violations),
-        "failed_partitions": failed_parts,
-        "passed": n_violations == 0,
-        "elapsed_sec": round(time.time() - t0, 3),
-    }
 
 
 def sketch_drift_between_runs(

@@ -6,16 +6,20 @@ The result tables of a two-run resume over a small fixture are pinned to
 values recorded before the chain was rebuilt on one count relation
 (`goldens/unique_chain_3x12.json`). The fixture plants within- and
 cross-partition duplicate ids, a duplicated NULL image_id and NULL and
-negative phash values. Also: a crash between the id-index append and the
-manifest commit, retried with resume=True, reports no false duplicates;
-the full-rescan global pass releases what it persists."""
+negative phash values. The full-rescan global pass over the same table
+writes the same global rows, in the same parquet schema. Also: a crash
+between the id-index append and the manifest commit, retried with
+resume=True, reports no false duplicates; the full-rescan global pass
+releases what it persists."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,12 +110,34 @@ def chain(spark, fixture_dir):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+@pytest.fixture(scope="module")
+def full_pass(spark, fixture_dir):
+    """The full-rescan global pass over all three partitions."""
+    out = f"{fixture_dir}/full_out"
+    global_uniqueness_check(spark, f"{fixture_dir}/imgs", out)
+    return out
+
+
 @pytest.mark.parametrize("name", ["constraint_results", "violations", "id_index",
                                   "constraint_results_global", "violations_global"])
 def test_tables_equal_the_recorded_values(spark, chain, golden, name):
     out, table, s1, s2 = chain
     assert (s1["partitions"], s2["partitions"]) == (2, 1)
     assert chain_tables(spark, out, table)[name] == golden[name]
+
+
+@pytest.mark.parametrize("name", ["constraint_results_global", "violations_global"])
+def test_full_rescan_pass_equals_the_recorded_values(spark, full_pass, golden, name):
+    cols = RESULT_COLUMNS if name == "constraint_results_global" else VIOLATION_COLUMNS
+    got = spark.read.parquet(f"{full_pass}/{name}").select(*cols).collect()
+    assert sorted((list(r) for r in got), key=repr) == golden[name]
+
+
+def test_both_global_passes_store_one_result_schema(chain, full_pass):
+    def schema(out):
+        return pq.read_schema(glob.glob(f"{out}/constraint_results_global/*.parquet")[0])
+
+    assert schema(chain[0]) == schema(full_pass)
 
 
 def test_index_append_runs_beside_the_writes_and_before_the_commit(chain):

@@ -421,3 +421,61 @@ def test_small_hive_input_decodes_without_the_jvm_scan(spark, tmp_path, monkeypa
             (p, "dims_match_payload"): 0,
         })
     assert got == expect
+
+
+def test_row_sample_does_not_follow_the_split_layout(spark, tmp_path, monkeypatch):
+    """row_sample holds the same rows whether its partition's one file
+    is scanned as 1 split or as 8: the pipeline pins its metadata scans
+    at minPartitionNum=1, and here that pin becomes 1 or 8, with a
+    64 KB open cost so the 1.3 MB file splits."""
+    from advanced_data_profile_spark.plans.pipeline import MIN_PARTS_CONF
+    from advanced_data_profile_spark.sources.images import generate_images, write_images
+
+    imgs = str(tmp_path / "imgs")
+    write_images(generate_images(spark, n_parts=2, rows_per_part=300), imgs)
+    conf_type = type(spark.conf)
+    real_set = conf_type.set
+
+    def sample(min_parts: int) -> list[str]:
+        def set_conf(self, key, value):
+            pinned = (key, value) == (MIN_PARTS_CONF, "1")
+            real_set(self, key, str(min_parts) if pinned else value)
+
+        out = str(tmp_path / f"out{min_parts}")
+        with monkeypatch.context() as m:
+            m.setattr(conf_type, "set", set_conf)
+            run_pipeline(spark, imgs, out,
+                         cfg=PipelineConfig(validate_images=False, drift=False))
+        return sorted(r.image_id for r in spark.read.parquet(f"{out}/row_sample").collect())
+
+    spark.conf.set("spark.sql.files.openCostInBytes", str(64 << 10))
+    try:
+        one, eight = sample(1), sample(8)
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert one == eight
+    assert len(one) == 100
+
+
+def test_resume_without_stored_baseline_dir_skips_drift(spark, images_path, tmp_path):
+    """A resumed run whose stored histograms and category_counts lack the
+    baseline's part_id directory has no baseline to score against: its
+    manifest rows report skipped_no_baseline for both drift families."""
+    import json
+    import shutil
+
+    from advanced_data_profile_spark.plans.manifest import latest_rows
+
+    first_half, out = str(tmp_path / "imgs01"), str(tmp_path / "out")
+    spark.read.parquet(images_path).where(F.col("part_id") < 2).write.partitionBy(
+        "part_id").parquet(first_half)
+    cfg = PipelineConfig(validate_images=False)
+    assert run_pipeline(spark, first_half, out, cfg=cfg)["partitions"] == 2
+    for table in ("histograms", "category_counts"):
+        shutil.rmtree(f"{out}/{table}/part_id=0")
+    assert run_pipeline(spark, images_path, out, cfg=cfg)["partitions"] == 2
+    latest = latest_rows(Manifest(spark, f"{out}/manifest").rows())
+    for part in ("2", "3"):
+        drift = json.loads(latest[part]["metrics_json"])["drift"]
+        assert drift["skipped_no_baseline"] == ["caption_len", "h", "w"]
+        assert drift["categorical_skipped_no_baseline"] == ["fmt"]

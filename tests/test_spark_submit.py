@@ -48,7 +48,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     shutil.copy(f"{REPO}/scripts/run_validation.py", iso / "run_validation.py")
     out = str(tmp_path / "out")
 
-    def submit():
+    def submit(*extra):
         r = subprocess.run(
             [
                 _spark_submit(), "--master", "local[4]",
@@ -56,7 +56,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
                 "--conf", "spark.sql.shuffle.partitions=4",
                 "--py-files", f"{REPO}/dist/adp_spark.zip",
                 str(iso / "run_validation.py"),
-                "--images", images, "--output", out,
+                "--images", images, "--output", out, *extra,
             ],
             capture_output=True, text=True, timeout=300, cwd="/tmp",
         )
@@ -66,8 +66,12 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
                 return json.loads(line)
         raise AssertionError(f"no summary JSON in stdout: {r.stdout[-500:]}")
 
-    s1 = submit()
+    # the first submit also runs the full-rescan global uniqueness pass
+    # from the shipped zip
+    s1 = submit("--global-unique")
     assert s1["partitions"] == 2 and s1["rows"] == 200
+    assert "global_uniqueness" in s1
+    assert spark.read.parquet(f"{out}/constraint_results_global").count() == 2
     # the shipped job is resumable: a second submit over the same
     # output dir skips everything via the manifest
     s2 = submit()
